@@ -122,7 +122,7 @@ object Bench {
     var passIdx = -1 // 0-based; set by the p1/p2/p3 calls below
     def pass(keep: String => Boolean): Seq[(String, Double)] = {
       passIdx += 1
-      graft.queries.TextOps.releaseShingles()
+      Staged.releaseAll()
       Checkpoints.releaseScoped()
       // pass boundary, off the clock: a driver GC lets the ContextCleaner
       // reclaim any block whose only remaining reference was weak (the
@@ -155,8 +155,8 @@ object Bench {
             inPassAnchors(passIdx) += HostAnchor.parallel(cpus.toInt)
         }
         val m0 = MetricsTap.snapshot() // flushes the bus — off the clock
-        val b0 = graft.queries.TextOps.buildStageTotals
-        val bm0 = graft.queries.TextOps.buildMetricTotals
+        val b0 = Staged.buildStageTotals
+        val bm0 = Staged.buildMetricTotals
         val t0 = System.nanoTime()
         // a failing query must be VISIBLE, not a fast -1: its wall time is
         // fail-fast-small, so min() would otherwise make a broken suite
@@ -177,7 +177,7 @@ object Bench {
         // q35, silently moved the shingle+pair build cost between queries,
         // swinging per-query numbers 20× with no code change). The total
         // stays honest: query rows + stage rows sum to the same wall time.
-        val stageDelta = graft.queries.TextOps.buildStageTotals
+        val stageDelta = Staged.buildStageTotals
           .map { case (k, v) => k -> (v - b0.getOrElse(k, 0.0)) }
           .filter(_._2 > 1e-3)
         // ...and the build's GC/spill moves with it: the query's metric
@@ -186,7 +186,7 @@ object Bench {
         // stage: row carries its own Snap, so query_metrics and the timing
         // rows attribute the same way
         val zero = MetricsTap.Snap(0L, 0L, 0L)
-        val stageM = graft.queries.TextOps.buildMetricTotals
+        val stageM = Staged.buildMetricTotals
           .map { case (k, v) => k -> (v - bm0.getOrElse(k, zero)) }
           .filter { case (k, _) => stageDelta.contains(k) }
         val sTot = stageM.values.foldLeft(zero)((a, b) => MetricsTap.Snap(
@@ -290,7 +290,7 @@ object Bench {
     // (q35 pays these builds; q36/q81 consume the caches) — every build is
     // listed in order (warmup, pass 1, pass 2), so cross-pass degradation
     // is visible instead of last-wins hiding it
-    val stages = graft.queries.TextOps.stageTimings.toSeq.sortBy(_._1)
+    val stages = Staged.stageTimings.toSeq.sortBy(_._1)
       .map { case (k, vs) =>
         "\"" + k + "\":[" + vs.map(fmt).mkString(",") + "]" }
       .mkString("{", ",", "}")
@@ -349,7 +349,7 @@ object Bench {
     val queryRows = results.filterNot(_._1.startsWith("stage:"))
     val slow = queryRows.sortBy(-_._2).take(25).sortBy(_._1)
     println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","total_norm":${fmt(totalNorm)},"pass_valid":$passValidJson,"queries":${toJson(slow)},"sf":"${jstr(sfDir)}","n_queries":${queryRows.size}$failMark$onlyMark,"detail":"$detailFile"}""")
-    graft.queries.TextOps.releaseShingles()
+    Staged.releaseAll()
     Checkpoints.releaseScoped()
     spark.stop()
   }

@@ -29,11 +29,12 @@ import org.apache.spark.sql.{DataFrame, GraftRddBridge}
   *    round k-1 die as soon as round k is materialized, so a 64-round
   *    propagation holds at most two rounds of blocks at any instant.
   *  - Cross-query STAGED tables (the cluster-label table shared by
-  *    q81/q94/q99) are their owning cache's responsibility: plain
-  *    `.localCheckpoint()` + [[release]] from that cache's release path
-  *    (TextOps.releaseShingles), NOT releaseScoped — a bulk scoped release
-  *    between queries must never invalidate a table a later query will
-  *    read (the lineage is truncated; lost blocks cannot recompute).
+  *    q81/q94/q99) are owned by a [[Staged]] slot: plain
+  *    `.localCheckpoint()`, freed by the slot's [[release]] when it is
+  *    rebuilt or when the session driver calls [[Staged.releaseAll]], NOT
+  *    by releaseScoped — a bulk scoped release between queries must never
+  *    invalidate a table a later query will read (the lineage is
+  *    truncated; lost blocks cannot recompute).
   */
 object Checkpoints {
   // WEAK references: the registry must never be the thing keeping a

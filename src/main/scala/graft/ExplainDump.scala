@@ -43,7 +43,7 @@ object ExplainDump {
       println(s"[explain] wrote $outDir/$name$suffix.txt")
       Checkpoints.releaseScoped()
     }
-    graft.queries.TextOps.releaseShingles()
+    Staged.releaseAll()
     spark.stop()
   }
 }

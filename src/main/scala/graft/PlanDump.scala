@@ -74,7 +74,7 @@ object PlanDump {
         .linesIterator.takeWhile(_.trim.nonEmpty).mkString("\n")
       sb ++= s"\n## $name\n\n$note\n\n```\n$plan\n```\n"
     }
-    graft.queries.TextOps.releaseShingles()
+    Staged.releaseAll()
     java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
       sb.toString.getBytes("UTF-8"))
     println(s"[plandump] wrote $outFile (${headline.size} plans)")

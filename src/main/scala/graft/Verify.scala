@@ -53,7 +53,7 @@ object Verify {
       .flatMap { case (k, v) => Seq(k -> v, s"$k.parquet" -> v) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    graft.queries.TextOps.releaseShingles()
+    Staged.releaseAll()
     spark.stop()
   }
 }

@@ -226,7 +226,7 @@ object ScaleStress {
       val n = out.filter(col("n_removed") >= 9).count()
       println(s"  rows_with_preamble_cut=$n")
     }
-    graft.queries.TextOps.releaseShingles()
+    graft.Staged.releaseAll()
     t("q106 window-dedup on the plain corpus (reference)") {
       println("  rows=" + graft.SparkEntry.queries("q106_window_dedup")(spark, "/root/testdata/sf0.1").count())
     }
@@ -275,7 +275,7 @@ object ScaleStress {
     t("q112 decontam on the plain corpus (reference)") {
       println("  pairs=" + graft.SparkEntry.queries("q112_fuzzy_decontam")(spark, "/root/testdata/sf0.1").count())
     }
-    graft.queries.TextOps.releaseShingles()
+    graft.Staged.releaseAll()
 
     // Bigram-LM gate (q113): the model aggregation output is bounded by
     // |charset|² whatever the corpus size (a 10× corpus changes counts,
@@ -340,7 +340,7 @@ object ScaleStress {
     t("q128 ingest dedup on the plain corpus (reference)") {
       println("  rows=" + graft.SparkEntry.queries("q128_ingest_dedup")(spark, "/root/testdata/sf0.1").count())
     }
-    graft.queries.TextOps.releaseShingles()
+    graft.Staged.releaseAll()
 
     // Image aHash (q122) under the identical-content flood: every doc gets
     // the same leading 3 chars, so every PNG has identical dims AND content
@@ -414,7 +414,7 @@ object ScaleStress {
     t("q152 PageRank on the plain corpus (reference)") {
       println("  rows=" + graft.SparkEntry.queries("q152_pagerank")(spark, "/root/testdata/sf0.1").count())
     }
-    graft.queries.TextOps.releaseShingles()
+    graft.Staged.releaseAll()
 
     // Collocation mining (q145) on the 10× corpus: counts scale 10× but
     // CARDINALITIES don't (same vocab, same bigram domain) — the two aggs
@@ -597,7 +597,7 @@ object ScaleStress {
       // PREVIOUS drain's DrainInfo to this run, and (c) in the RocksDB A/B
       // serve the default-provider run's rows so no drain executes under
       // RocksDB at all and the provider assert crashes the harness
-      graft.streaming.StreamOps.releaseDrained()
+      graft.streaming.StreamOps.drainSlot.release()
       val rows = t(s"$q $label") {
         graft.SparkEntry.queries(q)(spark, d).count()
       }

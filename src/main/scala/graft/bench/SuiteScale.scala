@@ -286,7 +286,7 @@ object SuiteScale {
     * 24 queries, caches cold at pass start). */
   private def pass(spark: SparkSession, dir: String,
       names: Seq[String]): Map[String, Cell] = {
-    graft.queries.TextOps.releaseShingles()
+    graft.Staged.releaseAll()
     graft.Checkpoints.releaseScoped()
     System.gc()
     var sinceGc = 0
@@ -414,7 +414,7 @@ object SuiteScale {
     val failed = names.filter(n =>
       small(n).rows < 0 || base(n).rows < 0 || big(n).rows < 0)
     if (failed.nonEmpty) println(s"\nFAILED: ${failed.mkString(", ")}")
-    graft.queries.TextOps.releaseShingles()
+    graft.Staged.releaseAll()
     graft.Checkpoints.releaseScoped()
     spark.stop()
   }

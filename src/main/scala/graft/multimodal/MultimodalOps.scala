@@ -409,11 +409,23 @@ object MultimodalOps {
     * decode per (session, dir), stage-timed as ahash_blocks_build exactly
     * as before (the bench trend line keeps its meaning); the class table
     * is a plain localCheckpoint (cross-query staged — it must survive the
-    * driver's between-queries releaseScoped sweep) freed via TextOps's
-    * release lifecycle alongside the other staged tables. Lock order
-    * follows the documented one-way rule: owner lock → TextOps lock on
-    * build (timedBuild), and the release hook runs outside TextOps's
-    * lock. */
+    * driver's between-queries releaseScoped sweep) freed by its slot. */
+  private val ahashClassesSlot = graft.Staged.checkpointed("ahash_blocks_build")
+
+  private def ahashClassesCached(s: SparkSession, d: String): DataFrame =
+    ahashClassesSlot(s, d) {
+      val blocks = graft.Checkpoints.localCheckpoint(
+        aHashBlocks(mediaTable(s, d)))
+      val classes = blocks
+        .groupBy(col("b0"), col("b1"), col("b2"), col("b3"))
+        .agg(min(col("media_id")).as("rep"),
+          collect_list(col("media_id")).as("members"),
+          count(lit(1)).as("csize"))
+        .localCheckpoint() // eager — blocks is consumed here and only here
+      graft.Checkpoints.release(blocks)
+      classes
+    }
+
   /** Oracle CTE prefix ending in `blocks` = per-image 4×16-bit aHash
     * blocks replayed arithmetically (the pixel law — PNG gray is
     * lossless), shared by q122's pair oracle and q201's class oracle. */
@@ -447,39 +459,6 @@ object MultimodalOps {
                  CAST(sum(CASE WHEN k // 16 = 2 THEN bit << (k % 16) ELSE 0 END) AS BIGINT) AS b2,
                  CAST(sum(CASE WHEN k // 16 = 3 THEN bit << (k % 16) ELSE 0 END) AS BIGINT) AS b3
           FROM bits GROUP BY media_id)"""
-
-  private var ahashClassesCache: Option[(SparkSession, String, DataFrame)] =
-    None
-  graft.queries.TextOps.onRelease(() => releaseAhashClasses())
-  private[graft] def releaseAhashClasses(): Unit = synchronized {
-    ahashClassesCache.foreach(p => graft.Checkpoints.release(p._3))
-    ahashClassesCache = None
-  }
-
-  private def ahashClassesCached(s: SparkSession, d: String): DataFrame =
-    synchronized {
-      ahashClassesCache match {
-        case Some((sess, dir, df)) if (sess eq s) && dir == d => df
-        case prev => graft.queries.TextOps.timedBuild("ahash_blocks_build") {
-          prev.foreach(p => graft.Checkpoints.release(p._3))
-          // slot cleared BEFORE the build: a failed build must leave None
-          // (next consumer rebuilds), never a stale entry pointing at the
-          // just-released frame
-          ahashClassesCache = None
-          val blocks = graft.Checkpoints.localCheckpoint(
-            aHashBlocks(mediaTable(s, d)))
-          val classes = blocks
-            .groupBy(col("b0"), col("b1"), col("b2"), col("b3"))
-            .agg(min(col("media_id")).as("rep"),
-              collect_list(col("media_id")).as("members"),
-              count(lit(1)).as("csize"))
-            .localCheckpoint() // eager — blocks is consumed here and only here
-          graft.Checkpoints.release(blocks)
-          ahashClassesCache = Some((s, d, classes))
-          classes
-        }
-      }
-    }
 
   val qs: Map[String, Q] = Map(
 

@@ -71,12 +71,6 @@ object Operators {
         valueCols.map(c => col("__rvf").getField(c).as(s"asof_$c")): _*)
   }
 
-  /** Bounded range join: equi key carries the shuffle, the time band stays a
-    * post-join filter — never a cartesian (PlanSpec-style guarantee). */
-  def rangeJoin(left: DataFrame, right: DataFrame, key: Column,
-      band: Column): DataFrame =
-    left.join(right, key && band)
-
   /** First-wins keyed dedup over an explicit arrival order (deterministic,
     * unlike dropDuplicates — SURVEY §7.4.2). */
   def dedupFirstWins(df: DataFrame, keys: Seq[String], orderBy: Seq[Column]): DataFrame = {
@@ -92,147 +86,6 @@ object Operators {
     df.withColumn("__rank", row_number().over(w))
       .filter(col("__rank") <= k)
       .withColumnRenamed("__rank", "rank")
-  }
-
-  /** Ordered insert into a flat [score, item] top-k buffer kept (score
-    * desc, item asc), length <= 2k. Shared by the partition pre-reduce and
-    * the merge Aggregator in [[topKByScore]] — one ordering definition, so
-    * the two levels cannot disagree on the tie-break. */
-  private def topKInsert(b: Array[Long], score: Long, item: Long,
-      k: Int): Array[Long] = {
-    val n = b.length / 2
-    var i = 0
-    while (i < n &&
-      (b(2 * i) > score || (b(2 * i) == score && b(2 * i + 1) < item)))
-      i += 1
-    if (i >= k) b // worse than every kept entry of a full buffer
-    else {
-      val m = math.min(n + 1, k)
-      val out = new Array[Long](2 * m)
-      System.arraycopy(b, 0, out, 0, 2 * i)
-      out(2 * i) = score
-      out(2 * i + 1) = item
-      val tail = math.min(n - i, m - i - 1)
-      if (tail > 0) System.arraycopy(b, 2 * i, out, 2 * (i + 1), 2 * tail)
-      out
-    }
-  }
-
-  /** BOUNDED-STATE grouped top-k over (group, item, score) rows, ordered
-    * (score desc, item asc), in two levels:
-    *
-    *  1. a partition-local pre-reduce (mapPartitions over a group -> k-heap
-    *     hash map, state <= k entries per group in the task) that shrinks
-    *     each partition to at most k rows per group it saw, and
-    *  2. an ObjectHashAggregate merge over the pre-reduced stream
-    *     (<= k * |groups| * partitions rows), whose buffer holds at most
-    *     k entries per group.
-    *
-    * Input rows must be distinct per (group, item), so a partition's local
-    * top-k is a mergeable sketch over its disjoint slice — level 2's merge
-    * is exact. The pre-reduce is load-bearing, not an optimization:
-    * ObjectHashAggregateExec falls back to SORT-BASED aggregation after
-    * `spark.sql.objectHashAggregate.sortBased.fallbackThreshold` (128)
-    * distinct keys per task, so on a corpus-scale stream the "bounded
-    * k-heap agg" silently became a full partition sort CO-RESIDENT with
-    * the upstream pair-count hash map — measured OOM at 30x data / 8 g
-    * heap on q199's pre-threshold pair spectrum where the parent q96
-    * completes, and at 100x the fallback's pointer arrays alone would
-    * exceed the heap. After the pre-reduce the fallback sort (if it still
-    * trips) touches <= k rows per group, not the spectrum.
-    *
-    * [[topKPerGroup]]'s window form sorts EVERY row of every group, so its
-    * per-task memory and sort work are unbounded in the hottest key;
-    * measured on q199's 30x pair spectrum the window form cost 522 s (and
-    * OOMed a 250 MB/thread heap) where this form's state is k entries per
-    * (task, group) by construction. Use the window form when extra columns
-    * must ride along or ordering is ad-hoc; use this on
-    * (long, long, long)-shaped streams at scale.
-    *
-    * Cost profile (round-16 measurement on q199's 10× spectrum): the
-    * Dataset boundary deserializes a tuple per input row and the map
-    * boxes keys — 2,038 CPU-s with 339 s GC over 158M rows, and
-    * GC-pressure wall variance of 68-148 s run-to-run. When the input
-    * can be read TWICE (it is staged, or exchange reuse covers it),
-    * the two-pass codegen histogram-threshold form is strictly better
-    * (q199 uses it since round 16); this single-pass form is for inputs
-    * too expensive to materialize or re-derive.
-    *
-    * Input rows must be distinct per (group, item) — aggregate first (a
-    * duplicate would occupy two of the k slots, and would also break the
-    * disjoint-slices premise of the pre-reduce). Returns (group, item,
-    * score, rank) with rank 1..k, ties broken by item asc — identical
-    * output to topKPerGroup under (score desc, item asc).
-    *
-    * LIBRARY-ONLY API (judge r16 #7, resolved round 17): no registry query
-    * consumes this operator, deliberately. Its contract — ONE pass, input
-    * unaffordable to materialize or re-read — has no honest instance in
-    * the current registry: every grouped-top-k input there is either
-    * staged (q199's pair slot) or covered by exchange reuse, and on a
-    * re-readable input the two-pass codegen histogram-threshold form is
-    * strictly better by measurement (this operator's Dataset boundary
-    * cost 2,038 CPU-s / 339 s GC over q199's 10x spectrum; see STRESS.md
-    * round 16). Registering a synthetic consumer would grade a shape the
-    * engine would never choose. The operator stays as library surface for
-    * the single-pass contexts a deployment does hit (a foreachBatch drain
-    * whose micro-batch cannot be replayed, an expensive un-staged
-    * intermediate); its executable contract is OperatorsSpec's
-    * equivalence and bounded-state tests. */
-  def topKByScore(ds: org.apache.spark.sql.Dataset[(Long, Long, Long)],
-      k: Int): DataFrame = {
-    require(k >= 1, s"topKByScore: k must be >= 1, got $k")
-    import ds.sparkSession.implicits._
-    // level 1: partition-local top-k. Consumes the upstream iterator fully
-    // (pipelined with whatever produces it), holding only the group map —
-    // k longs per group seen by this task.
-    val pre = ds.mapPartitions { it =>
-      val m = new java.util.HashMap[Long, Array[Long]]()
-      it.foreach { case (g, item, score) =>
-        m.put(g, topKInsert(
-          m.getOrDefault(g, Array.emptyLongArray), score, item, k))
-      }
-      val entries = m.entrySet().iterator()
-      new Iterator[(Long, Long, Long)] {
-        private var cur: (Long, Array[Long]) = null
-        private var i = 0
-        def hasNext: Boolean = {
-          while ((cur == null || i >= cur._2.length / 2) && entries.hasNext) {
-            val e = entries.next(); cur = (e.getKey, e.getValue); i = 0
-          }
-          cur != null && i < cur._2.length / 2
-        }
-        def next(): (Long, Long, Long) = {
-          val b = cur._2; val r = (cur._1, b(2 * i + 1), b(2 * i)); i += 1; r
-        }
-      }
-    }
-    // level 2: exact merge of the per-partition sketches
-    val agg = new org.apache.spark.sql.expressions.Aggregator[
-        (Long, Long, Long), Array[Long], Array[Long]] {
-      // buffer: flat [score, item] pairs kept ordered (score desc, item
-      // asc), length <= 2k — primitive longs so the per-group state is a
-      // handful of machine words, not boxed tuples
-      def zero: Array[Long] = Array.emptyLongArray
-      private def insert(b: Array[Long], score: Long, item: Long): Array[Long] =
-        topKInsert(b, score, item, k)
-      def reduce(b: Array[Long], r: (Long, Long, Long)): Array[Long] =
-        insert(b, r._3, r._2)
-      def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
-        var out = a
-        var i = 0
-        while (i < b.length) { out = insert(out, b(i), b(i + 1)); i += 2 }
-        out
-      }
-      def finish(b: Array[Long]): Array[Long] = b
-      def bufferEncoder = implicitly[org.apache.spark.sql.Encoder[Array[Long]]]
-      def outputEncoder = implicitly[org.apache.spark.sql.Encoder[Array[Long]]]
-    }
-    pre.groupByKey(_._1).agg(agg.toColumn.name("top"))
-      .flatMap { case (g, top) =>
-        (0 until top.length / 2).iterator.map(i =>
-          (g, top(2 * i + 1), top(2 * i), (i + 1).toLong))
-      }
-      .toDF("group", "item", "score", "rank")
   }
 
   /** Salted aggregation for skewed keys: spread each hot key over `buckets`

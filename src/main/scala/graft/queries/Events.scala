@@ -418,12 +418,11 @@ object Events {
     // histogram-threshold tail (see the run body). Two dead ends are
     // pinned by PlanSpec: the per-user full-spectrum window (sorts
     // unthresholded pairs ≫ the ≥5-filtered list — 522 s at 30× and an
-    // executor OOM at the default probe heap, r15) and the
-    // Operators.topKByScore object-aggregate form (allocation churn on
-    // every spectrum row: 2,038 CPU-s with 339 s GC in one 10× stage and
-    // 68-148 s wall variance, r16 — the operator itself remains for
-    // single-pass contexts where a second pass over the input is
-    // unaffordable). Output is ≤ 3·|users| rows — linear in users where
+    // executor OOM at the default probe heap, r15) and an object-aggregate
+    // k-heap form (allocation churn on every spectrum row: 2,038 CPU-s
+    // with 339 s GC in one 10× stage and 68-148 s wall variance, r16 — the
+    // operator was deleted once it had no consumer left). Output is
+    // ≤ 3·|users| rows — linear in users where
     // q96's pair list measured 973× at 30× data. The enumeration WORK
     // still follows q96's law (exact counts must read every co-occurrence;
     // the salt spreads it), but what leaves the kernel — the merge
@@ -448,8 +447,8 @@ object Events {
           struct(col("u2").as("user_id"), col("u1").as("partner"),
             col("shared_buckets")))))
         // Exact top-3 per user in TWO CODEGEN PASSES over the (staged)
-        // pair table, instead of one object-aggregate pass
-        // (Operators.topKByScore — q199's first form). Measured at 10×:
+        // pair table, instead of one object-aggregate k-heap pass (q199's
+        // first form, since deleted). Measured at 10×:
         // the object path deserializes 158M tuples and boxes every map
         // key — 2,038 CPU-seconds with 339 s of GC in ONE stage, and the
         // GC pressure made the row's wall swing 68-148 s run-to-run.
@@ -1008,45 +1007,34 @@ object Events {
     * enumeration and nothing quadratic is ever materialized — the 100 TB
     * posture, where the serving deployment runs ONE consumer anyway. */
   private[graft] val StagedPairSpectrumBound = 1500L * 1000 * 1000 // 1.5B matches
-  // (session, dir, spectrum-at-build, pair table, OWNED bucket checkpoint):
-  // the spectrum rides along so a warm hit can re-apply the caller's bound,
-  // and the bucket checkpoint rides along because the persisted pair
-  // table's recompute lineage runs through it — it must stay alive (and
-  // OUT of the query-scoped registry that Bench/Verify sweep between
-  // queries) for as long as the slot is warm (advice r17, medium)
-  private var pairCache: Option[(org.apache.spark.sql.SparkSession, String,
-    Long, org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)] =
-    None
-  // (session, dir) -> distinct active users, memoized by the same build:
-  // q199's threshold table is ≤ one row per user BY CONSTRUCTION, so this
-  // scalar is the provable size bound its broadcast decision needs
-  private var userCountCache: Option[(org.apache.spark.sql.SparkSession,
-    String, Long)] = None
-  graft.queries.TextOps.onRelease(() => releaseStagedCooccur())
-  private[graft] def releaseStagedCooccur(): Unit = synchronized {
-    pairCache.foreach { p =>
+  /** What the cooccur slot stages: the persisted pair table; the bucket
+    * checkpoint its recompute lineage runs through, OWNED by the slot and
+    * kept out of the query-scoped registry Bench/Verify sweep between
+    * queries (advice r17, medium); the spectrum it was staged under, so a
+    * warm hit can re-apply each caller's bound; and the distinct active
+    * users — q199's threshold table is ≤ one row per user BY
+    * CONSTRUCTION, so this scalar is the provable size bound its
+    * broadcast decision needs. */
+  private[graft] final case class CooccurStage(
+      pairs: org.apache.spark.sql.DataFrame,
+      buckets: org.apache.spark.sql.DataFrame, spectrum: Long, users: Long)
+  private[graft] val cooccurSlot = graft.Staged[CooccurStage](
+    "cooccur_pairs_build", { c =>
       // order matters: the cached pair table dies FIRST (after this no
       // plan can demand a recompute through the bucket lineage), then the
       // owned bucket checkpoint's blocks release at block level
-      p._4.unpersist(blocking = false)
-      graft.Checkpoints.release(p._5)
-    }
-    pairCache = None
-    userCountCache = None
-  }
+      c.pairs.unpersist(blocking = false)
+      graft.Checkpoints.release(c.buckets)
+    })
 
-  /** Distinct users active in any (event_type, hour) bucket — computed on
-    * the bucket table the pair build already checkpoints (one narrow agg),
-    * memoized per (session, dir). */
+  /** Distinct users active in any (event_type, hour) bucket — memoized by
+    * the staged pair build. On the streamed arm nothing is staged, so it
+    * is counted over the events directly (the same user set: every event
+    * lands in exactly one bucket). */
   private[graft] def cooccurUserCount(s: org.apache.spark.sql.SparkSession,
-      d: String): Long = synchronized {
-    userCountCache match {
-      case Some((sess, dir, n)) if (sess eq s) && dir == d => n
-      case _ =>
-        sys.error("cooccurUserCount before cooccurPairCounts: the count is " +
-          "a by-product of the pair build; call cooccurPairCounts first")
-    }
-  }
+      d: String): Long =
+    cooccurSlot.peek(s, d).map(_.users).getOrElse(
+      Tables.events(s, d).agg(count_distinct(col("user_id"))).head().getLong(0))
 
   /** Match-stream → (u1, u2) → shared_buckets aggregation, its shuffle
     * width derived from the gate's EXACT spectrum scalar. At the fixed
@@ -1083,62 +1071,50 @@ object Events {
   private[graft] def cooccurPairCounts(s: org.apache.spark.sql.SparkSession,
       d: String,
       bound: Long = StagedPairSpectrumBound): org.apache.spark.sql.DataFrame =
-    synchronized {
-      def streamedEnum(spectrum: Long): org.apache.spark.sql.DataFrame = {
+    graft.Staged.synchronized {
+      def streamed(bucketed: org.apache.spark.sql.DataFrame,
+          spectrum: Long): org.apache.spark.sql.DataFrame = {
         // query-scoped lifecycle: the bucket checkpoint is consumed within
         // the calling query and swept by releaseScoped between queries
-        val bucketed = cooccurBuckets(s, d)
         graft.Checkpoints.registerScoped(bucketed)
         pairCountsOver(s, bucketed, spectrum)
       }
-      pairCache match {
-        case Some((sess, dir, spectrum, df, _))
-            if (sess eq s) && dir == d && spectrum <= bound => df
-        case Some((sess, dir, spectrum, _, _)) if (sess eq s) && dir == d =>
+      cooccurSlot.peek(s, d) match {
+        case Some(c) if c.spectrum <= bound => c.pairs
+        case Some(c) =>
           // warm slot, but the SPECTRUM EXCEEDS THIS CALLER'S BOUND: the
           // gate applies per call, not only on a cold slot (advice r17) —
           // serve a fresh streamed enumeration (width-scaled by the slot's
           // measured spectrum) and leave the slot (staged under its own
           // bound decision) warm for the callers it admits
-          streamedEnum(spectrum)
-        case prev =>
-          prev.foreach { p =>
-            p._4.unpersist(blocking = false)
-            graft.Checkpoints.release(p._5)
-          }
-          // slot cleared BEFORE the build: a failed build must leave None
-          // (next consumer rebuilds), never a stale entry (review r15)
-          pairCache = None
+          streamed(cooccurBuckets(s, d), c.spectrum)
+        case None =>
+          cooccurSlot.release() // a stale (session, dir) entry dies first
           val bucketed = cooccurBuckets(s, d)
           val spectrum = bucketed
             .groupBy(col("event_type"), col("h"))
             .agg(count(lit(1)).as("c"))
             .agg(coalesce(sum(expr("c * (c - 1) DIV 2")), lit(0L)))
             .head().getLong(0)
-          val pc = pairCountsOver(s, bucketed, spectrum)
-          userCountCache = Some((s, d, bucketed
-            .agg(count_distinct(col("user_id"))).head().getLong(0)))
-          if (spectrum > bound) {
-            // stream, don't stage — and hand the bucket checkpoint to the
-            // between-queries sweep, since no slot will own it
-            graft.Checkpoints.registerScoped(bucketed)
-            pc
-          } else graft.queries.TextOps.timedBuild("cooccur_pairs_build") {
+          // stream, don't stage — the bucket checkpoint goes to the
+          // between-queries sweep, since no slot will own it
+          if (spectrum > bound) streamed(bucketed, spectrum)
+          else cooccurSlot(s, d) {
             // CROSS-QUERY staged slot: persist() keeps the measured 30×
             // memory profile (compressed columnar; a localCheckpoint of
             // the same 700M-row table stores raw row blocks and OOMed the
             // 8g probe heap where persist completes). The lineage hazard
             // (advice r17, medium) is severed on the OTHER side: the
-            // bucket checkpoint stays PLAIN — never in the query-scoped
-            // registry Bench/Verify sweep between queries — and is owned
-            // by this slot (released in releaseStagedCooccur, after the
-            // cache), so a cached-partition loss recomputes through LIVE
-            // checkpoint blocks instead of failing unrecoverably.
-            val cached = pc.persist()
-            cached.count() // eager: concurrent AQE stages would race a cold cache
-            pairCache = Some((s, d, spectrum, cached, bucketed))
-            cached
-          }
+            // bucket checkpoint stays PLAIN and is owned by the slot
+            // (released after the cache), so a cached-partition loss
+            // recomputes through LIVE checkpoint blocks instead of failing
+            // unrecoverably.
+            val users =
+              bucketed.agg(count_distinct(col("user_id"))).head().getLong(0)
+            CooccurStage(
+              graft.Staged.persistNow(pairCountsOver(s, bucketed, spectrum)),
+              bucketed, spectrum, users)
+          }.pairs
       }
     }
 

@@ -58,27 +58,13 @@ object Mining {
     * once per (corpus, query-set) and every serving/audit view reads it.
     * r18 (guide §2.4 "remove shuffles outright"): before this slot each
     * consumer re-ran the corpus tokenize + vocabulary explode + two aggs,
-    * so one bench pass paid the scoring scan three times. Same single-slot
-    * (session, dir) policy, stage-timed, released with the other staged
-    * tables via the TextOps lifecycle. Output is |docs with ≥1 query-term
-    * hit| narrow rows — bounded by |docs|, no text column persists. */
-  private var bm25Cache: Option[(SparkSession, String, DataFrame)] = None
+    * so one bench pass paid the scoring scan three times. A staged slot
+    * (graft.Staged). Output is |docs with ≥1 query-term hit| narrow rows —
+    * bounded by |docs|, no text column persists. */
+  private val bm25Slot = graft.Staged.cached("bm25_scores_build")
 
   private def bm25ScoresCached(s: SparkSession, d: String): DataFrame =
-    synchronized {
-      bm25Cache match {
-        case Some((sess, dir, df)) if (sess eq s) && dir == d => df
-        case prev => graft.queries.TextOps.timedBuild("bm25_scores_build") {
-          prev.foreach(_._3.unpersist(blocking = false))
-          // slot cleared BEFORE the build: a failed build must leave None
-          bm25Cache = None
-          val sc = bm25Scores(s, d).persist()
-          sc.count() // eager: concurrent AQE stages would race a cold cache
-          bm25Cache = Some((s, d, sc))
-          sc
-        }
-      }
-    }
+    bm25Slot(s, d)(graft.Staged.persistNow(bm25Scores(s, d)))
 
   /** Vocabulary-parameterized form — the oracle queries pin the 3-term
     * vocabulary above; ScaleStress drives THIS with a 10× vocabulary to
@@ -149,42 +135,15 @@ object Mining {
   // its edges — one basket enumeration + one map-side-combined agg, two
   // consumers (the q35/q81 pairs-table pattern; in a real pipeline you
   // materialize the supported-pair table once and derive both views).
-  // Single-slot (session, dir) cache, stage-timed as
-  // stage:basket_pairs_build so Bench attributes the build to its own row,
-  // and registered with TextOps's release lifecycle so the Bench/Verify
-  // sweeps free it with the other staged tables.
-  private var supportCache: Option[(SparkSession, String, DataFrame)] = None
-  graft.queries.TextOps.onRelease(() => releaseStagedPairs())
-  private[graft] def releaseStagedPairs(): Unit = synchronized {
-    supportCache.foreach(_._3.unpersist(blocking = false))
-    supportCache = None
-    bm25Cache.foreach(_._3.unpersist(blocking = false))
-    bm25Cache = None
-    denseCache.foreach(_._3.unpersist(blocking = false))
-    denseCache = None
-  }
+  // Staged as stage:basket_pairs_build, so Bench attributes the build to
+  // its own row.
+  private val supportSlot = graft.Staged.cached("basket_pairs_build")
 
   private def supportedPairs(s: SparkSession, d: String): DataFrame =
-    synchronized {
-      supportCache match {
-        case Some((sess, dir, df)) if (sess eq s) && dir == d => df
-        case prev => graft.queries.TextOps.timedBuild("basket_pairs_build") {
-          prev.foreach(_._3.unpersist(blocking = false))
-          // slot cleared BEFORE the build: a failed build must leave None
-          // (next consumer rebuilds), never a stale entry pointing at the
-          // just-unpersisted frame (review r15)
-          supportCache = None
-          val sp = orderPairs(s, d)
-            .groupBy(col("p1"), col("p2"))
-            .agg(count(lit(1)).as("support"))
-            .filter(col("support") >= 2)
-            .persist()
-          sp.count() // eager: concurrent AQE stages would race a cold cache
-          supportCache = Some((s, d, sp))
-          sp
-        }
-      }
-    }
+    supportSlot(s, d)(graft.Staged.persistNow(orderPairs(s, d)
+      .groupBy(col("p1"), col("p2"))
+      .agg(count(lit(1)).as("support"))
+      .filter(col("support") >= 2)))
 
   private def orderPairs(s: SparkSession, d: String): DataFrame =
     Tables.lineitem(s, d)
@@ -227,26 +186,13 @@ object Mining {
     * NaN largest, NULL last — so an unfiltered zero row would silently
     * split the top-20 sets across engines. */
   private def denseTop20(s: SparkSession, d: String): DataFrame =
-    synchronized {
-      denseCache match {
-        case Some((sess, dir, df)) if (sess eq s) && dir == d => df
-        case prev => graft.queries.TextOps.timedBuild("dense_top20_build") {
-          prev.foreach(_._3.unpersist(blocking = false))
-          denseCache = None
-          val t = denseTop20Plan(s, d).persist()
-          t.count() // eager: concurrent AQE stages would race a cold cache
-          denseCache = Some((s, d, t))
-          t
-        }
-      }
-    }
+    denseSlot(s, d)(graft.Staged.persistNow(denseTop20Plan(s, d)))
 
-  /** r18: the dense ranker's 20-row output is staged ([[denseCache]]) —
-    * q177 and q196 each consumed it, so one bench pass paid the corpus
-    * cosine scan twice. The staged table is 20 rows of (doc_id, rank);
-    * the corpus never shuffles in the build (broadcast query vector,
-    * TakeOrdered(20) egress). */
-  private var denseCache: Option[(SparkSession, String, DataFrame)] = None
+  /** r18: the dense ranker's 20-row output is staged — q177 and q196 each
+    * consumed it, so one bench pass paid the corpus cosine scan twice. The
+    * staged table is 20 rows of (doc_id, rank); the corpus never shuffles
+    * in the build (broadcast query vector, TakeOrdered(20) egress). */
+  private val denseSlot = graft.Staged.cached("dense_top20_build")
 
   private def denseTop20Plan(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window

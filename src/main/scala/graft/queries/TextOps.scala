@@ -98,60 +98,35 @@ object TextOps {
   // The per-doc window table is shared by the substring-dedup family
   // (q106 per-doc stats, q107 source matrix, q110 span removal) — the
   // tokenize+hash kernel is the expensive narrow stage, so it materializes
-  // once per (session, dir, hash-mode) under the same single-slot policy as
-  // the shingle caches (mode in the key: a test flipping md5→xxh64 must
-  // rebuild, not reuse). One row per doc: (doc_id, source, n_windows incl.
-  // repeats, POSITIONAL wins — index = 0-based window start, q110's span
-  // coordinates — and distinct dwins). Keeping wins roughly doubles the
-  // cached width but saves q110 a full second tokenize+hash pass over the
-  // corpus (measured 5.1 s → expected ~1.5 s at sf0.1); at 100 TB this
-  // cache is the staged window table either way.
-  private var windowCache: Option[(SparkSession, String, String, DataFrame)] = None
+  // once per (session, dir, hash-mode) in a staged slot (mode is the
+  // variant: a test flipping md5→xxh64 must rebuild, not reuse). One row
+  // per doc: (doc_id, source, n_windows incl. repeats, POSITIONAL wins —
+  // index = 0-based window start, q110's span coordinates — and distinct
+  // dwins). Keeping wins roughly doubles the cached width but saves q110 a
+  // full second tokenize+hash pass over the corpus (measured 5.1 s →
+  // expected ~1.5 s at sf0.1); at 100 TB this cache is the staged window
+  // table either way.
+  private val windowSlot = graft.Staged.cached("window_arrays_build")
 
-  private def docWindowArrays(s: SparkSession, d: String): DataFrame = synchronized {
-    val mode = windowHashMode
-    windowCache match {
-      case Some((sess, dir, m, df)) if (sess eq s) && dir == d && m == mode => df
-      case prev => timedStage("window_arrays_build") {
-        prev.foreach(_._4.unpersist(blocking = false))
-        val wa = docWindows(s, d)
-          .select(col("doc_id"), col("source"),
-            size(col("wins")).cast("long").as("n_windows"),
-            col("wins"), array_distinct(col("wins")).as("dwins"))
-          .persist()
-        wa.count()
-        windowCache = Some((s, d, mode, wa))
-        wa
-      }
-    }
-  }
+  private def docWindowArrays(s: SparkSession, d: String): DataFrame =
+    windowSlot(s, d, windowHashMode)(graft.Staged.persistNow(
+      docWindows(s, d).select(col("doc_id"), col("source"),
+        size(col("wins")).cast("long").as("n_windows"),
+        col("wins"), array_distinct(col("wins")).as("dwins"))))
 
   /** Corpus distinct-window document frequency (w, n_docs) — the dominant
     * shuffle of the exact-substring family, shared by q106 (dup stats),
     * q110 (span removal) and q121 (novelty). Before this slot each of the
     * three rebuilt the identical corpus-scale aggregation; a real pipeline
     * materializes the frequency table once next to the window cache it
-    * derives from. Same single-slot (session, dir) policy + stage row as
-    * every other staged intermediate (keyed on the window-hash mode via
-    * the underlying cache rebuild). */
-  private var windowFreqCache: Option[(SparkSession, String, String, DataFrame)] = None
+    * derives from. Keyed on the window-hash mode like the window slot. */
+  private val windowFreqSlot = graft.Staged.cached("window_freq_build")
 
-  private def windowFreq(s: SparkSession, d: String): DataFrame = synchronized {
-    val mode = windowHashMode
-    windowFreqCache match {
-      case Some((sess, dir, m, df)) if (sess eq s) && dir == d && m == mode => df
-      case prev => timedStage("window_freq_build") {
-        prev.foreach(_._4.unpersist(blocking = false))
-        val f = docWindowArrays(s, d)
-          .select(col("doc_id"), explode(col("dwins")).as("w"))
-          .groupBy(col("w")).agg(count(lit(1)).as("n_docs"))
-          .persist()
-        f.count()
-        windowFreqCache = Some((s, d, mode, f))
-        f
-      }
-    }
-  }
+  private def windowFreq(s: SparkSession, d: String): DataFrame =
+    windowFreqSlot(s, d, windowHashMode)(graft.Staged.persistNow(
+      docWindowArrays(s, d)
+        .select(col("doc_id"), explode(col("dwins")).as("w"))
+        .groupBy(col("w")).agg(count(lit(1)).as("n_docs"))))
 
   // ---- shared Jaccard-pair plumbing (q35 exact, q36 LSH-verified) ----------
 
@@ -161,275 +136,52 @@ object TextOps {
     * scan+explode+distinct feeds them all (Spark's cache manager dedups by
     * canonicalized plan). At 100 TB this is the same call — you materialize
     * the shingle projection once, not once per consumer. */
-  // One live cache slot per stage, keyed by (session, dir): q35/q36/q81/q87
-  // share them within a run, switching fixture dirs (Bench warms at sf0.001,
-  // times at sf0.1) releases the stale entries instead of pinning them for
-  // the session lifetime, and releaseShingles() frees them explicitly on
-  // exit. Chain: per-doc shingle ARRAYS (kernel output, one row per doc) →
-  // exploded (doc_id, shh) view — the exploded cache derives from the array
-  // cache so the kernel runs once.
-  private var arrayCache: Option[(SparkSession, String, DataFrame)] = None
-  private var shingleCache: Option[(SparkSession, String, DataFrame)] = None
+  // Staged slots (graft.Staged), keyed by (session, dir): q35/q36/q81/q87
+  // share them within a run. Chain: per-doc shingle ARRAYS (kernel output,
+  // one row per doc) → exploded (doc_id, shh) view — the exploded slot
+  // derives from the array slot so the kernel runs once.
+  private val arraySlot = graft.Staged.cached("shingle_arrays_build")
+  private val shingleSlot = graft.Staged.cached("shingles_exploded_build")
 
-  // Wall time of each shared-intermediate BUILD (cache-miss branch only),
-  // keyed by stage name. q35/q36/q81 share these caches, which makes their
-  // per-query bench numbers attribution-opaque: the first consumer pays the
-  // build, the rest time near-zero. Bench writes this map into
-  // BENCH_DETAIL.json ("stages") so a regression is traceable to
-  // build-vs-consume. EVERY build is recorded (Bench runs two passes, so
-  // each stage typically shows [pass1, pass2] — last-wins hid a 6× pass-2
-  // degradation in round 5).
-  private val stageTimes =
-    scala.collection.mutable.LinkedHashMap[String, List[Double]]()
-  def stageTimings: Map[String, List[Double]] = synchronized { stageTimes.toMap }
-  // Names recorded via timedStage (BUILD wall times), as opposed to the
-  // recordStat audit entries (*_gc_ms, *_spill_mb, round counts, …) that
-  // share stageTimes. Bench diffs buildStageTotals around each query to
-  // report builds as first-class rows SUBTRACTED from the triggering query
-  // — without this split, per-query trend lines swing 20× whenever suite
-  // name order moves which query triggers a shared build (r10: q35 6.15 s →
-  // 0.29 s with no code change when q135 started sorting first).
-  private val buildStageNames = scala.collection.mutable.LinkedHashSet[String]()
-  /** name → cumulative build seconds so far (builds only, no stat rows). */
-  def buildStageTotals: Map[String, Double] = synchronized {
-    buildStageNames.iterator
-      .map(n => n -> stageTimes.getOrElse(n, Nil).sum).toMap
-  }
-  // Cumulative task-metric deltas per build stage — the Snap twin of
-  // buildStageTotals, so Bench can move a triggered build's GC/spill onto
-  // its stage: row the same way it moves the wall time (otherwise a
-  // 0.3 s consume-only query row carries the build's hundreds of MB of
-  // spill in query_metrics — the attribution confusion the stage rows
-  // exist to remove, reproduced in the metrics record).
-  private val stageMetricSums =
-    scala.collection.mutable.LinkedHashMap[String, graft.MetricsTap.Snap]()
-  def buildMetricTotals: Map[String, graft.MetricsTap.Snap] = synchronized {
-    stageMetricSums.toMap
-  }
-  // Build timers nest (pairs → exploded → arrays, all under the same
-  // synchronized lock, same thread), so each stage records its EXCLUSIVE
-  // time — child build time is subtracted via the frame stack — and the
-  // BENCH_DETAIL "stages" entries sum without overlap.
-  // auxiliary per-build stats (round counts/durations) recorded into the
-  // same map; callers already hold the TextOps lock
-  private def recordStat(name: String, v: Double): Unit =
-    stageTimes(name) = stageTimes.getOrElse(name, Nil) :+ v
+  private def docShingleArrays(s: SparkSession, d: String): DataFrame =
+    arraySlot(s, d)(graft.Staged.persistNow( // distinct per doc, done in
+      docTokens(s, d) // the kernel — no shuffle
+        .select(col("doc_id"), shingleHashes(col("toks")).as("shs"))))
 
-  /** Stage-timer facade for shared builds living OUTSIDE TextOps (q122's
-    * aHash decode table): same registry, same exclusive-time and
-    * GC/spill attribution, so Bench promotes them to stage: rows exactly
-    * like the shingle/pair/label/window/bigram builds. */
-  private[graft] def timedBuild[T](name: String)(f: => T): T =
-    synchronized { timedStage(name)(f) }
+  private def docShingles(s: SparkSession, d: String): DataFrame =
+    shingleSlot(s, d)(graft.Staged.persistNow(docShingleArrays(s, d)
+      .select(col("doc_id"), explode(col("shs")).as("shh"))))
 
-  private val frameChildNs = scala.collection.mutable.Stack[Long]()
-  private val heapProbe = sys.env.contains("SPARK_GRAFT_HEAPPROBE")
-  private def timedStage[T](name: String)(f: => T): T = {
-    // Bench runs also attribute WHY per stage (GC vs spill — see MetricsTap
-    // scaladoc): deltas are INCLUSIVE of nested builds (no exclusive-time
-    // subtraction as for wall time — a child's spill is still this build's
-    // spill for diagnosis), and the snapshot's bus flush sits outside no
-    // timer here because stage wall time is measured around the whole build
-    // anyway — the flush cost (ms) is noise against a multi-second build.
-    val m0 = if (graft.MetricsTap.enabled) Some(graft.MetricsTap.snapshot()) else None
-    val t0 = System.nanoTime()
-    frameChildNs.push(0L)
-    var popped = false // own-frame pop happened: the catch must not pop again
-    try {
-      val r = f
-      val elapsed = System.nanoTime() - t0
-      val childNs = frameChildNs.pop()
-      popped = true
-      if (frameChildNs.nonEmpty)
-        frameChildNs.push(frameChildNs.pop() + elapsed)
-      stageTimes(name) =
-        stageTimes.getOrElse(name, Nil) :+ (elapsed - childNs) / 1e9
-      buildStageNames += name
-      m0.foreach { before =>
-        // the snapshot's bus flush (bounded 10 s) runs after THIS stage's
-        // elapsed is taken, but inside any enclosing stage's timed region —
-        // credit it to the parent's child-time so a pathological bus stall
-        // can't masquerade as parent stage time, and record it for audit
-        val f0 = System.nanoTime()
-        val d = graft.MetricsTap.snapshot() - before
-        val flushNs = System.nanoTime() - f0
-        if (frameChildNs.nonEmpty)
-          frameChildNs.push(frameChildNs.pop() + flushNs)
-        recordStat(s"${name}_gc_ms", d.gcMs.toDouble)
-        recordStat(s"${name}_spill_mb",
-          (d.spillMemBytes + d.spillDiskBytes).toDouble / (1 << 20))
-        recordStat(s"${name}_flush_ms", flushNs / 1e6)
-        val prev = stageMetricSums.getOrElse(name,
-          graft.MetricsTap.Snap(0L, 0L, 0L))
-        stageMetricSums(name) = graft.MetricsTap.Snap(
-          prev.gcMs + d.gcMs, prev.spillMemBytes + d.spillMemBytes,
-          prev.spillDiskBytes + d.spillDiskBytes)
-        // Diagnosis-only live-set probe (SPARK_GRAFT_HEAPPROBE=1): full GC +
-        // used-heap right after the build, off the stage clock (elapsed is
-        // already taken) and credited to the enclosing frame like the flush.
-        // NOT enabled on graded runs — the forced GC costs ~0.3 s inside the
-        // triggering query's timed region. Exists to localize cross-pass
-        // build degradation (r12: jaccard_pairs_build 3.5→28.9 s with
-        // bounded storage counts) to live-heap growth vs something else.
-        if (heapProbe) {
-          val g0 = System.nanoTime()
-          System.gc()
-          val rt = Runtime.getRuntime
-          val gNs = System.nanoTime() - g0
-          if (frameChildNs.nonEmpty)
-            frameChildNs.push(frameChildNs.pop() + gNs)
-          recordStat(s"${name}_live_heap_mb",
-            (rt.totalMemory() - rt.freeMemory()).toDouble / (1 << 20))
-        }
-      }
-      r
-    } catch { // pop the frame on failure too, or the orphan entry corrupts
-      // later attributions — but ONLY our own frame: an exception thrown
-      // after the success-path pop (the metrics flush can throw on a bus
-      // stall) must not steal the parent's frame or pop an empty stack
-      case t: Throwable => if (!popped) frameChildNs.pop(); throw t
-    }
-  }
-
-  private def docShingleArrays(s: SparkSession, d: String): DataFrame = synchronized {
-    arrayCache match {
-      case Some((sess, dir, df)) if (sess eq s) && dir == d => df
-      case prev => timedStage("shingle_arrays_build") {
-        prev.foreach(_._3.unpersist(blocking = false))
-        val arr = docTokens(s, d)
-          .select(col("doc_id"), shingleHashes(col("toks")).as("shs"))
-          .persist() // distinct per doc, done in the kernel — no shuffle
-        arr.count()
-        arrayCache = Some((s, d, arr))
-        arr
-      }
-    }
-  }
-
-  private def docShingles(s: SparkSession, d: String): DataFrame = synchronized {
-    shingleCache match {
-      case Some((sess, dir, df)) if (sess eq s) && dir == d => df
-      case prev => timedStage("shingles_exploded_build") {
-        prev.foreach(_._3.unpersist(blocking = false))
-        val sh = docShingleArrays(s, d)
-          .select(col("doc_id"), explode(col("shs")).as("shh"))
-          .persist()
-        // materialize eagerly: the consumers run as concurrent AQE stages, and
-        // a cold cache would be recomputed once per racing stage (at scale
-        // this is the explicit "stage the shingle table" step)
-        sh.count()
-        shingleCache = Some((s, d, sh))
-        sh
-      }
-    }
-  }
-
-  /** Drop the cached shingle tables (end-of-run cleanup for Verify/Bench).
-    * The first three are CacheManager entries (unpersist frees them); the
-    * label table is a localCheckpoint and must release at the BLOCK level
-    * or its storage outlives the cache slot for the whole session. */
-  // Release hooks for staged caches living OUTSIDE TextOps (Mining's
-  // basket-pair support table): run AFTER this object's own slots free,
-  // outside the TextOps lock — a hook takes its owner's lock, and keeping
-  // the lock order one-way (owner → TextOps on build via timedBuild,
-  // never TextOps → owner) rules out deadlock.
-  private val releaseHooks =
-    new java.util.concurrent.CopyOnWriteArrayList[Runnable]()
-  private[graft] def onRelease(hook: Runnable): Unit = releaseHooks.add(hook)
-
-  def releaseShingles(): Unit =
-    // finally: an exception in the owned sweep (a stopped SparkContext
-    // during teardown, a Checkpoints.release failure) must not skip the
-    // hooks — a skipped hook leaks its owner's persisted table for the
-    // session and starts the next bench pass cache-warm (review r15)
-    try releaseOwned()
-    finally releaseHooks.forEach { h =>
-      // per-hook isolation: one throwing hook must not skip the others —
-      // each hook frees a DIFFERENT owner's persisted table, so propagating
-      // the first failure would leak every later owner's storage, the exact
-      // leak this finally exists to prevent (advice r16)
-      try h.run()
-      catch { case t: Throwable =>
-        System.err.println(s"graft: release hook failed (continuing): $t")
-      }
-    }
-
-  private def releaseOwned(): Unit = synchronized {
-    arrayCache.foreach(_._3.unpersist(blocking = false))
-    arrayCache = None
-    shingleCache.foreach(_._3.unpersist(blocking = false))
-    shingleCache = None
-    pairsCache.foreach(_._3.unpersist(blocking = false))
-    pairsCache = None
-    windowCache.foreach(_._4.unpersist(blocking = false))
-    windowCache = None
-    windowFreqCache.foreach(_._4.unpersist(blocking = false))
-    windowFreqCache = None
-    labelsCache.foreach(p => graft.Checkpoints.release(p._3))
-    labelsCache = None
-    bigramDfCache.foreach(p => graft.Checkpoints.release(p._3._1))
-    bigramDfCache = None
-    famCache.foreach(p => graft.Checkpoints.release(p._3))
-    famCache = None
-    classesCache.foreach(_._3.unpersist(blocking = false))
-    classesCache = None
-  }
+  // The registry's staged-slot lifecycle lives in graft.Staged; these
+  // forwarders stay for the standalone benchmark tree, which calls them.
+  def releaseShingles(): Unit = graft.Staged.releaseAll()
+  def stageTimings: Map[String, List[Double]] = graft.Staged.stageTimings
+  def buildStageTotals: Map[String, Double] = graft.Staged.buildStageTotals
 
   // The thresholded pair table is ALSO a shared intermediate: q35 emits it
   // and q81 clusters over it — in a real pipeline you materialize pairs once
-  // and derive clusters from the same table. Same single-slot (session, dir)
-  // policy as the shingle cache.
-  private var pairsCache: Option[(SparkSession, String, DataFrame)] = None
+  // and derive clusters from the same table. Staged like the shingle table.
+  private val pairsSlot = graft.Staged.cached("jaccard_pairs_build")
 
-  private def jaccardPairsCached(s: SparkSession, d: String): DataFrame = synchronized {
-    pairsCache match {
-      case Some((sess, dir, df)) if (sess eq s) && dir == d => df
-      case prev => timedStage("jaccard_pairs_build") {
-        prev.foreach(_._3.unpersist(blocking = false))
-        val p = jaccardPairs(s, d).persist()
-        p.count() // realize inside the timer: build cost lands on this stage
-        // the shingle-classes table stays STAGED (its own cache slot): it
-        // now has a second consumer — q200's (doc → canonical) serving
-        // table, the 100 TB output contract — so it is freed by
-        // releaseOwned with the other staged tables, not here
-        pairsCache = Some((s, d, p))
-        p
-      }
-    }
-  }
+  private def jaccardPairsCached(s: SparkSession, d: String): DataFrame =
+    pairsSlot(s, d)(graft.Staged.persistNow(jaccardPairs(s, d)))
 
   /** Exact-set shingle dup-class table (rep, members, csize, n) — the
     * first stage of the q35 pipeline, staged in its own slot because it
     * has two consumers: the pair build (candidates run over one REP per
     * class) and q200's (doc → canonical) serving table, the near-dup
-    * family's 100 TB output contract (judge r15 #1). Same single-slot
-    * (session, dir) policy as the other staged intermediates; freed by
-    * releaseOwned. */
-  private var classesCache: Option[(SparkSession, String, DataFrame)] = None
+    * family's 100 TB output contract (judge r15 #1). */
+  private val classesSlot = graft.Staged.cached("shingle_classes_build")
 
   private def shingleClassesCached(s: SparkSession, d: String): DataFrame =
-    synchronized {
-      classesCache match {
-        case Some((sess, dir, df)) if (sess eq s) && dir == d => df
-        case prev => timedStage("shingle_classes_build") {
-          prev.foreach(_._3.unpersist(blocking = false))
-          // slot cleared BEFORE the build: a failed build must leave None
-          // (next consumer rebuilds), never a stale entry pointing at the
-          // just-unpersisted frame
-          classesCache = None
-          val c = shingleClasses(docShingles(s, d)).persist()
-          c.count() // eager: concurrent AQE stages would race a cold cache
-          classesCache = Some((s, d, c))
-          c
-        }
-      }
-    }
+    classesSlot(s, d)(graft.Staged.persistNow(shingleClasses(docShingles(s, d))))
 
   /** Near-dup connected-component labels (doc → min-id root), shared by
     * q81 (cluster rollup) and q94 (canonical selection) — in a real pipeline
     * the label table is materialized once and every downstream consumer
-    * reads it. Same single-slot (session, dir) policy as the other staged
-    * intermediates.
+    * reads it. A plain localCheckpoint, so the slot frees it at the block
+    * level (Dataset.unpersist would free nothing — the round-6 bench
+    * degradation mechanism).
     *
     * Lineage MUST be truncated each round (localCheckpoint, eager): without
     * it the nested union/agg plan re-analyzes per iteration and analysis
@@ -439,64 +191,54 @@ object TextOps {
     * DECREASE under min-propagation, so Σroot strictly decreases on any
     * change — comparing per-round sums detects the fixpoint with one tiny
     * agg instead of a label-vs-label join + count. */
-  private var labelsCache: Option[(SparkSession, String, DataFrame)] = None
+  private val labelsSlot = graft.Staged.checkpointed("cluster_labels_build")
 
-  private def clusterLabels(s: SparkSession, d: String): DataFrame = synchronized {
-    labelsCache match {
-      case Some((sess, dir, df)) if (sess eq s) && dir == d => df
-      case prev => timedStage("cluster_labels_build") {
-        // localCheckpoint blocks are not CacheManager entries; release them
-        // at the block level (graft.Checkpoints) — Dataset.unpersist would
-        // free nothing and the blocks would pin storage for the session
-        // (the round-6 bench degradation mechanism).
-        prev.foreach(p => graft.Checkpoints.release(p._3))
-        val pairs = jaccardPairsCached(s, d)
-          .select(col("doc_a"), col("doc_b"))
-        val edges = pairs
-          .unionByName(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-        val nodes = edges.select(col("doc_a").as("doc")).distinct()
-        var labels = nodes.withColumn("root", col("doc")).localCheckpoint()
-        def labelSum(df: DataFrame): Long =
-          df.agg(coalesce(sum(col("root")), lit(0L))).head().getLong(0)
-        var prevSum = labelSum(labels)
-        var converged = false
-        var rounds = 0
-        // 64-round safety cap >> any plausible near-dup diameter; convergence
-        // is ASSERTED below — an unconverged run must fail loudly here, not
-        // obscurely at the oracle hash compare
-        while (!converged && rounds < 64) { // near-dup components are
-          rounds += 1 // dup-cliques + short chains: converges in 1-2 rounds
-          val rt0 = System.nanoTime()
-          val viaEdge = edges
-            .join(labels.withColumnRenamed("doc", "doc_a"), Seq("doc_a"))
-            .select(col("doc_b").as("doc"), col("root"))
-          val next = labels.unionByName(viaEdge)
-            .groupBy(col("doc")).agg(min(col("root")).as("root"))
-            .localCheckpoint()
-          val s2 = labelSum(next)
-          // round k is materialized (eager checkpoint) and summed — round
-          // k-1's blocks are dead; free them NOW so the loop holds at most
-          // two rounds of blocks instead of leaking one table per round
-          graft.Checkpoints.release(labels)
-          // per-round wall time into the stage map — the diagnostic that
-          // localizes a slow build to one round vs uniform degradation.
-          // "diag_" prefix: this time is INSIDE cluster_labels_build's
-          // exclusive total, so diag_* entries are excluded from the
-          // stages-sum-without-overlap invariant
-          recordStat("diag_cluster_labels_round_secs",
-            (System.nanoTime() - rt0) / 1e9)
-          converged = s2 == prevSum
-          prevSum = s2
-          labels = next
-        }
-        require(converged,
-          s"label propagation did not converge in $rounds rounds — " +
-            "component diameter exceeds cap")
-        labelsCache = Some((s, d, labels))
-        labels
+  private def clusterLabels(s: SparkSession, d: String): DataFrame =
+    labelsSlot(s, d) {
+      val pairs = jaccardPairsCached(s, d)
+        .select(col("doc_a"), col("doc_b"))
+      val edges = pairs
+        .unionByName(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
+      val nodes = edges.select(col("doc_a").as("doc")).distinct()
+      var labels = nodes.withColumn("root", col("doc")).localCheckpoint()
+      def labelSum(df: DataFrame): Long =
+        df.agg(coalesce(sum(col("root")), lit(0L))).head().getLong(0)
+      var prevSum = labelSum(labels)
+      var converged = false
+      var rounds = 0
+      // 64-round safety cap >> any plausible near-dup diameter; convergence
+      // is ASSERTED below — an unconverged run must fail loudly here, not
+      // obscurely at the oracle hash compare
+      while (!converged && rounds < 64) { // near-dup components are
+        rounds += 1 // dup-cliques + short chains: converges in 1-2 rounds
+        val rt0 = System.nanoTime()
+        val viaEdge = edges
+          .join(labels.withColumnRenamed("doc", "doc_a"), Seq("doc_a"))
+          .select(col("doc_b").as("doc"), col("root"))
+        val next = labels.unionByName(viaEdge)
+          .groupBy(col("doc")).agg(min(col("root")).as("root"))
+          .localCheckpoint()
+        val s2 = labelSum(next)
+        // round k is materialized (eager checkpoint) and summed — round
+        // k-1's blocks are dead; free them NOW so the loop holds at most
+        // two rounds of blocks instead of leaking one table per round
+        graft.Checkpoints.release(labels)
+        // per-round wall time into the stage map — the diagnostic that
+        // localizes a slow build to one round vs uniform degradation.
+        // "diag_" prefix: this time is INSIDE cluster_labels_build's
+        // exclusive total, so diag_* entries are excluded from the
+        // stages-sum-without-overlap invariant
+        graft.Staged.recordStat("diag_cluster_labels_round_secs",
+          (System.nanoTime() - rt0) / 1e9)
+        converged = s2 == prevSum
+        prevSum = s2
+        labels = next
       }
+      require(converged,
+        s"label propagation did not converge in $rounds rounds — " +
+          "component diameter exceeds cap")
+      labels
     }
-  }
 
   /** Cluster-labels oracle CTE block (shared by q81/q94); requires the
     * `jac` CTE from [[jaccardCtes]] and a leading WITH RECURSIVE. */
@@ -800,9 +542,9 @@ object TextOps {
     * fit, shared by q113 (batch gate), q136 (threshold sweep), q144
     * (curriculum) via [[familiarityScored]] and by q133's streaming
     * serving mode via [[bigramServingModel]]. In a real pipeline the model
-    * is materialized once and every consumer loads it; same single-slot
-    * (session, dir) policy as the staged pair/window caches, released with
-    * them so each bench pass re-pays the fit exactly once.
+    * is materialized once and every consumer loads it; staged like the
+    * pair/window tables and released with them, so each bench pass re-pays
+    * the fit exactly once.
     *
     * The fit itself never leaves the cluster: one map-side-combined
     * aggregation down to |observed charset|² rows, localCheckpointed.
@@ -812,27 +554,19 @@ object TextOps {
     * (the pre-round-12 collect()-to-Map would have refused it). The
     * returned cardinality is what the serving path's bounded-metadata
     * contract checks BEFORE collecting. */
-  private var bigramDfCache: Option[(SparkSession, String, (DataFrame, Long))] = None
+  private val bigramSlot = graft.Staged[(DataFrame, Long)](
+    "bigram_model_build", m => graft.Checkpoints.release(m._1))
 
   private[graft] def bigramModelDf(s: SparkSession, d: String)
-      : (DataFrame, Long) = synchronized {
-    bigramDfCache match {
-      case Some((sess, dir, m)) if (sess eq s) && dir == d => m
-      case prev => timedStage("bigram_model_build") {
-        prev.foreach(p => graft.Checkpoints.release(p._3._1))
-        // plain localCheckpoint (NOT Checkpoints.localCheckpoint): this is
-        // a cross-query STAGED table — a bulk scoped release between
-        // queries must not invalidate it; the cache releases it itself
-        val model =
-          bigramsOf(Tables.documents(s, d).select(col("doc_id"), col("text")))
-            .groupBy(col("bg")).agg(count(lit(1)).as("c"))
-            .localCheckpoint()
-        val card = model.count()
-        val m = (model, card)
-        bigramDfCache = Some((s, d, m))
-        m
-      }
-    }
+      : (DataFrame, Long) = bigramSlot(s, d) {
+    // plain localCheckpoint (NOT Checkpoints.localCheckpoint): this is a
+    // cross-query STAGED table — a bulk scoped release between queries
+    // must not invalidate it; the slot releases it itself
+    val model =
+      bigramsOf(Tables.documents(s, d).select(col("doc_id"), col("text")))
+        .groupBy(col("bg")).agg(count(lit(1)).as("c"))
+        .localCheckpoint()
+    (model, model.count())
   }
 
   /** Streaming serving mode (q133) needs the model IN each task — a
@@ -1069,22 +803,13 @@ object TextOps {
   // narrow per-doc metadata (five numeric columns, the text never persists),
   // and every consumer reads the materialized table — the pipeline shape a
   // 100 TB run would use (score once to a table, gate/sweep/rank from it).
-  private var famCache: Option[(SparkSession, String, DataFrame)] = None
+  private val famSlot = graft.Staged.checkpointed("familiarity_scored_build")
 
-  private def familiarityScored(s: SparkSession, d: String): DataFrame = synchronized {
-    famCache match {
-      case Some((sess, dir, df)) if (sess eq s) && dir == d => df
-      case prev => timedStage("familiarity_scored_build") {
-        prev.foreach(p => graft.Checkpoints.release(p._3))
-        val df = familiarityScoredPlan(s, d)
-          .select(col("doc_id"), col("n_tok"), col("n_bigrams"),
-            col("avg_count"), col("familiarity_milli"))
-          .localCheckpoint() // staged cross-query table: owner-released
-        famCache = Some((s, d, df))
-        df
-      }
-    }
-  }
+  private def familiarityScored(s: SparkSession, d: String): DataFrame =
+    famSlot(s, d)(familiarityScoredPlan(s, d)
+      .select(col("doc_id"), col("n_tok"), col("n_bigrams"),
+        col("avg_count"), col("familiarity_milli"))
+      .localCheckpoint()) // staged cross-query table: slot-released
 
   private def familiarityScoredPlan(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))

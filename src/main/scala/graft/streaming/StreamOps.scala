@@ -500,39 +500,27 @@ object StreamOps {
     * (session, dir) and both read the materialized sink table, exactly
     * like the jaccard/cooccur staged slots (StreamingSpec's "q149 top-3
     * is exactly the re-ranked q42" test is the law that makes this
-    * sharing sound). Build time lands on a stage: row via timedBuild;
-    * the slot frees with the other staged tables (TextOps release hook),
-    * so every bench pass re-drains cold. Spec paths that assert drain
-    * EVIDENCE (append mode, eviction) call [[releaseDrained]] first so
-    * their evidence still comes from their own run's progress. */
-  private var tumblingDrainCache: Option[(SparkSession, String, DataFrame)] = None
-  graft.queries.TextOps.onRelease(() => releaseDrained())
-
-  private[graft] def releaseDrained(): Unit = synchronized {
-    tumblingDrainCache = None // memory-sink rows; freed by driver GC
-  }
+    * sharing sound). A staged slot: the build lands on a stage: row, and
+    * every bench pass re-drains cold. Spec paths that assert drain
+    * EVIDENCE (append mode, eviction) call `drainSlot.release()` first so
+    * their evidence still comes from their own run's progress. The rows
+    * live in a memory sink, so freeing is the driver GC's job. */
+  private[graft] val drainSlot =
+    graft.Staged[DataFrame]("tumbling_drain_build", _ => ())
 
   private def tumblingDrained(s: SparkSession, d: String): DataFrame =
-    synchronized {
-      tumblingDrainCache match {
-        case Some((sess, dir, df)) if (sess eq s) && dir == d => df
-        case _ => graft.queries.TextOps.timedBuild("tumbling_drain_build") {
-          tumblingDrainCache = None
-          val srcDir = withHorizonSentinel(s, d)
-          val agg = eventsStreamFrom(s, d, srcDir.toString, "*.parquet")
-            .withWatermark("ts", "1 hour")
-            .groupBy(window(col("ts"), "10 minutes"), col("event_type"))
-            .agg(
-              count(lit(1)).as("n"),
-              graft.MoneyOut.col(sum(col("value").cast("decimal(18,6)")))
-                .as("value_sum"))
-            .select(col("window.start").as("bucket_start"),
-              col("event_type"), col("n"), col("value_sum"))
-          val served = drain(s, agg, "append")
-          tumblingDrainCache = Some((s, d, served))
-          served
-        }
-      }
+    drainSlot(s, d) {
+      val srcDir = withHorizonSentinel(s, d)
+      val agg = eventsStreamFrom(s, d, srcDir.toString, "*.parquet")
+        .withWatermark("ts", "1 hour")
+        .groupBy(window(col("ts"), "10 minutes"), col("event_type"))
+        .agg(
+          count(lit(1)).as("n"),
+          graft.MoneyOut.col(sum(col("value").cast("decimal(18,6)")))
+            .as("value_sum"))
+        .select(col("window.start").as("bucket_start"),
+          col("event_type"), col("n"), col("value_sum"))
+      drain(s, agg, "append")
     }
 
   val qs: Map[String, Q] = Map(

@@ -109,16 +109,6 @@ class OperatorsSpec extends SparkSpec {
     assert(out2.sameElements(Array(Map("x" -> 9))))
   }
 
-  test("rangeJoin never plans a cartesian") {
-    val a = Seq((1L, 10L), (2L, 20L)).toDF("k", "t1")
-    val b = Seq((1L, 12L), (1L, 100L), (2L, 19L)).toDF("k2", "t2")
-    val joined = Operators.rangeJoin(a, b,
-      $"k" === $"k2", $"t2" > $"t1" && $"t2" <= $"t1" + 5)
-    assert(joined.count() == 1) // only (1, 10)-(1, 12)
-    val plan = joined.queryExecution.executedPlan.toString
-    assert(!plan.contains("CartesianProduct"))
-  }
-
   test("dedupFirstWins is deterministic under arrival order") {
     val df = Seq((1L, 5, "late"), (1L, 1, "first"), (2L, 3, "only"))
       .toDF("id", "seq", "v")
@@ -542,35 +532,5 @@ class OperatorsSpec extends SparkSpec {
         "g", Seq(col("v"), col("tie")), _ => Seq(1L))
     }
     assert(ex.getMessage.contains("non-null"))
-  }
-
-  test("topKByScore equals the window topKPerGroup on randomized data " +
-    "(bounded k-heap twin law)") {
-    import spark.implicits._
-    // seeded generator: ~40 groups, skewed item counts, colliding scores
-    // so the (score desc, item asc) tie-break is actually exercised
-    val rnd = new scala.util.Random(20160816L)
-    val rows = (1 to 5000).map { _ =>
-      (rnd.nextInt(40).toLong, rnd.nextInt(2000).toLong,
-        rnd.nextInt(12).toLong)
-    }.distinctBy(r => (r._1, r._2)) // the contract: distinct (group, item)
-    for (k <- Seq(1, 3, 7)) {
-      val ds = rows.toDF("g", "i", "s").as[(Long, Long, Long)]
-      val heap = graft.operators.Operators.topKByScore(ds, k)
-        .collect().map(r =>
-          (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-      val win = graft.operators.Operators.topKPerGroup(
-        rows.toDF("group", "item", "score"), Seq("group"),
-        Seq(col("score").desc, col("item")), k)
-        .collect().map(r =>
-          (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3).toLong)).toSet
-      assert(heap == win, s"k=$k: heap and window top-k diverge")
-    }
-    // the plan really is the bounded aggregate, not a window in disguise
-    val p = graft.operators.Operators.topKByScore(
-      rows.toDF("g", "i", "s").as[(Long, Long, Long)], 3)
-      .queryExecution.executedPlan.toString
-    assert(p.contains("ObjectHashAggregate"), s"no bounded agg in:\n$p")
-    assert(!p.contains("Window"), s"window snuck back in:\n$p")
   }
 }

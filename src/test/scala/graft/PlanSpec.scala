@@ -227,11 +227,11 @@ class PlanSpec extends SparkSpec {
     // the staged slot truncates lineage (plain eager localCheckpoint), so
     // q96's own plan no longer prints the kernel — inspect the SAME kernel
     // through the gate's streamed arm, whose plan IS the enumeration
-    graft.queries.Events.releaseStagedCooccur()
+    graft.queries.Events.cooccurSlot.release()
     val df = graft.queries.Events
       .cooccurPairCounts(spark, skewedEventsDir, bound = 0L)
     df.collect()
-    graft.queries.Events.releaseStagedCooccur()
+    graft.queries.Events.cooccurSlot.release()
     val p = df.queryExecution.executedPlan.toString
     // the pair join must be an equi-join whose keys carry blk — that's what
     // splits a hot (event_type, hour) bucket across B tasks
@@ -324,7 +324,7 @@ class PlanSpec extends SparkSpec {
     val m = SparkEntry.registry("q107_source_overlap").run(spark, dir)
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
     assert(m.toSeq == Seq(("srcA", "srcB", 1L)), s"unexpected matrix: ${m.toSeq}")
-    graft.queries.TextOps.releaseShingles() // drop the window cache staged
+    Staged.releaseAll() // drop the window cache staged
     // on this temp dir so later tests rebuild against the real fixture
   }
 
@@ -744,7 +744,7 @@ class PlanSpec extends SparkSpec {
 
   test("q199 + q96: ONE staged enumeration serves the whole co-occurrence " +
     "family — both tails scan the same cached pair-count table") {
-    graft.queries.Events.releaseStagedCooccur() // cold slot: q199 builds it
+    graft.queries.Events.cooccurSlot.release() // cold slot: q199 builds it
     val df199 = SparkEntry.registry("q199_cooccur_topk").run(spark, sf)
     // The serving tree is walked NODE BY NODE with cache scans as leaves
     // (GraftPlanBridge) — the old text split on the FIRST "InMemoryRelation"
@@ -802,7 +802,7 @@ class PlanSpec extends SparkSpec {
     assert(!s96.contains("REPARTITION_BY_NUM") &&
       !s96.contains("HashAggregate") && !s96.contains("Join"),
       s"q96 re-ran the enumeration instead of serving the slot:\n$s96")
-    graft.queries.Events.releaseStagedCooccur()
+    graft.queries.Events.cooccurSlot.release()
   }
 
   test("q199 broadcast bound is a config seam (spark.graft." +
@@ -818,7 +818,7 @@ class PlanSpec extends SparkSpec {
       }.size
     // under-bound arm (default 4M ≫ fixture users): hint present — the
     // main q199 test already pins the physical BroadcastHashJoin
-    graft.queries.Events.releaseStagedCooccur()
+    graft.queries.Events.cooccurSlot.release()
     val hinted = SparkEntry.registry("q199_cooccur_topk").run(spark, sf)
     assert(survivorJoinHints(hinted) == 1,
       "under the bound, the survivor join must carry the broadcast hint")
@@ -830,7 +830,7 @@ class PlanSpec extends SparkSpec {
     // too late at 30× — 12.2 GB SortMergeJoin already launched.)
     spark.conf.set("spark.graft.cooccurBroadcastUsers", "0")
     try {
-      graft.queries.Events.releaseStagedCooccur()
+      graft.queries.Events.cooccurSlot.release()
       val keyed = SparkEntry.registry("q199_cooccur_topk").run(spark, sf)
       assert(survivorJoinHints(keyed) == 0,
         "over the bound, the survivor join must not be broadcast-hinted")
@@ -839,7 +839,7 @@ class PlanSpec extends SparkSpec {
         "broadcast-bound arms disagree on q199's rows")
     } finally {
       spark.conf.unset("spark.graft.cooccurBroadcastUsers")
-      graft.queries.Events.releaseStagedCooccur()
+      graft.queries.Events.cooccurSlot.release()
     }
   }
 
@@ -850,7 +850,7 @@ class PlanSpec extends SparkSpec {
     // streamed arm by dropping the bound to 0: the returned plan must run
     // the enumeration directly (salted exchanges in the SERVING plan, no
     // cache scan) and must leave NOTHING persisted behind.
-    graft.queries.Events.releaseStagedCooccur()
+    graft.queries.Events.cooccurSlot.release()
     val streamed = graft.queries.Events.cooccurPairCounts(spark, sf, bound = 0L)
     val ps = streamed.queryExecution.executedPlan.toString
     assert(org.apache.spark.sql.GraftPlanBridge.scannedCacheIds(streamed).isEmpty,
@@ -880,12 +880,26 @@ class PlanSpec extends SparkSpec {
       "a warm slot must not be served to a caller whose bound excludes it")
     assert(graft.queries.Events.cooccurPairCounts(spark, sf) eq staged,
       "the bound-excluded call must leave the warm slot untouched")
-    graft.queries.Events.releaseStagedCooccur()
+    graft.queries.Events.cooccurSlot.release()
     // the production bound sits between the measured 10×/30× spectra
     // (~120M/~1.1B matches: stage) and the 100× clone-law point (~12B:
     // stream — persisting that spectrum is exactly the materialization the
     // output contract forbids)
     assert(graft.queries.Events.StagedPairSpectrumBound == 1500000000L)
+  }
+
+  test("cooccurUserCount: the staged slot's memo and the streamed arm's " +
+    "direct count agree (q199's broadcast bound on both gate arms)") {
+    graft.queries.Events.cooccurSlot.release()
+    graft.queries.Events.cooccurPairCounts(spark, sf, bound = 0L)
+    assert(graft.queries.Events.cooccurSlot.peek(spark, sf).isEmpty)
+    val streamed = graft.queries.Events.cooccurUserCount(spark, sf)
+    graft.queries.Events.cooccurPairCounts(spark, sf)
+    val memo = graft.queries.Events.cooccurSlot.peek(spark, sf).map(_.users)
+    assert(memo.contains(streamed) && streamed > 0,
+      s"staged user count $memo differs from the streamed-arm count $streamed")
+    graft.queries.Events.cooccurSlot.release()
+    Checkpoints.releaseScoped()
   }
 
   test("cooccur pair aggregation width scales with the spectrum (seam " +
@@ -898,7 +912,7 @@ class PlanSpec extends SparkSpec {
     // exact spectrum scalar the size gate computes. Both arms must agree
     // row-for-row.
     import org.apache.spark.sql.functions._
-    graft.queries.Events.releaseStagedCooccur()
+    graft.queries.Events.cooccurSlot.release()
     graft.Checkpoints.releaseScoped()
     val defaultArm = graft.queries.Events.cooccurPairCounts(spark, sf, bound = 0L)
     val defaultPlan = defaultArm.queryExecution.executedPlan.toString
@@ -930,7 +944,7 @@ class PlanSpec extends SparkSpec {
     } finally {
       spark.conf.unset("spark.graft.cooccurAggMatchesPerPartition")
       graft.Checkpoints.releaseScoped()
-      graft.queries.Events.releaseStagedCooccur()
+      graft.queries.Events.cooccurSlot.release()
     }
   }
 
@@ -948,7 +962,7 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("HashAggregate"),
       s"serving should not re-aggregate — classes are staged:\n$full")
     assert(!p.contains("Join"), s"serving should be joinless:\n$full")
-    graft.queries.TextOps.releaseShingles()
+    Staged.releaseAll()
   }
 
   test("q201/q122 share ONE staged decode: with the class table staged, " +
@@ -974,6 +988,6 @@ class PlanSpec extends SparkSpec {
       s"q201 should scan exactly the staged class table: $ids201")
     assert(ids122.nonEmpty && ids122.forall(_ == ids201.head),
       s"q122 reads a different table than the staged slot: $ids122 vs $ids201")
-    graft.queries.TextOps.releaseShingles()
+    Staged.releaseAll()
   }
 }

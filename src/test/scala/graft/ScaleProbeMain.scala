@@ -41,7 +41,7 @@ object ScaleProbeMain {
     time("warm_sf01") {
       SparkEntry.queries("q96_salted_cooccur")(spark, "/root/testdata/sf0.1").count()
     }
-    graft.queries.TextOps.releaseShingles(); Checkpoints.releaseScoped()
+    Staged.releaseAll(); Checkpoints.releaseScoped()
     stages.clear()
 
     val direct = time("direct_no_persist") {
@@ -64,7 +64,7 @@ object ScaleProbeMain {
     }
     dump("q199 tail stages")
 
-    graft.queries.TextOps.releaseShingles(); Checkpoints.releaseScoped()
+    Staged.releaseAll(); Checkpoints.releaseScoped()
     spark.stop()
   }
 }

@@ -13,8 +13,9 @@ package graft
   * directly or a release path was dropped.
   *
   * Contract enforced here, over the checkpoint-using query family run with
-  * Bench's exact release discipline (releaseShingles + releaseScoped at
-  * pass boundaries):
+  * Bench's exact release discipline (Staged.releaseAll + releaseScoped at
+  * pass boundaries) — staged tables are owned by graft.Staged slots and
+  * freed only by that sweep:
   *   1. after each pass's release sweep, zero scoped checkpoints remain
   *      registered, and
   *   2. the session's persistent-RDD registry returns to its pre-soak size
@@ -31,18 +32,24 @@ class SessionSoakSpec extends SparkSpec {
   // The localCheckpoint-using family: q35/q36 (candidate-pair scoped
   // checkpoint), q81 (label-propagation rounds + staged label table),
   // q61/q96/q103/q108 (totalRank frozen-pid scratch, salt-width probe),
-  // q106/q107 (staged per-doc window cache) so every entry in
-  // TextOps.releaseShingles' registry is exercised by the contract,
-  // plus q112 (cross-set candidate scoped checkpoint over the shared
-  // shingle-array cache) and q137 (groupedPrefixSum's frozen-pid scratch).
+  // q106/q107 (staged per-doc window tables), q112 (cross-set candidate
+  // scoped checkpoint over the shared shingle-array table) and q137
+  // (groupedPrefixSum's frozen-pid scratch) — plus one consumer of every
+  // other staged slot (bigram model + familiarity, BM25, basket pairs,
+  // dense top-20, exact/IVF top-k, dup classes, aHash classes, tumbling
+  // drain), so every registered graft.Staged slot is exercised by the
+  // contract (asserted below: a new slot cannot escape it).
   private val soak = Seq(
     "q35_jaccard_pairs", "q36_minhash_lsh", "q81_dedup_clusters",
     "q61_ntile_deciles", "q96_salted_cooccur", "q103_skew_profile",
     "q106_window_dedup", "q107_source_overlap", "q108_sequence_packing",
-    "q112_fuzzy_decontam", "q137_budget_sample")
+    "q112_fuzzy_decontam", "q137_budget_sample",
+    "q113_bigram_lm", "q169_bm25_topk", "q173_basket_pairs",
+    "q177_hybrid_rrf", "q134_ann_recall", "q200_dup_classes",
+    "q201_image_classes", "q42_stream_tumbling")
 
   private def flush(): Unit = {
-    graft.queries.TextOps.releaseShingles()
+    Staged.releaseAll()
     Checkpoints.releaseScoped()
   }
 
@@ -68,6 +75,10 @@ class SessionSoakSpec extends SparkSpec {
           "release paths (see graft.Checkpoints scaladoc for the contract)")
       baseline = math.min(baseline, now)
     }
+    val built = Staged.buildStageTotals.keySet
+    val missed = Staged.names.filterNot(built)
+    assert(missed.isEmpty,
+      s"staged slots never built by the soak (outside the leak contract): $missed")
   }
 
   /** Whether `System.gc()` actually runs a collection on this JVM: allocate

@@ -183,7 +183,7 @@ class StreamingSpec extends SparkSpec {
     // windowed counts must reproduce q149 row-for-row. r17: the two views
     // now SHARE one staged drain — force it cold so the evidence below
     // comes from this test's own run.
-    graft.streaming.StreamOps.releaseDrained()
+    graft.streaming.StreamOps.drainSlot.release()
     val counts = SparkEntry.queries("q42_stream_tumbling")(spark, sf)
       .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2)))
     val expect = counts.groupBy(_._1).toSeq.flatMap { case (b, rows) =>
@@ -220,7 +220,7 @@ class StreamingSpec extends SparkSpec {
     // the last lifetime-growing complete-mode drain, restructured round 13
     // through the q149 horizon-sentinel shape — assert it from the drain's
     // own progress, same evidence standard as the q149 test above
-    graft.streaming.StreamOps.releaseDrained() // shared slot must rebuild
+    graft.streaming.StreamOps.drainSlot.release() // shared slot must rebuild
     graft.streaming.StreamOps.lastDrainInfo = None
     val rows = SparkEntry.queries("q42_stream_tumbling")(spark, sf).collect()
     assert(rows.nonEmpty)
@@ -299,7 +299,7 @@ class StreamingSpec extends SparkSpec {
       SparkEntry.queries(name)(spark, sf).collect().map(_.toString).toSeq
     val names = Seq("q149_stream_topk", "q64_stream_stream_join")
     val underDefault = names.map { n =>
-      graft.streaming.StreamOps.releaseDrained() // q149's shared slot: each
+      graft.streaming.StreamOps.drainSlot.release() // q149's shared slot: each
       graft.streaming.StreamOps.lastDrainInfo = None // arm must re-drain
       val rows = run(n)
       // the baseline really ran the provider it claims to A/B against —
@@ -316,7 +316,7 @@ class StreamingSpec extends SparkSpec {
     val prev = spark.conf.getOption(key)
     spark.conf.set(key, rocks)
     try names.foreach { n =>
-      graft.streaming.StreamOps.releaseDrained()
+      graft.streaming.StreamOps.drainSlot.release()
       graft.streaming.StreamOps.lastDrainInfo = None
       val got = run(n)
       assert(got == underDefault(n),
@@ -473,7 +473,7 @@ class StreamingSpec extends SparkSpec {
     graft.streaming.StreamOps.qs.keys.toSeq.sorted.foreach { name =>
       // per-query evidence: the shared q42/q149 drain slot must not let a
       // later consumer inherit an earlier query's DrainInfo
-      graft.streaming.StreamOps.releaseDrained()
+      graft.streaming.StreamOps.drainSlot.release()
       graft.streaming.StreamOps.lastDrainInfo = None
       SparkEntry.queries(name)(spark, sf).count()
       graft.streaming.StreamOps.lastDrainInfo match {

@@ -22,7 +22,7 @@ class SubstringRemovalSpec extends SparkSpec {
     docs.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
 
-    graft.queries.TextOps.releaseShingles() // window cache is (session, dir)-keyed
+    Staged.releaseAll() // window cache is (session, dir)-keyed
     try {
       val got = SparkEntry.queries("q110_substring_removal")(spark, dir)
         .collect().map(r => r.getLong(0) ->
@@ -41,6 +41,6 @@ class SubstringRemovalSpec extends SparkSpec {
       val (nTok7, nRem7, nSpans7, cleaned7) = got(6L)
       assert(nTok7 == 3L && nRem7 == 0L && nSpans7 == 0L &&
         cleaned7 == "short doc only")
-    } finally graft.queries.TextOps.releaseShingles()
+    } finally Staged.releaseAll()
   }
 }

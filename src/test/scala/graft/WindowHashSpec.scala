@@ -16,7 +16,7 @@ class WindowHashSpec extends SparkSpec {
   private def results(mode: String): Seq[Seq[String]] = {
     // cache key includes the mode, but release anyway: the spec must not
     // depend on slot-eviction order when other suites share the session
-    graft.queries.TextOps.releaseShingles()
+    Staged.releaseAll()
     val prev = sys.props.get("graft.windowHash")
     sys.props("graft.windowHash") = mode
     try family.map(q =>
@@ -26,7 +26,7 @@ class WindowHashSpec extends SparkSpec {
         case Some(v) => sys.props("graft.windowHash") = v
         case None => sys.props.remove("graft.windowHash")
       }
-      graft.queries.TextOps.releaseShingles()
+      Staged.releaseAll()
     }
   }
 
