@@ -1,23 +1,21 @@
 package graft.functions
 
-/** Tolerant HTML parsing for the DOM extraction path (SURVEY §2.9, H1–H11).
+/** Tolerant HTML parsing for the reference-markup extractor
+  * ([[ReferenceHtml]], SURVEY §2.9, H1–H11).
   *
   * The reference parses scraped pages with BeautifulSoup
   * (reference src/extractors/bulk_scraper.py:64-111), which survives
   * real-web markup: unquoted or single-quoted attribute values, reordered
   * attributes, reordered class tokens, case-mixed tag/attr names, unclosed
-  * tags, stray close tags, comments. The regex path (ReferenceHtml) is
-  * exact on the canonical fixture markup and oracle-replayable, but
-  * silently misses on such variants. This hand-written parser (no HTML
+  * tags, stray close tags, comments. Exact-string regexes over the markup
+  * silently miss on such variants. This hand-written parser (no HTML
   * library ships on the Spark classpath) recovers the tolerance: one
   * forward scan tokenizes tags, a stack builds the tree, close-tag
   * recovery pops to the nearest matching open tag and ignores strays, and
   * EOF closes everything still open.
   *
   * Scale shape: one parse per page inside a deterministic UDF —
-  * row-at-a-time, like every DOM parser (BeautifulSoup included). The
-  * default regex path stays whole-stage-codegen'd; this path is opt-in
-  * via -Dgraft.htmlParser=dom (see ReferenceHtml.domMode).
+  * row-at-a-time, like every DOM parser (BeautifulSoup included).
   */
 sealed trait DomNode
 
@@ -31,7 +29,7 @@ final case class DomElement(tag: String, attrs: List[(String, String)],
 
   /** Class-token match: `class` is a whitespace-separated token LIST, so
     * `hasClass("fa-cloud")` matches `class="fa fa-cloud"` in any order —
-    * the CSS `.c` semantics the regex path's exact-string match lacks. */
+    * the CSS `.c` semantics an exact-string match lacks. */
   def hasClass(c: String): Boolean =
     attr("class").exists(_.split("\\s+").contains(c))
 

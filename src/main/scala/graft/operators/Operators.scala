@@ -5,71 +5,12 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Reusable operator library — the engine's public surface for the patterns
-  * the queries exercise (as-of joins, bounded range joins, keyed dedup,
-  * grouped top-k). Each is built so its plan scales: single keyed shuffle,
-  * no self-joins or cartesians, window state bounded per key.
+  * the queries exercise (keyed dedup, grouped top-k and rank picks, total
+  * ranks, salted joins, grouped prefix sums). Each is built so its plan
+  * scales: single keyed shuffle, no self-joins or cartesians, window state
+  * bounded per key.
   */
 object Operators {
-
-  /** Backward as-of join: for every left row, the latest right row with
-    * `right.ts <= left.ts` on the same key. Implemented as union + running
-    * last-value — ONE shuffle on the key, no range self-join, which is the
-    * shape that survives 100 TB (a join-then-filter explodes on hot keys).
-    *
-    * Right value columns are appended with `asof_` prefix.
-    *
-    * The right values ride ONE nullable struct marker, non-null exactly on
-    * right rows, so the running `last(ignoreNulls)` fills the latest right
-    * ROW forward as a unit. Two failure modes a per-column fill has that
-    * this shape closes: a right row whose value column is genuinely NULL
-    * must NOT resurrect an older non-null value (the marker struct is
-    * non-null, wins the fill, and its field reads NULL — the as-of
-    * contract's answer), and right columns never enter the union under
-    * their own names, so left/right name collisions (same ts name, shared
-    * value-column names) cannot break the projection.
-    */
-  def asOfJoinBackward(left: DataFrame, right: DataFrame, key: String,
-      leftTs: String, rightTs: String): DataFrame = {
-    val valueCols = right.columns.filter(c => c != key && c != rightTs).toSeq
-    if (valueCols.isEmpty) return left
-    val rvType = org.apache.spark.sql.types.StructType(
-      valueCols.map(c => org.apache.spark.sql.types.StructField(
-        c, right.schema(c).dataType)))
-    val leftCols = left.columns.toSeq
-    val lTagged = left
-      .withColumn("__ts", col(leftTs))
-      .withColumn("__src", lit(1))
-      .withColumn("__rv", lit(null).cast(rvType))
-    val rTagged = leftCols.filterNot(_ == key).foldLeft(
-      right.select(col(key), col(rightTs).as("__ts"), lit(0).as("__src"),
-        struct(valueCols.map(col): _*).as("__rv")))(
-      (df, c) => df.withColumn(c, lit(null).cast(left.schema(c).dataType)))
-    val unioned = lTagged.unionByName(
-      rTagged.select(lTagged.columns.toIndexedSeq.map(col): _*))
-    // right rows sort before left rows at equal ts → inclusive (<=)
-    // semantics. A struct of the right value columns as the final sort term:
-    // multiple right rows tied on (key, ts) would otherwise rank in
-    // shuffle-arrival order and last() would pick a run-to-run-arbitrary one
-    // (review r14) — the struct tie-break makes the pick deterministic
-    // (greatest value struct wins), which the randomized-law spec's "any tie
-    // member" contract contains. Only ORDERABLE value columns participate:
-    // a MapType (or other unordered) column in the sort struct fails
-    // analysis outright, and this operator must keep accepting such schemas
-    // (advice r15) — those columns ride along in __rv but not in the order.
-    val orderableVals = valueCols.filter(c =>
-      org.apache.spark.sql.catalyst.expressions.RowOrdering.isOrderable(
-        right.schema(c).dataType))
-    val tieBreak =
-      if (orderableVals.isEmpty) Nil
-      else Seq(struct(orderableVals.map(c => col("__rv").getField(c)): _*))
-    val w = Window.partitionBy(col(key))
-      .orderBy(col("__ts") +: col("__src") +: tieBreak: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    unioned.withColumn("__rvf", last(col("__rv"), ignoreNulls = true).over(w))
-      .filter(col("__src") === 1)
-      .select(leftCols.map(col) ++
-        valueCols.map(c => col("__rvf").getField(c).as(s"asof_$c")): _*)
-  }
 
   /** First-wins keyed dedup over an explicit arrival order (deterministic,
     * unlike dropDuplicates — SURVEY §7.4.2). */
@@ -86,44 +27,6 @@ object Operators {
     df.withColumn("__rank", row_number().over(w))
       .filter(col("__rank") <= k)
       .withColumnRenamed("__rank", "rank")
-  }
-
-  /** Salted aggregation for skewed keys: spread each hot key over `buckets`
-    * partial groups, then merge — two small shuffles instead of one stuck
-    * straggler task. `aggs` must be algebraic (sum/count/min/max).
-    *
-    * The salt is DETERMINISTIC — xxhash64 over every column — so a
-    * speculative or retried task recomputes the identical partial-group
-    * assignment (a nondeterministic salt is harmless for algebraic merges
-    * but breaks silently if the pattern is copied into a non-algebraic
-    * context). Trade-off: fully identical rows share a salt; they spread
-    * only if anything (even one value column) differs, which holds for any
-    * realistic fact table — and a hot key of bit-identical rows reduces to
-    * a count, which partial aggregation already collapses map-side. */
-  def saltedAgg(df: DataFrame, key: String, buckets: Int,
-      aggs: Map[String, String]): DataFrame = {
-    // enforce the scaladoc's algebraic contract: a non-algebraic function
-    // (avg, percentile, count_distinct …) re-applied over partials is
-    // silently WRONG (unweighted avg-of-partial-avgs), not slower —
-    // loud rejection beats silent corruption (review r14)
-    val algebraic = Set("sum", "count", "min", "max")
-    val bad = aggs.values.filterNot(f => algebraic(f.toLowerCase)).toSeq
-    require(bad.isEmpty,
-      s"saltedAgg: non-algebraic aggregate(s) ${bad.mkString(", ")} — " +
-        "partial-then-merge is only correct for sum/count/min/max " +
-        "(decompose avg into sum+count at the call site)")
-    val salted = df.withColumn("__salt",
-      pmod(xxhash64(df.columns.map(col).toIndexedSeq: _*), lit(buckets.toLong)))
-    val partial = salted.groupBy(col(key), col("__salt"))
-      .agg(aggs.map { case (c, f) => expr(s"$f($c)").as(s"__p_$c") }.toSeq.head,
-        aggs.map { case (c, f) => expr(s"$f($c)").as(s"__p_$c") }.toSeq.tail: _*)
-    val remerge: Map[String, String] = aggs.map {
-      case (c, "count") => s"__p_$c" -> "sum"
-      case (c, f) => s"__p_$c" -> f
-    }
-    partial.groupBy(col(key))
-      .agg(remerge.map { case (c, f) => expr(s"$f($c)").as(c.stripPrefix("__p_")) }.toSeq.head,
-        remerge.map { case (c, f) => expr(s"$f($c)").as(c.stripPrefix("__p_")) }.toSeq.tail: _*)
   }
 
   /** E2 retry policy (reference src/common/utils.py:64-92,
@@ -395,12 +298,12 @@ object Operators {
     * this is the explicit form for pathological keys at 100 TB. */
   def saltedJoin(left: DataFrame, right: DataFrame, key: String,
       buckets: Int): DataFrame = {
-    // deterministic salt (xxhash64 over the whole row, same rule as
-    // saltedAgg): a retried/speculative map task recomputes the identical
-    // assignment — a positional/nondeterministic salt re-shuffles rows on
-    // partial stage re-execution, the classic lost-or-duplicated-rows
-    // hazard. Fully identical left rows share a salt; any differing column
-    // spreads them, which holds for any realistic fact table.
+    // deterministic salt (xxhash64 over the whole row): a
+    // retried/speculative map task recomputes the identical assignment —
+    // a positional/nondeterministic salt re-shuffles rows on partial stage
+    // re-execution, the classic lost-or-duplicated-rows hazard. Fully
+    // identical left rows share a salt; any differing column spreads them,
+    // which holds for any realistic fact table.
     val saltedLeft = left.withColumn("__salt",
       pmod(xxhash64(left.columns.map(col).toIndexedSeq: _*), lit(buckets.toLong)))
     val replicatedRight = right.withColumn("__salt",

@@ -43,10 +43,10 @@ object TextOps {
 
   /** docs with every k-token window reduced to a hash (q106/q107). md5 of
     * the joined window keeps the oracle bit-compatible (DuckDB and Spark
-    * emit identical lowercase hex for identical UTF-8 input); at production
-    * scale xxhash64 halves the hash width again. The `when` guard matters:
-    * Spark's `sequence(1, n)` with n <= 0 yields a DESCENDING sequence, not
-    * an empty one, so short docs must short-circuit to an empty array. */
+    * emit identical lowercase hex for identical UTF-8 input). The `when`
+    * guard matters: Spark's `sequence(1, n)` with n <= 0 yields a
+    * DESCENDING sequence, not an empty one, so short docs must
+    * short-circuit to an empty array. */
   private val winK = 8
 
   /** q108's subshard width: consecutive docs per packing unit. 32 on the
@@ -61,55 +61,34 @@ object TextOps {
     * 0 if ever moved below the registry. */
   private[graft] final val packShardDocs = 32L
 
-  /** Window-hash kernel selector for the substring-dedup family (q106/q107).
-    *
-    * "md5" (default): 32-hex-char strings, bit-compatible with the DuckDB
-    * oracle — the correctness-gate form. "xxh64": 8-byte longs — the
-    * production form. The window table is the dominant intermediate of
-    * substring dedup at 100 TB (every token position emits a value), and
-    * the md5 string is ~40+ bytes on the wire vs xxhash64's 8: the flag
-    * cuts that shuffle ~4-5× with zero plan change, because every consumer
-    * treats window values opaquely (equality/distinct/group only — q106
-    * counts, q107 counts; no query ever exposes the hash itself).
-    * WindowHashSpec asserts both modes produce identical dup stats on the
-    * fixture. Read per call, not cached at init, so tests can flip it. */
-  private[graft] def windowHashMode: String =
-    sys.props.get("graft.windowHash")
-      .orElse(sys.env.get("SPARK_GRAFT_WINDOW_HASH")).getOrElse("md5")
-
-  private def docWindows(s: SparkSession, d: String): DataFrame = {
-    val (winExpr, emptyType) = windowHashMode match {
-      case "xxh64" =>
-        (s"transform(sequence(1, size(toks) - ${winK - 1}), " +
-          s"i -> xxhash64(array_join(slice(toks, i, $winK), ' ')))",
-          "array<bigint>")
-      case "md5" =>
-        (s"transform(sequence(1, size(toks) - ${winK - 1}), " +
-          s"i -> md5(array_join(slice(toks, i, $winK), ' ')))",
-          "array<string>")
-      case other => throw new IllegalArgumentException(
-        s"graft.windowHash must be md5 or xxh64, got: $other")
-    }
+  /** Window-hash kernel of the substring-dedup family (q106/q107/q110/
+    * q121): md5 of each joined k-token window, 32 lowercase hex chars,
+    * bit-compatible with the DuckDB oracle. Every consumer treats window
+    * values opaquely (equality/distinct/group only; no query exposes the
+    * hash itself). md5 is 128-bit on purpose: a 64-bit window hash expects
+    * ~n²/2⁶⁵ false window matches over n windows, which stops being zero
+    * at corpus scale, and q110 would then cut spans that are not
+    * duplicates. */
+  private def docWindows(s: SparkSession, d: String): DataFrame =
     docTokens(s, d).withColumn("wins",
-      when(size(col("toks")) >= winK, expr(winExpr))
-        .otherwise(array().cast(emptyType)))
-  }
+      when(size(col("toks")) >= winK, expr(
+        s"transform(sequence(1, size(toks) - ${winK - 1}), " +
+          s"i -> md5(array_join(slice(toks, i, $winK), ' ')))"))
+        .otherwise(array().cast("array<string>")))
 
   // The per-doc window table is shared by the substring-dedup family
   // (q106 per-doc stats, q107 source matrix, q110 span removal) — the
   // tokenize+hash kernel is the expensive narrow stage, so it materializes
-  // once per (session, dir, hash-mode) in a staged slot (mode is the
-  // variant: a test flipping md5→xxh64 must rebuild, not reuse). One row
-  // per doc: (doc_id, source, n_windows incl. repeats, POSITIONAL wins —
-  // index = 0-based window start, q110's span coordinates — and distinct
-  // dwins). Keeping wins roughly doubles the cached width but saves q110 a
-  // full second tokenize+hash pass over the corpus (measured 5.1 s →
-  // expected ~1.5 s at sf0.1); at 100 TB this cache is the staged window
-  // table either way.
+  // once per (session, dir) in a staged slot. One row per doc: (doc_id,
+  // source, n_windows incl. repeats, POSITIONAL wins — index = 0-based
+  // window start, q110's span coordinates — and distinct dwins). Keeping
+  // wins roughly doubles the cached width but saves q110 a full second
+  // tokenize+hash pass over the corpus (measured 5.1 s → expected ~1.5 s at
+  // sf0.1); at 100 TB this cache is the staged window table either way.
   private val windowSlot = graft.Staged.cached("window_arrays_build")
 
   private def docWindowArrays(s: SparkSession, d: String): DataFrame =
-    windowSlot(s, d, windowHashMode)(graft.Staged.persistNow(
+    windowSlot(s, d)(graft.Staged.persistNow(
       docWindows(s, d).select(col("doc_id"), col("source"),
         size(col("wins")).cast("long").as("n_windows"),
         col("wins"), array_distinct(col("wins")).as("dwins"))))
@@ -119,11 +98,11 @@ object TextOps {
     * q110 (span removal) and q121 (novelty). Before this slot each of the
     * three rebuilt the identical corpus-scale aggregation; a real pipeline
     * materializes the frequency table once next to the window cache it
-    * derives from. Keyed on the window-hash mode like the window slot. */
+    * derives from. */
   private val windowFreqSlot = graft.Staged.cached("window_freq_build")
 
   private def windowFreq(s: SparkSession, d: String): DataFrame =
-    windowFreqSlot(s, d, windowHashMode)(graft.Staged.persistNow(
+    windowFreqSlot(s, d)(graft.Staged.persistNow(
       docWindowArrays(s, d)
         .select(col("doc_id"), explode(col("dwins")).as("w"))
         .groupBy(col("w")).agg(count(lit(1)).as("n_docs"))))
@@ -2954,11 +2933,10 @@ object TextOps {
     // SET similarity (reordered docs still match); this catches verbatim
     // spans inside otherwise-different documents.
     // 100 TB shape: the text never shuffles — windows leave the scan as
-    // fixed-width hashes (md5 here for oracle parity; xxhash64's 8 bytes in
-    // production), the frequency table is the one keyed shuffle, and hot
-    // boilerplate windows cost nothing extra in the join (freq is unique
-    // per window, so fanout is 1) while the skewed groupBy collapses
-    // map-side via partial aggregation.
+    // fixed-width md5 hashes, the frequency table is the one keyed
+    // shuffle, and hot boilerplate windows cost nothing extra in the join
+    // (freq is unique per window, so fanout is 1) while the skewed groupBy
+    // collapses map-side via partial aggregation.
     "q106_window_dedup" -> Q(
       run = (s, d) => {
         val base = docWindowArrays(s, d)
@@ -3116,13 +3094,13 @@ object TextOps {
     // corpus-duplicated 8-token window (hash in >= 2 docs — q106's freq
     // definition exactly) covers it; output is the rewritten token text plus
     // removal stats (n_spans = maximal removed runs).
-    // 100 TB shape: the freq/dup stages shuffle only fixed-width window
-    // hashes (the md5/xxh64 flag applies here too); the one corpus-sized
-    // shuffle is the doc_id-keyed rebuild join, which is inherent — the
-    // output IS the rewritten corpus — and even that is skipped when the
-    // dup-start table fits the broadcast threshold (duplication-
-    // proportional, measured via the localCheckpoint block size, same
-    // broadcastIfSmall gate as the dedup family).
+    // 100 TB shape: the freq/dup stages shuffle only fixed-width md5
+    // window hashes; the one corpus-sized shuffle is the doc_id-keyed
+    // rebuild join, which is inherent — the output IS the rewritten
+    // corpus — and even that is skipped when the dup-start table fits the
+    // broadcast threshold (duplication-proportional, measured via the
+    // localCheckpoint block size, same broadcastIfSmall gate as the dedup
+    // family).
     "q110_substring_removal" -> Q(
       run = (s, d) => {
         // corpus-duplicated window hashes, from the shared cached window
@@ -3644,9 +3622,9 @@ object TextOps {
     // this ranks and SELECTS by how much is fresh).
     // 100 TB shape: shares the staged window cache with q106/q107/q110
     // (tokenize+hash runs once); the frequency agg shuffles fixed-width
-    // window hashes only (md5/xxh64 flag applies); the per-source top-k is
-    // a window rank partitioned BY SOURCE — parallel across sources, and
-    // within a mega-source the rank input is one doc-level row each, not
+    // md5 window hashes only; the per-source top-k is a window rank
+    // partitioned BY SOURCE — parallel across sources, and within a
+    // mega-source the rank input is one doc-level row each, not
     // window-level.
     "q121_novelty_select" -> Q(
       run = (s, d) => {

@@ -49,14 +49,25 @@ class GoldenPipelineSpec extends SparkSpec {
     val row = readHtml("detail_page_fallbacks.html")
       .select(RH.leadRecord(col("html"), lit(43L), lit("u43")).as("r"))
       .select("r.*").head()
+    // all 15 fields pinned: this page is the only fixture that reaches the
+    // fallback selectors, so every field's value is an explicit expectation
+    assert(row.getAs[Long]("id_negocio") == 43L)
+    assert(row.getAs[String]("url") == "u43")
     assert(row.getAs[String]("nombre") == "Panadería La Espiga")
+    // the clock's next span also carries the address class; the first wins
+    assert(row.getAs[String]("direccion") == "Belgrano 567")
+    assert(row.getAs[scala.collection.Seq[String]]("telefonos").isEmpty)
     // text= param: percent-decoded, first digit run
     assert(row.getAs[String]("whatsapp") == "3427778888")
     assert(row.getAs[String]("sitio_web") == "http://laespiga.example.com")
     assert(row.getAs[String]("email") == "pedidos@laespiga.com")
+    assert(row.isNullAt(row.fieldIndex("facebook")))
+    assert(row.isNullAt(row.fieldIndex("instagram")))
     assert(row.getAs[String]("horarios") == "Sab 8-13") // Cerrado stripped
     assert(row.getAs[scala.collection.Seq[String]]("rubros").toSeq == Seq("Panaderías"))
+    assert(row.isNullAt(row.fieldIndex("descripcion")))
     assert(row.isNullAt(row.fieldIndex("latitud")))
+    assert(row.isNullAt(row.fieldIndex("longitud")))
   }
 
   test("B3 sparse page: every extractor degrades to null, none throws") {
@@ -89,34 +100,13 @@ class GoldenPipelineSpec extends SparkSpec {
     assert(byId(1).getAs[String]("url") == "https://www.guiacores.com.ar/index.php?r=search/detail&id=12")
   }
 
-  // ---- DOM parser path (-Dgraft.htmlParser=dom): the BeautifulSoup-
-  // tolerance twin. Suites run sequentially in one forked JVM, so the
-  // flag flip inside withDomParser cannot race another suite's plan build.
-  private def withDomParser[T](f: => T): T = {
-    sys.props("graft.htmlParser") = "dom"
-    try f finally sys.props.remove("graft.htmlParser")
-  }
-
-  test("B3 DOM path: reproduces the regex record on every well-formed page") {
-    for (page <- Seq("detail_page.html", "detail_page_fallbacks.html",
-        "detail_page_sparse.html")) {
-      val rx = readHtml(page)
-        .select(RH.leadRecord(col("html"), lit(1L), lit("u")).as("r")).head()
-      val dm = withDomParser {
-        readHtml(page)
-          .select(RH.leadRecord(col("html"), lit(1L), lit("u")).as("r")).head()
-      }
-      assert(dm == rx, s"$page: dom=$dm regex=$rx")
-    }
-  }
-
   test("DOM path: one parse per page across the full field surface (CSE)") {
-    // the claim written at DomHtml.raw: within one projection, whole-stage
-    // codegen's subexpression elimination evaluates the shared deterministic
-    // UDF once per row even though every field function builds its own
-    // raw(html) column. Measure it: 15 fields over 3 rows must cost 3
-    // parses, not 45. (A small multiple would mean CSE broke — the DOM
-    // path would silently parse per FIELD; fail loudly instead.)
+    // the claim written at ReferenceHtml.raw: within one projection,
+    // whole-stage codegen's subexpression elimination evaluates the shared
+    // deterministic UDF once per row even though every field function
+    // builds its own raw(html) column. Measure it: 15 fields over 3 rows must cost 3
+    // parses, not 45. (A small multiple would mean CSE broke — extraction
+    // would silently parse per FIELD; fail loudly instead.)
     // nonce-suffix each page: DomExtract's per-thread memo survives across
     // tests, so a worker thread that parsed these exact fixture strings in
     // an earlier test would return its memo without counting — unique
@@ -126,12 +116,10 @@ class GoldenPipelineSpec extends SparkSpec {
       .unionAll(readHtml("detail_page_fallbacks.html"))
       .unionAll(readHtml("detail_page_sparse.html"))
       .withColumn("html", concat(col("html"), lit(nonce)))
-    val before = graft.functions.DomHtml.parseCount
-    withDomParser {
-      df.select(RH.leadRecord(col("html"), lit(1L), lit("u")).as("rec"))
-        .select(col("rec.*")).collect()
-    }
-    val used = graft.functions.DomHtml.parseCount - before
+    val before = RH.parseCount
+    df.select(RH.leadRecord(col("html"), lit(1L), lit("u")).as("rec"))
+      .select(col("rec.*")).collect()
+    val used = RH.parseCount - before
     assert(used == 3, s"expected 3 parses for 3 rows x 15 fields, got $used")
   }
 
@@ -141,11 +129,9 @@ class GoldenPipelineSpec extends SparkSpec {
     // reordered/unquoted/single-quoted attributes, mixed-case names, extra
     // and reordered class tokens, a stray close tag, &amp; in a query
     // string, a <br> between the clock icon and its span, unclosed divs
-    val row = withDomParser {
-      readHtml("detail_page_malformed.html")
-        .select(RH.leadRecord(col("html"), lit(42L), lit("u42")).as("r"))
-        .select("r.*").head()
-    }
+    val row = readHtml("detail_page_malformed.html")
+      .select(RH.leadRecord(col("html"), lit(42L), lit("u42")).as("r"))
+      .select("r.*").head()
     assert(row.getAs[String]("nombre") == "Ferretería  El Tornillo")
     assert(row.getAs[String]("direccion") == "Av. San Martín 1234 - (3000) Santa Fe")
     assert(row.getAs[scala.collection.Seq[String]]("telefonos").toSeq ==
@@ -161,37 +147,18 @@ class GoldenPipelineSpec extends SparkSpec {
     assert(row.getAs[String]("descripcion") == "Venta de herramientas  y materiales.")
     assert(row.getAs[Double]("latitud") == -31.6333)
     assert(row.getAs[Double]("longitud") == -60.70)
-
-    // the measured regex gap on the SAME page (why the DOM path exists):
-    // every selector misses — the attribute order/quoting assumptions the
-    // canonical fixture satisfies are all violated here
-    val rx = readHtml("detail_page_malformed.html")
-      .select(RH.leadRecord(col("html"), lit(42L), lit("u42")).as("r"))
-      .select("r.*").head()
-    for (f <- Seq("nombre", "direccion", "whatsapp", "sitio_web", "email",
-        "facebook", "instagram", "horarios", "descripcion", "latitud",
-        "longitud"))
-      assert(rx.isNullAt(rx.fieldIndex(f)), s"regex unexpectedly read $f")
-    assert(rx.getAs[scala.collection.Seq[String]]("telefonos").isEmpty)
-    assert(rx.getAs[scala.collection.Seq[String]]("rubros").isEmpty)
   }
 
   test("H4 empty itemprop href falls through to the fa-cloud fallback " +
       "identically on both paths") {
     // an `<a itemprop="url" href="">` must not shadow the icon fallback:
-    // the regex path nulls the empty capture before coalesce; the DOM path
-    // must apply the same empty-is-absent rule or the two drift on real
-    // pages where the canonical fixture suite can't see it
+    // an empty href counts as absent, so the coalesce reaches the icon
     val df = Seq(
       """<html><body><a itemprop="url" href="">x</a>
         |<i class="fa fa-cloud"></i> <a class="search-result-link" href="https://fb.example">w</a>
         |</body></html>""".stripMargin('|')).toDF("html")
-    val rx = df.select(RH.sitioWeb(col("html"))).head().getString(0)
-    val dm = withDomParser {
-      df.select(RH.sitioWeb(col("html"))).head().getString(0)
-    }
-    assert(rx == "https://fb.example")
-    assert(dm == rx)
+    assert(df.select(RH.sitioWeb(col("html"))).head().getString(0) ==
+      "https://fb.example")
   }
 
   test("B3 malformed search results: DOM path reads all 5 cards, regex " +
@@ -199,28 +166,15 @@ class GoldenPipelineSpec extends SparkSpec {
     val page = readHtml("search_results_malformed.html")
     // F14 is a text-level law — markup shape cannot break it
     assert(page.select(RH.totalMatches(col("html"))).head().getLong(0) == 735L)
-    val dom = withDomParser {
-      page.select(posexplode(RH.resultCards(col("html"), base))
-          .as(Seq("seq", "c")))
-        .select(col("seq"), col("c.id_negocio"), col("c.url")).collect()
-    }
+    val dom = page.select(posexplode(RH.resultCards(col("html"), base))
+        .as(Seq("seq", "c")))
+      .select(col("seq"), col("c.id_negocio"), col("c.url")).collect()
     assert(dom.length == 5)
     assert(dom.map(r => if (r.isNullAt(1)) -1L else r.getLong(1)).toSeq ==
       Seq(11L, 12L, -1L, 11L, 13L))
     assert(dom(0).getString(2) == base + "index.php?r=search/detail&id=11")
     assert(dom(1).getString(2) ==
       "https://www.guiacores.com.ar/index.php?r=search/detail&id=12")
-    // regex path on the same page: the two cards with reordered/extra
-    // class tokens vanish outright, and the unquoted-span card does worse —
-    // its non-greedy match bleeds into the NEXT card and claims that
-    // card's href, so 5 cards collapse to 2 matches ([11], [13]) with one
-    // card silently mis-attributed. This is the silent-miss mode the DOM
-    // path exists to close.
-    val rx = page
-      .select(explode(RH.resultCards(col("html"), base)).as("c"))
-      .select(col("c.id_negocio")).collect()
-    assert(rx.length == 2, s"regex card count drifted: ${rx.length}")
-    assert(rx.map(_.getLong(0)).toSeq == Seq(11L, 13L))
   }
 
   test("B3 incremental pages: per-batch new-key counts reach quiescence (ST2/ST3)") {

@@ -1,113 +1,11 @@
 package graft
 
-import java.sql.Timestamp
-
 import org.apache.spark.sql.functions._
 import graft.operators.Operators
 
 class OperatorsSpec extends SparkSpec {
 
   import spark.implicits._
-
-  private def ts(m: Int) = new Timestamp(1700000400000L + m * 60000L)
-
-  test("asOfJoinBackward picks the latest right row at or before left ts") {
-    val trades = Seq((1L, ts(10), 100.0), (1L, ts(30), 101.0), (2L, ts(5), 50.0))
-      .toDF("key", "trade_ts", "px")
-    val quotes = Seq((1L, ts(9), 99.5), (1L, ts(10), 99.9), (1L, ts(29), 100.9),
-      (2L, ts(6), 49.9))
-      .toDF("key", "quote_ts", "bid")
-    val joined = Operators.asOfJoinBackward(trades, quotes, "key", "trade_ts", "quote_ts")
-      .orderBy("key", "trade_ts")
-      .select($"key", $"px", $"asof_bid").as[(Long, Double, Option[Double])].collect()
-    assert(joined.sameElements(Array(
-      (1L, 100.0, Some(99.9)),   // ts(10): quote at same ts wins (inclusive)
-      (1L, 101.0, Some(100.9)),  // ts(30): latest prior quote ts(29)
-      (2L, 50.0, None))))        // ts(5): no quote yet
-  }
-
-  test("asOfJoinBackward: a NULL right value is the answer, not a gap to " +
-      "fill from an older row") {
-    // the as-of contract is "latest right ROW at or before left.ts" — if
-    // that row's value column is NULL, asof_* must read NULL; a per-column
-    // ignoreNulls fill would silently resurrect the older 10.0
-    val left = Seq((1L, ts(30))).toDF("key", "lts")
-    val right = Seq((1L, ts(10), Some(10.0)), (1L, ts(20), None))
-      .toDF("key", "rts", "price")
-    val out = Operators.asOfJoinBackward(left, right, "key", "lts", "rts")
-      .select($"key", $"asof_price").as[(Long, Option[Double])].collect()
-    assert(out.sameElements(Array((1L, None))))
-  }
-
-  test("asOfJoinBackward equals the brute-force as-of law on randomized " +
-      "inputs (nulls, ties, shared keys)") {
-    // property law: for every left row, the asof_* values are exactly the
-    // latest right row's (ts <= left.ts, right-at-equal-ts wins), nulls
-    // preserved — checked against a driver-side brute force on a seeded
-    // random corpus dense in ties and null values
-    val rnd = new scala.util.Random(42)
-    val leftRows = Seq.tabulate(200)(i =>
-      (rnd.nextInt(8).toLong, ts(rnd.nextInt(40)), i.toLong))
-    val rightRows = Seq.tabulate(150)(_ =>
-      (rnd.nextInt(8).toLong, ts(rnd.nextInt(40)),
-        if (rnd.nextInt(4) == 0) None else Some(rnd.nextInt(100).toDouble)))
-    val left = leftRows.toDF("key", "lts", "row_id")
-    val right = rightRows.toDF("key", "rts", "price")
-    val got = Operators.asOfJoinBackward(left, right, "key", "lts", "rts")
-      .select($"row_id", $"asof_price")
-      .as[(Long, Option[Double])].collect().toMap
-    leftRows.foreach { case (k, lt, id) =>
-      val cands = rightRows.filter(r => r._1 == k && !r._2.after(lt))
-      if (cands.isEmpty)
-        assert(got(id).isEmpty, s"key=$k lts=$lt: got ${got(id)}, want none")
-      else {
-        // rows tied at the max qualifying ts rank arbitrarily among
-        // themselves (as with any rank) — accept any of their values,
-        // INCLUDING a null (a latest-row null is the answer, never a gap
-        // to fill from an older row)
-        val mx = cands.map(_._2.getTime).max
-        val valid = cands.filter(_._2.getTime == mx).map(_._3).toSet
-        assert(valid.contains(got(id)),
-          s"key=$k lts=$lt: got ${got(id)}, want one of $valid")
-      }
-    }
-  }
-
-  test("asOfJoinBackward: left and right may share the timestamp name " +
-      "(and value-column names)") {
-    val left = Seq((1L, ts(30), 7.0)).toDF("key", "ts", "price")
-    val right = Seq((1L, ts(20), 42.0)).toDF("key", "ts", "price")
-    val out = Operators.asOfJoinBackward(left, right, "key", "ts", "ts")
-      .select($"key", $"price", $"asof_price")
-      .as[(Long, Double, Option[Double])].collect()
-    assert(out.sameElements(Array((1L, 7.0, Some(42.0)))))
-  }
-
-  test("asOfJoinBackward accepts non-orderable right value columns " +
-      "(MapType rides along, excluded from the tie-break order)") {
-    // regression (advice r15): the deterministic (key, ts)-tie-break sorts
-    // by a struct of right value columns — a MapType column in that struct
-    // fails analysis, but map-valued payloads are a legitimate schema for
-    // a generic as-of join. Non-orderable columns must still be CARRIED,
-    // just not ORDERED by.
-    val left = Seq((1L, ts(30))).toDF("key", "lts")
-    val right = Seq(
-      (1L, ts(10), Map("a" -> 1), 5.0),
-      (1L, ts(20), Map("b" -> 2), 6.0))
-      .toDF("key", "rts", "attrs", "score")
-    val out = Operators.asOfJoinBackward(left, right, "key", "lts", "rts")
-      .select($"key", $"asof_attrs", $"asof_score")
-      .as[(Long, Map[String, Int], Double)].collect()
-    assert(out.sameElements(Array((1L, Map("b" -> 2), 6.0))))
-    // all-non-orderable values: tie-break degrades to (ts, src) only —
-    // the join must still analyze and return the latest row's map
-    val rightAllMaps = Seq((1L, ts(20), Map("x" -> 9)))
-      .toDF("key", "rts", "attrs")
-    val out2 = Operators.asOfJoinBackward(left, rightAllMaps,
-      "key", "lts", "rts")
-      .select($"asof_attrs").as[Map[String, Int]].collect()
-    assert(out2.sameElements(Array(Map("x" -> 9))))
-  }
 
   test("dedupFirstWins is deterministic under arrival order") {
     val df = Seq((1L, 5, "late"), (1L, 1, "first"), (2L, 3, "only"))
@@ -126,25 +24,6 @@ class OperatorsSpec extends SparkSpec {
     assert(counts.forall(_ == 2))
     assert(!top2.queryExecution.executedPlan.toString.contains("TakeOrderedAndProject")
       || true) // window form: per-group rank, no global order
-  }
-
-  test("saltedAgg equals plain agg on algebraic functions") {
-    val df = Tables.lineitem(spark, sf)
-    val salted = Operators.saltedAgg(df, "l_returnflag", 8,
-      Map("l_quantity" -> "sum"))
-      .orderBy("l_returnflag")
-      .select($"l_returnflag", $"l_quantity".cast("decimal(20,2)"))
-    val plain = df.groupBy("l_returnflag")
-      .agg(sum($"l_quantity").cast("decimal(20,2)").as("l_quantity"))
-      .orderBy("l_returnflag")
-    assert(salted.collect().sameElements(plain.collect()))
-    // retry safety: the salt is a pure function of the row, so the whole
-    // plan must be deterministic — a speculative/retried task recomputes
-    // the IDENTICAL partial-group assignment (a nondeterministic salt is
-    // only accidentally safe for algebraic merges)
-    val nondet = salted.queryExecution.analyzed.flatMap(
-      _.expressions.filterNot(_.deterministic))
-    assert(nondet.isEmpty, s"nondeterministic salt exprs: $nondet")
   }
 
   test("accumulator counts per-record drops in one pass (A7 run statistics)") {
@@ -293,9 +172,9 @@ class OperatorsSpec extends SparkSpec {
     val plain = left.join(right, Seq("k"))
     assert(auto.count() == plain.count())
     assert(auto.agg(sum($"lv" * $"rv")).head() == plain.agg(sum($"lv" * $"rv")).head())
-    // retry safety: like saltedAgg, the salt must be a pure function of the
-    // row — a partial stage re-execution with a positional salt re-shuffles
-    // rows across already-committed reducers (lost/duplicated rows)
+    // retry safety: the salt must be a pure function of the row — a
+    // partial stage re-execution with a positional salt re-shuffles rows
+    // across already-committed reducers (lost/duplicated rows)
     val nondet = auto.queryExecution.analyzed.flatMap(
       _.expressions.filterNot(_.deterministic))
     assert(nondet.isEmpty, s"nondeterministic salt exprs: $nondet")

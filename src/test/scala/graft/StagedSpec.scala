@@ -116,19 +116,7 @@ class StagedSpec extends SparkSpec {
 
   test("no hand-written staged-table slot (private var ...Cache) under " +
     "src/main/scala/graft") {
-    val root = java.nio.file.Paths.get("src/main/scala/graft")
-    assert(java.nio.file.Files.isDirectory(root), s"run from the repo root: $root")
-    val slotVar = """private\s+var\s+\w*Cache""".r
-    val files = java.nio.file.Files.walk(root)
-    val hits = try {
-      import scala.jdk.CollectionConverters._
-      files.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-        .flatMap { f =>
-          java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.collect {
-            case (l, i) if slotVar.findFirstIn(l).isDefined => s"$f:${i + 1}: ${l.trim}"
-          }
-        }
-    } finally files.close()
+    val hits = SourceScan.hits("""private\s+var\s+\w*Cache""".r)
     assert(hits.isEmpty,
       s"use a graft.Staged slot instead of a hand-written cache:\n${hits.mkString("\n")}")
   }
