@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   // Pass count is 3 FULL passes since round 13 (min per query across all
   // three). History: streaming drains always needed min-of-3 (2-3× state-
@@ -14,45 +13,19 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // same session semantics as Verify/PlanDump/tests: the NTZ→TIMESTAMP
-      // cast in Tables.normalizeEventsTs reads differently under a non-UTC
-      // host zone, and the bench must time the verified plans, not variants
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Harness.envCpus
+    val spark = Harness.session(cpus)
     // spike attribution (GC vs spill vs host): every timed region below also
     // records task-metric deltas, written per pass into BENCH_DETAIL
     MetricsTap.install(spark.sparkContext)
-    // untimed warmup at the smallest fixture: every query shape runs once so
-    // whole-stage codegen compilation + JIT warm up off the clock (generated
-    // code is schema-dependent, not path-dependent, so it carries over to the
-    // timed runs; ~50% of a cold one-shot run is this compilation cost)
-    val warmDir = {
-      val small = new java.io.File("/root/testdata/sf0.001")
-      if (small.isDirectory) small.getAbsolutePath else sfDir
-    }
     // SPARK_GRAFT_ONLY=q24_json_extract,q71_map_explode runs an isolated
     // subset — the A/B knob for separating a real per-query regression from
     // whole-suite session pressure (same JVM/session/warmup protocol)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    only.foreach { names => // fail fast: a typo'd name would otherwise
-      val unknown = names -- SparkEntry.queries.keySet // silently A/B an
-      require(unknown.isEmpty, // empty suite as a huge "speedup"
-        s"SPARK_GRAFT_ONLY names not in the registry: ${unknown.mkString(",")}")
-    }
-    val queries = only match {
-      case Some(names) => SparkEntry.queries.filter(kv => names(kv._1))
-      case None => SparkEntry.queries
-    }
-    queries.values.foreach { fn =>
-      try fn(spark, warmDir).count() catch { case _: Throwable => () }
-    }
+    val only = sys.env.get("SPARK_GRAFT_ONLY").map(Harness.select)
+    val queries = SparkEntry.queries
+    val names = only.getOrElse(queries.keys.toSeq).sorted
+    Harness.warm(spark, names,
+      if (new java.io.File(Harness.WarmDir).isDirectory) Harness.WarmDir else sfDir)
     // Session-storage telemetry, one sample per pass boundary: persistent
     // RDD count, storage bytes (mem + disk), and unreleased scoped
     // checkpoints. This is the eviction-pressure gauge — round 6's cross-
@@ -98,7 +71,7 @@ object Bench {
       scala.collection.mutable.LinkedHashMap[String, (Double, Double)]()
     def boundary(label: String): Unit = {
       logStorage(label)
-      anchors(label) = HostAnchor.measure(cpus.toInt)
+      anchors(label) = HostAnchor.measure(cpus)
     }
     boundary("warmup")
     // deterministic name order (also: q35 primes the shared shingle cache
@@ -119,41 +92,8 @@ object Bench {
     // ran under, not just its endpoints.
     val inPassAnchors = Seq.fill(3)(
       scala.collection.mutable.ArrayBuffer.empty[Double])
-    var passIdx = -1 // 0-based; set by the p1/p2/p3 calls below
-    def pass(keep: String => Boolean): Seq[(String, Double)] = {
-      passIdx += 1
-      Staged.releaseAll()
-      Checkpoints.releaseScoped()
-      // pass boundary, off the clock: a driver GC lets the ContextCleaner
-      // reclaim any block whose only remaining reference was weak (the
-      // registry never pins — see Checkpoints) — without it, storage
-      // reclamation in a memory-tight grading environment waits on an
-      // incidental GC mid-pass, which is exactly when it hurts
-      System.gc()
-      var sinceGc = 0
-      queries.toSeq.sortBy(_._1).filter(kv => keep(kv._1)).flatMap { case (name, fn) =>
-        // previous query's scoped checkpoint scratch dies OFF the clock —
-        // the timed region measures the query, not the session's garbage
-        Checkpoints.releaseScoped()
-        // Periodic hygiene full GC, off the clock (round-13 fix for the r12
-        // cross-pass degradation, measured not guessed): dead broadcasts /
-        // checkpoint blocks stay RESIDENT in the block manager until a
-        // driver full GC clears their weak refs for the ContextCleaner, and
-        // an 8 GB heap running short queries almost never full-GCs on its
-        // own — so residency grew for a whole pass and jaccard_pairs_build
-        // (mid-pass, biggest shuffle) degraded 3.5→8.6→28.9 s while live
-        // heap and RDD storage stayed bounded. With forced GCs in the
-        // session the same build measured FLAT (8.6 cold → 4.8 → 4.6 s,
-        // r13 probe run). This tick is the off-the-clock local-mode twin of
-        // spark.cleaner.periodicGC.interval (default 30 min — never inside
-        // a pass), placed between queries so no timed region pays the
-        // pause. A long-lived production session sets that conf instead.
-        sinceGc += 1
-        if (sinceGc >= 24) {
-          sinceGc = 0; System.gc()
-          if (passIdx >= 0 && passIdx < 3)
-            inPassAnchors(passIdx) += HostAnchor.parallel(cpus.toInt)
-        }
+    def pass(samples: scala.collection.mutable.ArrayBuffer[Double]) =
+      Harness.pass(names, () => samples += HostAnchor.parallel(cpus)) { name =>
         val m0 = MetricsTap.snapshot() // flushes the bus — off the clock
         val b0 = Staged.buildStageTotals
         val bm0 = Staged.buildMetricTotals
@@ -162,7 +102,7 @@ object Bench {
         // fail-fast-small, so min() would otherwise make a broken suite
         // look like a speedup (exactly the round-9 fixture-regen shape —
         // every events query analysis-failing in milliseconds)
-        try { fn(spark, sfDir).count() }
+        try { queries(name)(spark, sfDir).count() }
         catch { case t: Throwable => failed.synchronized {
           failed(name) = t.getClass.getSimpleName } }
         val dt = (System.nanoTime() - t0) / 1e9
@@ -208,11 +148,10 @@ object Bench {
           qRow +: stageDelta.toSeq.sortBy(_._1)
             .map { case (k, v) => s"stage:$k" -> v }
         }
-      }
-    }
-    val p1 = pass(_ => true); boundary("pass1")
-    val p2 = pass(_ => true); boundary("pass2")
-    val p3 = pass(_ => true); boundary("pass3")
+      }.flatten
+    val p1 = pass(inPassAnchors(0)); boundary("pass1")
+    val p2 = pass(inPassAnchors(1)); boundary("pass2")
+    val p3 = pass(inPassAnchors(2)); boundary("pass3")
     // a failed query's fail-fast wall time (often milliseconds) must not
     // flow into min()/total and make a broken suite read as fast — failures
     // are reported in `failed`/n_failed only, never in the timing record
@@ -253,18 +192,6 @@ object Bench {
       Seq(passAnchor(1), passAnchor(2), passAnchor(3)),
       HostAnchor.NominalParallelMs)
     def fmt(v: Double) = f"$v%.3f"
-    // env-derived strings (sfDir) and exception messages can carry quotes/
-    // backslashes — escape them or the whole record stops being parseable
-    // JSON (the same rule app.Main's envelope already applies)
-    def jstr(s: String): String = s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
     def toJson(rs: Seq[(String, Double)]) = rs
       .map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
     val total = results.map(_._2).sum
@@ -296,8 +223,8 @@ object Bench {
       .mkString("{", ",", "}")
     // subset marker: a SPARK_GRAFT_ONLY record must never be mistaken for a
     // full-suite total by a reader of BENCH_DETAIL.json
-    val onlyMark = only.map(names =>
-      s""","only":[${names.toSeq.sorted.map("\"" + _ + "\"").mkString(",")}]""")
+    val onlyMark = only.map(_ =>
+      s""","only":[${names.map("\"" + _ + "\"").mkString(",")}]""")
       .getOrElse("")
     val metricsJson = qMetrics.toSeq.sortBy(_._1)
       .map { case (k, snaps) =>
@@ -306,7 +233,7 @@ object Bench {
     // failures surface in BOTH records: the driver's tail parser sees
     // n_failed on the compact line, the judge sees names in the detail
     val failedJson = failed.toSeq.sortBy(_._1)
-      .map { case (k, v) => "\"" + k + "\":\"" + jstr(v) + "\"" }.mkString("{", ",", "}")
+      .map { case (k, v) => "\"" + k + "\":" + Harness.jsonStr(v) }.mkString("{", ",", "}")
     val failMark = if (failed.isEmpty) "" else s""","n_failed":${failed.size}"""
     val anchorsJson = anchors.toSeq
       .map { case (k, (s, p)) =>
@@ -335,7 +262,7 @@ object Bench {
       suspectClustering.map(fmt).getOrElse("null")
     val anchorBlock =
       s""","anchors":$anchorsJson,"anchor_nominal":{"single_ms":${fmt(HostAnchor.NominalSingleMs)},"par_ms":${fmt(HostAnchor.NominalParallelMs)}},"pass_slowdowns":$slowdownsJson,"pass_valid":$passValidJson,"anchor_samples_par_ms":$samplesJson,"degraded_fallback_rows":$fallbackJson,"window_suspect_rows":$suspectJson,"window_suspect_clustering":$clusteringJson,"queries_norm":${toJson(resultsNorm)},"total_norm":${fmt(totalNorm)}"""
-    val full = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_passes":3,"queries":${toJson(results)},"queries_passes":$passesJson,"stages":$stages,"query_metrics":$metricsJson,"failed":$failedJson$failMark$anchorBlock,"storage":[${storageLog.mkString(",")}]$onlyMark,"sf":"${jstr(sfDir)}"}"""
+    val full = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_passes":3,"queries":${toJson(results)},"queries_passes":$passesJson,"stages":$stages,"query_metrics":$metricsJson,"failed":$failedJson$failMark$anchorBlock,"storage":[${storageLog.mkString(",")}]$onlyMark,"sf":${Harness.jsonStr(sfDir)}}"""
     // subset runs go to their own file: the full-suite BENCH_DETAIL.json is
     // the graded record and a debugging subset must never clobber it
     val detailFile =
@@ -348,9 +275,7 @@ object Bench {
     // real query from the capped top-25 window the driver's tail parses
     val queryRows = results.filterNot(_._1.startsWith("stage:"))
     val slow = queryRows.sortBy(-_._2).take(25).sortBy(_._1)
-    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","total_norm":${fmt(totalNorm)},"pass_valid":$passValidJson,"queries":${toJson(slow)},"sf":"${jstr(sfDir)}","n_queries":${queryRows.size}$failMark$onlyMark,"detail":"$detailFile"}""")
-    Staged.releaseAll()
-    Checkpoints.releaseScoped()
-    spark.stop()
+    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","total_norm":${fmt(totalNorm)},"pass_valid":$passValidJson,"queries":${toJson(slow)},"sf":${Harness.jsonStr(sfDir)},"n_queries":${queryRows.size}$failMark$onlyMark,"detail":"$detailFile"}""")
+    Harness.close(spark)
   }
 }

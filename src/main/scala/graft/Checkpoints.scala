@@ -22,8 +22,8 @@ import org.apache.spark.sql.{DataFrame, GraftRddBridge}
   *    frozen-pid table, q76/q96/q103's multi-consumer stage tables) go
   *    through [[localCheckpoint]], which registers the backing RDD; the
   *    session driver calls [[releaseScoped]] once the query's action has
-  *    consumed the result (Bench: between queries, off the clock; Verify:
-  *    after each parquet write).
+  *    consumed the result ([[Harness.pass]]: before each next query, off
+  *    the clock).
   *  - Loop rounds that supersede each other (label propagation, BPE merge
   *    passes) release the dead round inline via [[release]] — blocks from
   *    round k-1 die as soon as round k is materialized, so a 64-round

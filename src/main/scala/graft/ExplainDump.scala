@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Per-query `.explain("formatted")` dumps for the optimization-round
@@ -11,8 +10,8 @@ import org.apache.spark.sql.execution.ExplainMode
   * Each query is EXECUTED first (collect) so the printed AdaptiveSparkPlan is
   * the AQE-final one — Exchange counts, join strategies and AQEShuffleRead
   * nodes as they actually ran, not the pre-execution initial plan.
-  * Session configs mirror Bench (same shuffle partitions, UTC, no UI) so the
-  * dumped plans are the shapes the bench times.
+  * The session is Bench's ([[Harness.session]]), so the dumped plans are
+  * the shapes the bench times.
   */
 object ExplainDump {
   def main(args: Array[String]): Unit = {
@@ -21,29 +20,17 @@ object ExplainDump {
     require(args.length >= 4,
       "usage: ExplainDump <sfDir> <outDir> <suffix> <q1,q2,..>")
     val Array(sfDir, outDir, suffix) = args.take(3)
-    val names = args(3).split(",").map(_.trim).filter(_.nonEmpty)
-    val unknown = names.filterNot(SparkEntry.registry.contains)
-    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.maxMetadataStringLength", "200")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val names = Harness.select(args(3))
+    val spark = Harness.session(Harness.envCpus)
     new java.io.File(outDir).mkdirs()
-    names.foreach { name =>
+    Harness.pass(names) { name =>
       val df = SparkEntry.registry(name).run(spark, sfDir)
       df.collect() // finalize AQE
       val s = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(s"$outDir/$name$suffix.txt"), s)
       println(s"[explain] wrote $outDir/$name$suffix.txt")
-      Checkpoints.releaseScoped()
     }
-    Staged.releaseAll()
-    spark.stop()
+    Harness.close(spark)
   }
 }

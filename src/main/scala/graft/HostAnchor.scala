@@ -88,6 +88,16 @@ object HostAnchor {
   /** Boundary measurement: (single_ms, parallel_ms). */
   def measure(threads: Int): (Double, Double) = (single(), parallel(threads))
 
+  /** A 32-thread boundary measurement, printed as `<tag> host-anchor <at>`
+    * beside the nominals, so a stress or scale log carries its own
+    * host-state evidence. */
+  def report(tag: String, at: String): (Double, Double) = {
+    val (sg, par) = measure(32)
+    println(f"$tag host-anchor $at: single ${sg}%.0f ms, par32 ${par}%.0f ms " +
+      f"(nominal ${NominalSingleMs}%.0f / ${NominalParallelMs}%.0f)")
+    (sg, par)
+  }
+
   /** Calibration main: prints per-run times and the min, for re-deriving the
     * nominals when the grading host changes. Not part of any graded path. */
   def main(args: Array[String]): Unit = {

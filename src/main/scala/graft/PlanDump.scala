@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Writes PLANS.md: the AQE-final physical plan of each headline query, so
   * the scale-critical shapes (pushdown, broadcasts, two-phase aggs, salted
   * keys, TakeOrderedAndProject) can be reviewed without re-running Spark.
@@ -50,21 +48,14 @@ object PlanDump {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outFile) = args.take(2)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.maxMetadataStringLength", "200")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
+    val spark = Harness.session(32)
     val sb = new StringBuilder
     sb ++= "# PLANS — AQE-final physical plans of the headline queries\n\n"
     sb ++= s"Generated by `graft.PlanDump` at `$sfDir`. Each section shows the\n"
     sb ++= "executed (adaptive-final) plan; the one-line note names the shape that\n"
     sb ++= "makes the query survive a 100 TB scale-up (asserted in PlanSpec).\n"
-    headline.foreach { case (name, note) =>
+    val notes = headline.toMap
+    Harness.pass(headline.map(_._1)) { name =>
       val df = SparkEntry.registry(name).run(spark, sfDir)
       df.collect() // finalize AQE so the printed plan is the executed one
       val plan = df.queryExecution.executedPlan.toString
@@ -72,12 +63,11 @@ object PlanDump {
         // every node pre-AQE and doubles the artifact for no review value
         .split("\\+\\- == Initial Plan ==").head
         .linesIterator.takeWhile(_.trim.nonEmpty).mkString("\n")
-      sb ++= s"\n## $name\n\n$note\n\n```\n$plan\n```\n"
+      sb ++= s"\n## $name\n\n${notes(name)}\n\n```\n$plan\n```\n"
     }
-    Staged.releaseAll()
     java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
       sb.toString.getBytes("UTF-8"))
     println(s"[plandump] wrote $outFile (${headline.size} plans)")
-    spark.stop()
+    Harness.close(spark)
   }
 }

@@ -8,9 +8,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the cooccur pair spectrum, the aHash class table, the tumbling drain.
   * In a real pipeline each is written once and every consumer reads it;
   * here the slot holds it for the session and [[Staged.releaseAll]] frees
-  * it at run or pass boundaries (Bench, Verify, the harness mains).
+  * it at run or pass boundaries ([[Harness.pass]], [[Harness.close]]).
   *
-  * One live entry per slot, keyed by (session identity, dir, variant):
+  * One live entry per slot, keyed by (session identity, dir):
   * switching fixture dirs (Bench warms at sf0.001, times at sf0.1) frees
   * the stale entry instead of pinning it for the session lifetime. The
   * laws, pinned once for every slot by StagedSpec:
@@ -27,31 +27,30 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * table, [[Checkpoints.release]] for a plain localCheckpoint (unpersist
   * frees nothing there), a no-op for driver-held memory-sink rows. */
 final class Staged[A] private (val name: String, free: A => Unit) {
-  private var slot: Option[(SparkSession, String, String, A)] = None
+  private var slot: Option[(SparkSession, String, A)] = None
 
-  /** The value staged for (s, d, variant), built by `build` on a miss. */
-  def apply(s: SparkSession, d: String, variant: String = "")(build: => A): A =
+  /** The value staged for (s, d), built by `build` on a miss. */
+  def apply(s: SparkSession, d: String)(build: => A): A =
     Staged.synchronized {
-      peek(s, d, variant).getOrElse {
+      peek(s, d).getOrElse {
         release()
         val v = Staged.timed(name)(build)
-        slot = Some((s, d, variant, v))
+        slot = Some((s, d, v))
         v
       }
     }
 
-  /** The staged value for (s, d, variant), without building. */
-  def peek(s: SparkSession, d: String, variant: String = ""): Option[A] =
+  /** The staged value for (s, d), without building. */
+  def peek(s: SparkSession, d: String): Option[A] =
     Staged.synchronized {
-      slot.collect { case (ss, dd, vv, v)
-        if (ss eq s) && dd == d && vv == variant => v }
+      slot.collect { case (ss, dd, v) if (ss eq s) && dd == d => v }
     }
 
   /** Empty the slot, then free what it held. */
   def release(): Unit = Staged.synchronized {
     val prev = slot
     slot = None
-    prev.foreach(e => free(e._4))
+    prev.foreach(e => free(e._3))
   }
 
   /** Release and leave the registry — for slots that are not module
@@ -101,6 +100,11 @@ object Staged {
 
   /** Names of the registered slots, in registration order. */
   def names: Seq[String] = slots.synchronized(slots.keys.toList)
+
+  /** Names of the slots that hold a value now. */
+  private[graft] def held: Seq[String] = synchronized {
+    slots.synchronized(slots.values.toList).filter(_.slot.isDefined).map(_.name)
+  }
 
   /** Free every registered slot (end of run / pass boundary). Per-slot
     * isolation: each slot frees a DIFFERENT table, so one throwing free
@@ -163,7 +167,6 @@ object Staged {
   }
 
   private val frameChildNs = scala.collection.mutable.Stack[Long]()
-  private val heapProbe = sys.env.contains("SPARK_GRAFT_HEAPPROBE")
   private def timed[T](name: String)(f: => T): T = synchronized {
     // Bench runs also attribute WHY per stage (GC vs spill — see MetricsTap
     // scaladoc): deltas are INCLUSIVE of nested builds (no exclusive-time
@@ -203,23 +206,6 @@ object Staged {
         stageMetricSums(name) = MetricsTap.Snap(
           prev.gcMs + d.gcMs, prev.spillMemBytes + d.spillMemBytes,
           prev.spillDiskBytes + d.spillDiskBytes)
-        // Diagnosis-only live-set probe (SPARK_GRAFT_HEAPPROBE=1): full GC +
-        // used-heap right after the build, off the stage clock (elapsed is
-        // already taken) and credited to the enclosing frame like the flush.
-        // NOT enabled on graded runs — the forced GC costs ~0.3 s inside the
-        // triggering query's timed region. Exists to localize cross-pass
-        // build degradation (r12: jaccard_pairs_build 3.5→28.9 s with
-        // bounded storage counts) to live-heap growth vs something else.
-        if (heapProbe) {
-          val g0 = System.nanoTime()
-          System.gc()
-          val rt = Runtime.getRuntime
-          val gNs = System.nanoTime() - g0
-          if (frameChildNs.nonEmpty)
-            frameChildNs.push(frameChildNs.pop() + gNs)
-          recordStat(s"${name}_live_heap_mb",
-            (rt.totalMemory() - rt.freeMemory()).toDouble / (1 << 20))
-        }
       }
       r
     } catch { // pop the frame on failure too, or the orphan entry corrupts

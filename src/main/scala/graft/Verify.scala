@@ -1,59 +1,35 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB oracle compare (tools/hashcheck.py).
+  *
+  * Usage: runMain graft.Verify <sfDir> <outDir> [q1,q2,..]; the optional
+  * third argument dumps only those exact registry names (a local
+  * iteration aid; with two args every registered query is dumped). */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
-    // optional 3rd arg: comma-separated name prefixes to dump (local iteration
-    // aid; the driver always calls with exactly two args = full dump)
-    val nameFilter: String => Boolean = args.drop(2).headOption match {
-      case Some(prefixes) =>
-        val ps = prefixes.split(",").toSeq; n => ps.exists(n.startsWith)
-      case None => _ => true
-    }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val names = args.drop(2).headOption.map(Harness.select)
+      .getOrElse(SparkEntry.queries.keys.toSeq).sorted
+    val spark = Harness.session(Harness.envCpus)
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.filter(kv => nameFilter(kv._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+    val queries = SparkEntry.queries
+    Harness.pass(names) { name =>
+      try queries(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name.parquet")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // the write consumed this query's scoped checkpoints — free their
-      // blocks so a 104-query dump doesn't accumulate session storage
-      // (shared STAGED tables live in TextOps's caches, not this registry)
-      Checkpoints.releaseScoped()
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // Round-1 post-mortem: the driver's correctness report keyed every query
     // as "<name>.parquet" and flagged all of them no_oracle — its lookup uses
     // the output DIRECTORY name, suffix included. Emit both keys so either
     // lookup convention ("q01_x" or "q01_x.parquet") resolves.
     val json = SparkEntry.oracleSql
       .flatMap { case (k, v) => Seq(k -> v, s"$k.parquet" -> v) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Harness.jsonStr(k)}: ${Harness.jsonStr(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    Staged.releaseAll()
-    spark.stop()
+    Harness.close(spark)
   }
 }

@@ -50,11 +50,14 @@ object Main {
   }
 
   /** `pages` is by-name: a failing page-source CONSTRUCTION (bad glob, bad
-    * schema) must surface as an audited error run, not an unlogged crash. */
-  private def runPipeline(spark: SparkSession, pages: => DataFrame, out: String): RunResult =
+    * schema) must surface as an audited error run, not an unlogged crash.
+    * `extract` matches the pages' markup: synthetic by default, the real
+    * detail markup in manual mode. */
+  private def runPipeline(spark: SparkSession, pages: => DataFrame, out: String,
+      extract: DataFrame => DataFrame = LeadPipeline.extract): RunResult =
     audited(spark, out) {
       val leads = LeadPipeline.dedup(
-        LeadPipeline.clean(LeadPipeline.extract(pages)), "url")
+        LeadPipeline.clean(extract(pages)), "url")
       LeadPipeline.loadCsv(leads, out)
       // count what the sink holds: exact regardless of plan shape (observe()
       // through a global sort overcounts — the range-partitioner's sampling
@@ -275,7 +278,8 @@ object Main {
         spark.read.option("header", "true").csv(out).count())
     }
 
-  /** Manual mode: local HTML files → pipeline (manual_scraper.py:317-358).
+  /** Manual mode: local HTML files of the real detail markup → pipeline
+    * (manual_scraper.py:317-358).
     * The source is built INSIDE runPipeline's by-name argument: a bad glob
     * resolves to an audited error run, not an unlogged crash. */
   def runManual(spark: SparkSession, htmlGlob: String, out: String): RunResult =
@@ -285,16 +289,16 @@ object Main {
           monotonically_increasing_id().as("id_negocio"),
           col("path").as("url"),
           col("content").cast("string").as("html")),
-      out)
+      out, LeadPipeline.extractReference)
 
   /** Manual mode, URL form — the reference's `manual --url` branch
     * (src/main.py:310-314, manual_scraper.py:400-414): ONE live page
     * fetched through the S3/S8 FetchStage client (per-partition client,
-    * E2 retry, E1 drop-on-failure), then the same extract/clean/dedup/CSV
-    * pipeline as every other mode. The id rides the reference's
-    * id-from-url law (contador_id query param); an id-less URL still
-    * processes under id 0, as the reference keys the manual record on the
-    * URL itself. An unreachable URL drops to zero fetched pages and lands
+    * E2 retry, E1 drop-on-failure), then the real-markup extract and the
+    * same clean/dedup/CSV pipeline as every other mode. The id rides the
+    * reference's id-from-url law (contador_id query param); an id-less URL
+    * still processes under id 0, as the reference keys the manual record
+    * on the URL itself. An unreachable URL drops to zero fetched pages and lands
     * on the audited "sin registros" warning — the reference's
     * "No se scrapearon datos" envelope — never an unlogged crash. The
     * client is injectable for offline tests; the CLI uses the live
@@ -312,7 +316,7 @@ object Main {
       val cfg = graft.etl.GraftConfig.load()
       graft.etl.FetchStage.fetchPages(worklist, newClient,
         attempts = cfg.retryAttempts, delayMs = cfg.retryDelayMs)
-    }, out)
+    }, out, LeadPipeline.extractReference)
 
   /** Status surface — the CLI form of the reference UI's result panel +
     * generated-files section (streamlit_app.py:85-100) over the K5 audit
@@ -424,17 +428,8 @@ object Main {
     } catch {
       case e: Exception => RunResult("error", s"ETL falló: ${e.getMessage}", 0L)
     }
-    // Spark exception messages routinely carry quotes/backslashes/newlines —
-    // escape them or the envelope stops being parseable JSON
-    def j(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    // Spark exception messages routinely carry quotes/backslashes/newlines
+    val j = graft.Harness.jsonStr _
     println(s"""{"status":${j(result.status)},"message":${j(result.message)},"records_processed":${result.recordsProcessed}}""")
     spark.stop()
     if (result.status == "error") sys.exit(2)

@@ -11,36 +11,23 @@ object ScaleStress {
 
   // host anchors bracket the run (see HostAnchor): stress numbers from a
   // slow window must carry their own evidence, same as BENCH_DETAIL
-  private def anchor(at: String): Unit = {
-    val (sg, par) = graft.HostAnchor.measure(32)
-    println(f"STRESS host-anchor $at: single ${sg}%.0f ms, par32 ${par}%.0f ms " +
-      f"(nominal ${graft.HostAnchor.NominalSingleMs}%.0f / ${graft.HostAnchor.NominalParallelMs}%.0f)")
-  }
+  private def anchor(at: String): Unit = graft.HostAnchor.report("STRESS", at)
 
   /** `runMain graft.bench.ScaleStress html` runs only the self-contained
     * H1-H11 section (~30 s, anchor-bracketed) — the full suite costs ~5 min,
     * too slow a loop when re-measuring one section after a host slow window.
     */
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    if (args.contains("html")) {
-      anchor("start"); htmlExtraction(spark); anchor("end")
-      spark.stop(); return
-    }
-    if (args.contains("streaming")) {
-      anchor("start"); streamingSection(spark); anchor("end")
-      spark.stop(); return
-    }
-    if (args.contains("graph")) {
-      anchor("start"); graphSection(spark); anchor("end")
-      spark.stop(); return
-    }
-    if (args.contains("multimodal")) {
-      anchor("start"); multimodalSection(spark); anchor("end")
-      spark.stop(); return
+    val spark = graft.Harness.session(32)
+    val section = Seq[(String, SparkSession => Unit)](
+      "html" -> htmlExtraction, "streaming" -> streamingSection,
+      "graph" -> graphSection, "multimodal" -> multimodalSection)
+      .collectFirst { case (name, run) if args.contains(name) => run }
+    section match {
+      case Some(run) =>
+        anchor("start"); run(spark); anchor("end")
+        graft.Harness.close(spark); return
+      case None =>
     }
     anchor("start")
     val docs = graft.Tables.documents(spark, "/root/testdata/sf0.1")
@@ -499,7 +486,7 @@ object ScaleStress {
     streamingSection(spark)
 
     anchor("end")
-    spark.stop()
+    graft.Harness.close(spark)
   }
 
   // Round 12: streaming family at 10× events (10× users, identical window

@@ -48,7 +48,6 @@ object SuiteScale {
 
   private val BaseDir = "/root/testdata/sf0.1"
   private val SmallDir = "/root/testdata/sf0.01"
-  private val WarmDir = "/root/testdata/sf0.001"
 
   /** Replication factor: 10 is the graded whole-suite run; the pair-family
     * 30× probe (judge r14 #4) passes copies=30. Mutable only via main's
@@ -281,22 +280,14 @@ object SuiteScale {
 
   private final case class Cell(sec: Double, rows: Long)
 
-  /** One timed pass over the registry at `dir`, Bench's release discipline
-    * (scoped checkpoints freed off the clock per query, hygiene GC every
-    * 24 queries, caches cold at pass start). */
+  /** One timed pass over the registry at `dir` under [[graft.Harness.pass]]. */
   private def pass(spark: SparkSession, dir: String,
       names: Seq[String]): Map[String, Cell] = {
-    graft.Staged.releaseAll()
-    graft.Checkpoints.releaseScoped()
-    System.gc()
-    var sinceGc = 0
-    names.map { name =>
-      graft.Checkpoints.releaseScoped()
-      sinceGc += 1
-      if (sinceGc >= 24) { sinceGc = 0; System.gc() }
+    val queries = graft.SparkEntry.queries
+    graft.Harness.pass(names) { name =>
       val t0 = System.nanoTime()
       val rows =
-        try graft.SparkEntry.queries(name)(spark, dir).count()
+        try queries(name)(spark, dir).count()
         catch { case t: Throwable =>
           println(s"  FAILED $name @ $dir: ${t.getClass.getSimpleName}: " +
             s"${Option(t.getMessage).getOrElse("").take(200)}")
@@ -309,11 +300,7 @@ object SuiteScale {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Harness.session(32)
 
     args.find(_.startsWith("copies=")).foreach { a =>
       Copies = a.stripPrefix("copies=").toInt
@@ -323,17 +310,11 @@ object SuiteScale {
     val t0 = System.nanoTime()
     stage(spark)
     println(f"staging: ${(System.nanoTime() - t0) / 1e9}%.1f s")
-    if (args.contains("stage-only")) { spark.stop(); return }
+    if (args.contains("stage-only")) { graft.Harness.close(spark); return }
 
     val only = args.find(_.startsWith("only="))
-      .map(_.stripPrefix("only=").split(",").map(_.trim).toSet)
-    only.foreach { sel => // a typo'd name must fail, not silently shrink
-      val unknown = sel -- graft.SparkEntry.queries.keySet // the subset
-      require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
-    }
-    val names = graft.SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.contains(n)))
-    require(names.nonEmpty, "no queries selected")
+      .map(a => graft.Harness.select(a.stripPrefix("only=")))
+    val names = only.getOrElse(graft.SparkEntry.queries.keys.toSeq).sorted
 
     // anchors are RECORDED in the JSON, not just printed: the r17 graded
     // run read a uniform ~1.65x wall inflation at BOTH scales with CLEAN
@@ -343,19 +324,10 @@ object SuiteScale {
     // judge) read the ambient multiplier directly
     val anchorLog =
       scala.collection.mutable.LinkedHashMap[String, (Double, Double)]()
-    def anchor(at: String): Unit = {
-      val (sg, par) = graft.HostAnchor.measure(32)
-      anchorLog(at) = (sg, par)
-      println(f"SUITE host-anchor $at: single ${sg}%.0f ms, par32 ${par}%.0f ms " +
-        f"(nominal ${graft.HostAnchor.NominalSingleMs}%.0f / " +
-        f"${graft.HostAnchor.NominalParallelMs}%.0f)")
-    }
+    def anchor(at: String): Unit =
+      anchorLog(at) = graft.HostAnchor.report("SUITE", at)
 
-    // off-clock warmup at the smallest fixture: codegen+JIT for every shape
-    names.foreach { n =>
-      try graft.SparkEntry.queries(n)(spark, WarmDir).count()
-      catch { case _: Throwable => () }
-    }
+    graft.Harness.warm(spark, names, graft.Harness.WarmDir)
 
     anchor("start")
     val small = pass(spark, SmallDir, names) // sf0.01
@@ -414,8 +386,6 @@ object SuiteScale {
     val failed = names.filter(n =>
       small(n).rows < 0 || base(n).rows < 0 || big(n).rows < 0)
     if (failed.nonEmpty) println(s"\nFAILED: ${failed.mkString(", ")}")
-    graft.Staged.releaseAll()
-    graft.Checkpoints.releaseScoped()
-    spark.stop()
+    graft.Harness.close(spark)
   }
 }

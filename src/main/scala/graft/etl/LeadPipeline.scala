@@ -3,7 +3,7 @@ package graft.etl
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.functions.{CleanFunctions => CF, HtmlFunctions => HF}
+import graft.functions.{CleanFunctions => CF, HtmlFunctions => HF, ReferenceHtml => RH}
 
 /** The reference's four-stage lead pipeline (SURVEY §3) as composable
   * `DataFrame => DataFrame` transforms plus the write-path sinks
@@ -44,9 +44,11 @@ object LeadPipeline {
     spark.range(startId, endId + 1).toDF("id_negocio")
       .select(col("id_negocio"), concat(lit(baseUrl), col("id_negocio")).as("url"))
 
-  /** H11 Extract: html column → typed lead fields (manual_scraper.py:80-180). */
+  /** H11 Extract: html column → typed lead fields (manual_scraper.py:80-180),
+    * over the synthetic page markup that bulk, sequential and stage-extract
+    * fetch. */
   def extract(pages: DataFrame): DataFrame =
-    pages.select(
+    withAddress(pages.select(
       col("id_negocio"), col("url"),
       current_timestamp().as("fecha_extraccion"),
       HF.htmlClassText(col("html"), "business-name").as("nombre"),
@@ -62,8 +64,27 @@ object LeadPipeline {
       HF.htmlClassText(col("html"), "description").as("descripcion"),
       lit(null).cast("string").as("servicios"),
       HF.htmlLat(col("html")).as("latitud"),
-      HF.htmlLng(col("html")).as("longitud"))
-      .withColumn("direccion", col("addr.direccion"))
+      HF.htmlLng(col("html")).as("longitud")))
+
+  /** [[extract]] for the real Guia Cores detail markup (manual mode's local
+    * files and live pages): the same columns in the same order, read by
+    * the tolerant DOM extractor [[graft.functions.ReferenceHtml.leadRecord]]. */
+  def extractReference(pages: DataFrame): DataFrame = {
+    val r = RH.leadRecord(col("html"), col("id_negocio"), col("url"))
+    def f(name: String) = r.getField(name).as(name)
+    withAddress(pages.select(
+      col("id_negocio"), col("url"),
+      current_timestamp().as("fecha_extraccion"),
+      f("nombre"), CF.addressParts(r.getField("direccion")).as("addr"),
+      f("telefonos"), f("whatsapp"), f("sitio_web"), f("email"),
+      f("facebook"), f("instagram"), f("horarios"), f("rubros"),
+      f("descripcion"), lit(null).cast("string").as("servicios"),
+      f("latitud"), f("longitud")))
+  }
+
+  /** F10: the `addr` struct split into `direccion` and `localidad`. */
+  private def withAddress(df: DataFrame): DataFrame =
+    df.withColumn("direccion", col("addr.direccion"))
       .withColumn("localidad", col("addr.localidad"))
       .drop("addr")
 
@@ -79,12 +100,9 @@ object LeadPipeline {
       .withColumn("horarios", CF.cleanHorarios(CF.naToNull(col("horarios"))))
 
   /** A2 Dedup: first-wins per id over an explicit arrival order (§7.4.2). */
-  def dedup(leads: DataFrame, orderCol: String = "fecha_extraccion"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("id_negocio")).orderBy(col(orderCol), col("url"))
-    leads.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
-  }
+  def dedup(leads: DataFrame, orderCol: String = "fecha_extraccion"): DataFrame =
+    graft.operators.Operators.dedupFirstWins(
+      leads, Seq("id_negocio"), Seq(col(orderCol), col("url")))
 
   /** Typed view of a cleaned lead DataFrame: compile-time field access for
     * per-entity logic (`Dataset[Lead]`, SURVEY §1.1). Columns are aligned to

@@ -20,15 +20,6 @@ object Operators {
       .filter(col("__rn") === 1).drop("__rn")
   }
 
-  /** Grouped top-k: per-partition ranking, no global sort. */
-  def topKPerGroup(df: DataFrame, partitionCols: Seq[String],
-      orderCols: Seq[Column], k: Int): DataFrame = {
-    val w = Window.partitionBy(partitionCols.map(col): _*).orderBy(orderCols: _*)
-    df.withColumn("__rank", row_number().over(w))
-      .filter(col("__rank") <= k)
-      .withColumnRenamed("__rank", "rank")
-  }
-
   /** E2 retry policy (reference src/common/utils.py:64-92,
     * `retry_on_error(max_attempts=3, delay=5)`): for driver-side control
     * actions and per-partition source fetches. Spark's own task retries
@@ -51,6 +42,22 @@ object Operators {
       }
     }
     throw last
+  }
+
+  /** Steps 1-2 of every range-rank recipe below: range-partition on the
+    * full composite sort key into P = shuffle-partitions slices, and
+    * freeze each row's partition id as the `__pid` column. The range
+    * boundaries are sampled per execution, so the id must be data, not
+    * lineage, before two jobs consume it. The checkpoint is scoped: it is
+    * this invocation's scratch, and the session driver reclaims its blocks
+    * via Checkpoints.releaseScoped once the caller's action has consumed
+    * the result (plain localCheckpoint blocks leak for the session —
+    * round-6 post-mortem). */
+  private def rangeFrozen(df: DataFrame, sortCols: Seq[Column]): DataFrame = {
+    val p = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    graft.Checkpoints.localCheckpoint(
+      df.repartitionByRange(p, sortCols: _*)
+        .withColumn("__pid", spark_partition_id()))
   }
 
   /** Distributed total rank — the scale-safe replacement for
@@ -81,16 +88,8 @@ object Operators {
     * Empty input → (empty frame with the rank column, 0). */
   def totalRank(df: DataFrame, valueCol: String, tieCols: Seq[Column],
       rankCol: String = "rnk"): (DataFrame, Long) = {
-    val p =
-      df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
     val sortCols = col(valueCol) +: tieCols
-    // scoped checkpoint: the frozen-pid table is this invocation's scratch;
-    // the session driver reclaims its blocks via Checkpoints.releaseScoped
-    // once the caller's action has consumed the ranked result (plain
-    // localCheckpoint blocks leak for the session — round-6 post-mortem)
-    val ranged = graft.Checkpoints.localCheckpoint(
-      df.repartitionByRange(p, sortCols: _*)
-        .withColumn("__pid", spark_partition_id()))
+    val ranged = rangeFrozen(df, sortCols)
     val counts = ranged.groupBy(col("__pid")).agg(count(lit(1)).as("c"))
       .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
     val n = counts.map(_._2).sum
@@ -128,12 +127,8 @@ object Operators {
     * `rankCol`, N). Empty input → (empty frame with the rank column, 0). */
   def ranksByTotalOrder(df: DataFrame, valueCol: String, tieCols: Seq[Column],
       ksOf: Long => Seq[Long], rankCol: String = "rnk"): (DataFrame, Long) = {
-    val p =
-      df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
     val sortCols = col(valueCol) +: tieCols
-    val ranged = graft.Checkpoints.localCheckpoint(
-      df.repartitionByRange(p, sortCols: _*)
-        .withColumn("__pid", spark_partition_id()))
+    val ranged = rangeFrozen(df, sortCols)
     val counts = ranged.groupBy(col("__pid")).agg(count(lit(1)).as("c"))
       .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
     val n = counts.map(_._2).sum
@@ -192,11 +187,7 @@ object Operators {
       orderCols: Seq[Column], ksOf: Long => Seq[Long],
       rankCol: String = "rnk", nCol: String = "__n"): DataFrame = {
     val spark = df.sparkSession
-    val p = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val sortCols = col(groupCol) +: orderCols
-    val ranged = graft.Checkpoints.localCheckpoint(
-      df.repartitionByRange(p, sortCols: _*)
-        .withColumn("__pid", spark_partition_id()))
+    val ranged = rangeFrozen(df, col(groupCol) +: orderCols)
     val sliceRows = ranged.groupBy(col("__pid"), col(groupCol))
       .agg(count(lit(1)).as("__c")).take(100001)
     require(sliceRows.length <= 100000,
@@ -311,16 +302,6 @@ object Operators {
     saltedLeft.join(replicatedRight, Seq(key, "__salt")).drop("__salt")
   }
 
-  /** Profile-driven form: measures the left side's per-key heat with
-    * [[saltWidth]] and salts exactly as wide as the dominance ratio demands
-    * — well-spread keys come back B = 1 and the join degenerates to a plain
-    * equi-join with no replication cost. The left side should be
-    * materialized (cache/localCheckpoint) by the caller: the probe and the
-    * join each read it. */
-  def saltedJoinAuto(left: DataFrame, right: DataFrame, key: String,
-      maxB: Int = 64): DataFrame =
-    saltedJoin(left, right, key, saltWidth(left, Seq(col(key)), maxB))
-
   /** Size-gated broadcast hint. Returns `broadcast(df)` only when the
     * table's MEASURED size fits under the session's
     * `spark.sql.autoBroadcastJoinThreshold`; past the bound (or with the
@@ -409,12 +390,7 @@ object Operators {
     * order among themselves — pass a tie-breaking column for determinism. */
   def groupedPrefixSum(df: DataFrame, groupCol: String, valueCol: String,
       orderCols: Seq[Column], cumCol: String = "cum"): DataFrame = {
-    val spark = df.sparkSession
-    val p = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val sortCols = col(groupCol) +: orderCols
-    val ranged = graft.Checkpoints.localCheckpoint(
-      df.repartitionByRange(p, sortCols: _*)
-        .withColumn("__pid", spark_partition_id()))
+    val ranged = rangeFrozen(df, col(groupCol) +: orderCols)
     // bounded-metadata slice table, kept in-plan (rides a BroadcastExchange
     // inside the one consuming job instead of a driver collect)
     val slices = ranged.groupBy(col("__pid"), col(groupCol))

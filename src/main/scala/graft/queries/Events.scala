@@ -378,7 +378,7 @@ object Events {
     // contract, not plan: terminate the identical salted join in an
     // aggregate — counts-per-(key,bucket) (drop the pair columns into a
     // groupBy before the merge shuffle) or top-k pairs per key
-    // (topKPerGroup over the same pair stream, emitting k·|keys| rows).
+    // (a per-key row_number over the same pair stream, emitting k·|keys| rows).
     // Both reuse this exact salted-join kernel — at this round it is not
     // just the same CODE but the same RUN: q96 and q199 consume ONE staged
     // pair-count table per fixture ([[cooccurPairCounts]], size-gated so
@@ -602,7 +602,7 @@ object Events {
     // Profile-driven salted dimension join, end-to-end: the row-level form
     // of the q96 mechanism. `event_type` is the canonical pathological key —
     // a handful of values over the whole fact table, so a plain shuffle join
-    // sends each type's entire row set to ONE task. saltedJoinAuto probes
+    // sends each type's entire row set to ONE task. The salt-width probe reads
     // the heat (q103's count-by-key pass), derives B from the dominance
     // ratio (~P/5 here — the salt genuinely engages on this fixture, unlike
     // q96's uniform composite key), spreads each hot type over B tasks and
@@ -611,8 +611,8 @@ object Events {
     // integer math.
     "q105_salted_dim_join" -> Q(
       run = (s, d) => {
-        // the staged form of saltedJoinAuto, probe SHARED with the join's
-        // own dim table: the fact projection materializes once (scoped
+        // saltedJoin with its width probe SHARED with the join's own dim
+        // table: the fact projection materializes once (scoped
         // checkpoint), the per-type totals it aggregates are both the
         // join's right side AND the salt-width heat table
         // (saltWidthFromHeat) — one keys-space aggregation, not two
@@ -649,7 +649,7 @@ object Events {
         FROM events e JOIN t USING (event_type)
         GROUP BY e.event_type, CAST(e.ts AS DATE), t.n_type_total
         ORDER BY event_type, day"""),
-      doc = "profile-driven salted dimension join (saltedJoinAuto end-to-end)"),
+      doc = "profile-driven salted dimension join (salt width from the join's own per-type totals)"),
 
     // Event-time lateness monitor — the signal that SIZES the streaming
     // watermarks (q42/q64 hardcode "1 hour"; this measures what the data

@@ -358,7 +358,6 @@ object StreamOps {
     * drain. `spark.graft.stateProvider`:
     *  - unset / "default": leave the session's provider conf untouched
     *    (the pre-round-16 behavior);
-    *  - "rocksdb": every drain runs on RocksDB;
     *  - "auto": a drain serving in COMPLETE mode — which the StreamingSpec
     *    output-mode sweep proves is allowed only over state bounded by a
     *    small data dimension (|types|·bins, |segments × types|) — keeps
@@ -383,13 +382,12 @@ object StreamOps {
     val key = "spark.sql.streaming.stateStore.providerClass"
     val want = s.conf.get("spark.graft.stateProvider", "default") match {
       case "default" => None // honor whatever the session pinned
-      case "rocksdb" => Some(RocksDbProvider)
       // auto OWNS the choice both ways: explicit default for bounded
       // complete-mode drains even if the session had pinned RocksDB
       case "auto" =>
         Some(if (mode == "complete") DefaultProvider else RocksDbProvider)
       case other => sys.error(
-        s"unknown spark.graft.stateProvider '$other' (default|rocksdb|auto)")
+        s"unknown spark.graft.stateProvider '$other' (default|auto)")
     }
     want match {
       case None => body

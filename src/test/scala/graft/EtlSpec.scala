@@ -14,6 +14,10 @@ class EtlSpec extends SparkSpec {
   private def tmp(prefix: String): String =
     Files.createTempDirectory(prefix).toFile.getAbsolutePath
 
+  /** The real Guia Cores detail-page fixture (GoldenPipelineSpec B3). */
+  private val detailPage =
+    java.nio.file.Paths.get(getClass.getResource("/html/detail_page.html").toURI)
+
   private val page = (id: Long) =>
     s"""<html><body><h1 class="business-name">Biz $id</h1>
        |<span class="address">Calle Falsa $id - Rosario</span>
@@ -287,7 +291,7 @@ class EtlSpec extends SparkSpec {
       new java.net.InetSocketAddress("127.0.0.1", 0), 0)
     server.createContext("/index.php", new HttpHandler {
       override def handle(ex: HttpExchange): Unit = {
-        val bytes = page(42L).getBytes("UTF-8")
+        val bytes = Files.readAllBytes(detailPage)
         ex.sendResponseHeaders(200, bytes.length.toLong)
         ex.getResponseBody.write(bytes)
         ex.close()
@@ -304,7 +308,7 @@ class EtlSpec extends SparkSpec {
       val lead = spark.read.option("header", "true").csv(out).head()
       // the id rode the reference's id-from-url law, not a synthetic key
       assert(lead.getAs[String]("id_negocio") == "42")
-      assert(lead.getAs[String]("nombre") == "Biz 42")
+      assert(lead.getAs[String]("nombre") == "Ferretería El Tornillo")
       assert(spark.read.parquet(out + "_audit").count() == 1)
 
       // unreachable URL: every fetch attempt fails, E1 drops the record,
@@ -317,6 +321,21 @@ class EtlSpec extends SparkSpec {
       assert(r2.status == "warning" && r2.recordsProcessed == 0)
       assert(spark.read.parquet(out2 + "_audit").count() == 1)
     } finally server.stop(0)
+  }
+
+  test("manual mode reads a real detail page through the reference-markup " +
+      "extractor (GoldenPipelineSpec B3 values after clean)") {
+    val out = tmp("graft_manual_file")
+    val r = graft.app.Main.runManual(spark, detailPage.toString, out)
+    assert(r.status == "success" && r.recordsProcessed == 1)
+    val lead = spark.read.option("header", "true").csv(out).head()
+    assert(lead.getAs[String]("nombre") == "Ferretería El Tornillo")
+    assert(lead.getAs[String]("email") == "ventas@eltornillo.com.ar")
+    assert(lead.getAs[String]("whatsapp") == "5493424555000")
+    assert(lead.getAs[String]("horarios") == "Lun a Vie 8:00-12:30 y 16:00-20:00")
+    assert(lead.getAs[String]("direccion") == "Av. San Martín 1234")
+    assert(lead.getAs[String]("localidad") == "(3000) Santa Fe")
+    assert(lead.getAs[String]("servicios") == "N/A")
   }
 
   test("status mode reports run history + sink listing from the audit table") {

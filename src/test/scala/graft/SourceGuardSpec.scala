@@ -36,4 +36,16 @@ class SourceGuardSpec extends AnyFunSuite {
     assert(hits.isEmpty,
       s"system-property access in main source:\n${hits.mkString("\n")}")
   }
+
+  test("a SparkSession is built under src/main/scala/graft only by Harness, " +
+      "the product CLI and StatePressure") {
+    // every registry harness runs the one session Harness.session builds:
+    // a private builder is how the harness sessions drifted apart (one
+    // lost the UTC zone, so it timed a different plan than Verify checked)
+    val allowed = Seq("Harness.scala", "app/Main.scala", "bench/StatePressure.scala")
+      .map(f => s"src/main/scala/graft/$f:")
+    val hits = SourceScan.hits("""SparkSession\.builder""".r)
+      .filterNot(h => allowed.exists(h.startsWith))
+    assert(hits.isEmpty, s"SparkSession builders outside Harness:\n${hits.mkString("\n")}")
+  }
 }
