@@ -267,9 +267,10 @@ object Bench {
     // the graded record and a debugging subset must never clobber it
     val detailFile =
       if (only.isDefined) "BENCH_DETAIL_SUBSET.json" else "BENCH_DETAIL.json"
-    try java.nio.file.Files.writeString(
+    // no catch: a failed write must fail the run, or the compact line below
+    // would point bench_compare at a stale record left on disk
+    java.nio.file.Files.writeString(
       java.nio.file.Paths.get(detailFile), full + "\n")
-    catch { case _: Throwable => () }
     // the compact line reports QUERIES: stage rows stay in the detail
     // record's maps, but they must not inflate n_queries or displace a
     // real query from the capped top-25 window the driver's tail parses

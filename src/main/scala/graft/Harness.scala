@@ -3,9 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one session and driver protocol every registry harness runs under
-  * (Bench, Verify, ExplainDump, PlanDump, SuiteScale, ScaleStress, the test
-  * session). Two harnesses that time, dump or explain the same query must
-  * run the same plan, so the session settings live here once:
+  * (Bench, Verify, ExplainDump, PlanDump, SuiteScale, the test session).
+  * Two harnesses that time, dump or explain the same query must run the
+  * same plan, so the session settings live here once:
   *  - `local[cpus]` with `cpus` shuffle partitions;
   *  - UTC: the NTZ→TIMESTAMP cast in `Tables.normalizeEventsTs` reads
   *    differently under a non-UTC host zone;

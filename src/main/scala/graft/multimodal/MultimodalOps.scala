@@ -641,7 +641,7 @@ object MultimodalOps {
     // stage; only 4 small ints move); the block join shuffles 4 rows per
     // image.
     //
-    // SCALE STRUCTURE (round 13, driven by the 10× ScaleStress
+    // SCALE STRUCTURE (round 13, driven by the 10× stress
     // measurement): aHash bits are STRUCTURED, not hash-mixed — real image
     // populations carry huge identical-hash classes (thumbnail floods,
     // re-encodes) and degenerate shared block values. At 10× images the

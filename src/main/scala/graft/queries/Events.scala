@@ -364,7 +364,7 @@ object Events {
     // which AQE's partition coalescing (and skew split) explicitly never
     // touches (it sizes post-shuffle partitions by INPUT bytes, and an
     // explosive self-join has tiny inputs with huge outputs, so it would
-    // re-merge the B salted partitions — measured in ScaleStress). The join
+    // re-merge the B salted partitions — measured, STRESS.md). The join
     // reuses these exchanges (same hash partitioning as its requirement),
     // so the guard costs no extra shuffle.
     // Reference shape: /root/reference/src/transformers/data_cleaner.py's

@@ -67,9 +67,9 @@ object Mining {
     bm25Slot(s, d)(graft.Staged.persistNow(bm25Scores(s, d)))
 
   /** Vocabulary-parameterized form — the oracle queries pin the 3-term
-    * vocabulary above; ScaleStress drives THIS with a 10× vocabulary to
-    * measure that tf-table growth stays ≤ |docs × terms| (the
-    * filter-before-explode bound PlanSpec pins structurally). */
+    * vocabulary above; PlanSpec drives THIS with the fixture's 30 hottest
+    * tokens to check that the tf table stays ≤ |docs × terms| (the
+    * filter-before-explode bound it also pins structurally). */
   private[graft] def bm25ScoresFor(s: SparkSession, d: String,
       qterms: Seq[String]): DataFrame = {
     val docs = Tables.documents(s, d)

@@ -305,7 +305,7 @@ object TextOps {
     // boilerplate headers, tiny-vocabulary corpora — sort to the suffix and
     // NEVER generate candidates. This caps the candidate join at near-
     // output-proportional work where a raw shared-shingle self-join explodes
-    // quadratically on hot keys (ScaleStress "viral preamble": 5k docs
+    // quadratically on hot keys (STRESS.md "viral preamble": 5k docs
     // sharing 8 corpus-wide shingles → ~100M candidate rows direct,
     // prefix-bounded with this plan). Exactness is unchanged: candidates are
     // a superset of qualifying pairs, each verified below.
@@ -1694,7 +1694,7 @@ object TextOps {
         // restructure applied to text simhash, same reasoning: identical
         // signatures — re-posted boilerplate, mirror dumps — make the
         // member-level block join quadratic in DOCS where the law bounds
-        // it by distinct signatures; ScaleStress' 10-exact-copies corpus
+        // it by distinct signatures; STRESS.md's 10-exact-copies corpus
         // is exactly that shape). nearDupRepPairs is block-width-agnostic:
         // the four 12-bit blocks ride the same 16-bit packing slots, the
         // sub-pigeonhole lemma only needs a pair-consistent layout, and

@@ -123,6 +123,41 @@ class GoldenPipelineSpec extends SparkSpec {
     assert(used == 3, s"expected 3 parses for 3 rows x 15 fields, got $used")
   }
 
+  test("H1-H11 record set of 1,000 canonical template pages is pinned by hash") {
+    // every leadRecord field of every page, folded into one order-free
+    // hash: a selector or cleanup drift on any field moves it. The page
+    // set's malformed twin (unquoted attributes and the other tolerance
+    // dimensions) is DomFuzzSpec's mutation-invariance law.
+    val pageTemplate =
+      """<html><body><div class="search-result">
+        |<a class="search-result-name" href="index.php?r=search/detail&id=%s"><h1>Negocio %s</h1></a>
+        |<span class="search-result-address">Calle %s 123 - (3000) Santa Fe</span>
+        |<a href="tel:342 455-%04d" class="phone-link">342 455-%04d</a>
+        |<a href="https://api.whatsapp.com/send?phone=549342455%04d&text=Hola">WhatsApp</a>
+        |<a itemprop="url" href="https://www.negocio%s.com.ar">Sitio web</a>
+        |<a onclick="irContacto()" href="#">ventas@negocio%s.com.ar</a>
+        |<a href="https://www.facebook.com/negocio%s">Facebook</a>
+        |<i class="far fa-clock"></i>
+        |<span class="search-result-address">Abierto Lun a Vie 8:00-20:00</span>
+        |<div id="yw0" class="list-view"><div class="items"><a class="search-result-link" href="#">Rubro%s</a></div></div>
+        |<div class="map" data-lat="-31.6%s" data-lng="-60.7%s"></div>
+        |<div class="search-result-description">Descripción del negocio %s.</div>
+        |</div></body></html>""".stripMargin
+    val id = col("id")
+    val pages = spark.range(0, 1000).select(id.as("id_negocio"),
+      concat(lit("https://www.guiacores.com.ar/detail?id="), id).as("url"),
+      format_string(pageTemplate, id, id, id, pmod(id, lit(10000)),
+        pmod(id, lit(10000)), pmod(id, lit(10000)), id, id, id, id,
+        pmod(id, lit(1000)), pmod(id, lit(1000)), id).as("html"))
+    // bit_xor, not sum: a long SUM of full-range xxhash64 values overflows
+    // under ANSI mode; xor is order-independent and closed
+    val hash = pages.select(xxhash64(to_json(RH.leadRecord(
+        col("html"), col("id_negocio"), col("url")))).as("h"))
+      .agg(expr("bit_xor(h)")).head().getLong(0)
+    assert(hash == -2232206295892846731L,
+      s"record-set hash drifted on canonical markup: $hash")
+  }
+
   test("B3 malformed detail page: DOM path extracts the full record where " +
       "the regex path reads nothing") {
     // same logical page as detail_page.html through a hostile serializer:

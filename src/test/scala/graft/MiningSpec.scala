@@ -88,6 +88,36 @@ class MiningSpec extends SparkSpec {
       s"expected the loud basket bar, got: ${msgs(ex).mkString(" | ")}")
   }
 
+  test("q176: on 3 disjoint graph replicas every top-10 row reduces to a " +
+    "base top-10 row") {
+    // replicas shift orderkey AND partkey per copy, so the co-purchase
+    // graph is 3 disconnected copies: they can only interleave copies of
+    // the base's best rows, never mint a new count. A join that crosses
+    // replica boundaries (spurious inter-copy edges or triangles) breaks
+    // this.
+    val orderShift = 100000000L
+    val partShift = 10000000L
+    val li = Tables.lineitem(spark, sf).select("l_orderkey", "l_partkey")
+    val dir = java.nio.file.Files.createTempDirectory("graft_graph3x")
+    try {
+      (0 until 3).map(k => li
+          .withColumn("l_orderkey", col("l_orderkey") + lit(k * orderShift))
+          .withColumn("l_partkey", col("l_partkey") + lit(k * partShift)))
+        .reduce(_ unionByName _)
+        .write.parquet(s"$dir/lineitem.parquet")
+      def top10(d: String) = SparkEntry.queries("q176_triangle_count")(spark, d)
+        .collect().map(r => (r.getLong(0), r.getLong(1)))
+      val baseTop = top10(sf).toSet
+      val replicated = top10(dir.toString)
+      assert(baseTop.nonEmpty && replicated.length == 10)
+      replicated.foreach { case (part, n) =>
+        assert(baseTop.contains((part % partShift, n)),
+          s"3x row ($part, $n) reduces to ${(part % partShift, n)}, absent " +
+            "from the base top-10 — inter-replica contamination")
+      }
+    } finally graft.streaming.StreamOps.deleteTree(dir)
+  }
+
   test("q175: every schedule prefix is weight-proportional within one item") {
     // stride scheduling's representation guarantee: in the first N
     // positions, a weight-w source appears floor/ceil of N·w/ΣW times,

@@ -157,6 +157,11 @@ class OperatorsSpec extends SparkSpec {
     assert(Operators.saltWidth(oneHot, Seq($"k"), maxB = 3) == 2)
   }
 
+  /** 100,001 single-row groups: one past the grouped operators' 100k
+    * bounded-metadata bar on (partition, group) slices. */
+  private def manyGroups = spark.range(100001L).select(
+    concat(lit("g"), col("id")).as("g"), lit(1L).as("v"), col("id").as("ord"))
+
   test("groupedPrefixSum == sequential per-group running sum; no global window") {
     import spark.implicits._
     val rnd = new scala.util.Random(3)
@@ -229,6 +234,14 @@ class OperatorsSpec extends SparkSpec {
         nullVals.toDF("g", "v", "ord"), "g", "v", Seq(col("ord")), "cum").count()
     }
     assert(ex2.getMessage.contains("non-null"))
+
+    // the violated arm of the 100k bounded-metadata bar: 100,001 distinct
+    // groups make at least as many (partition, group) slices
+    val ex3 = intercept[Exception] {
+      Operators.groupedPrefixSum(manyGroups, "g", "v", Seq(col("ord")),
+        "cum").count()
+    }
+    assert(ex3.getMessage.contains("bounded-metadata"), ex3.getMessage)
   }
 
   test("groupedPrefixSum offset lookup is a broadcast join, not a map literal") {
@@ -388,5 +401,10 @@ class OperatorsSpec extends SparkSpec {
         "g", Seq(col("v"), col("tie")), _ => Seq(1L))
     }
     assert(ex.getMessage.contains("non-null"))
+    // contract: past the 100k bounded-metadata bar the probe fails loudly
+    val ex2 = intercept[Exception] {
+      Operators.groupedRankPicks(manyGroups, "g", Seq(col("ord")), _ => Seq(1L))
+    }
+    assert(ex2.getMessage.contains("bounded-metadata"), ex2.getMessage)
   }
 }

@@ -194,7 +194,7 @@ class PlanSpec extends SparkSpec {
   // q96's salt width is PROFILE-DERIVED: on the uniform test fixture it
   // correctly degenerates to B = 1 (no salt, no replication), so the salt
   // assertions need a fixture where salting actually engages — one hot
-  // (event_type, hour) bucket holding every user, ScaleStress's shape.
+  // (event_type, hour) bucket holding every user.
   private lazy val skewedEventsDir: String = {
     // unique per test JVM (concurrent test runs must not overwrite each
     // other's staged fixture mid-read), removed on JVM exit
@@ -608,6 +608,23 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("BroadcastHashJoin") &&
       p.contains("BroadcastNestedLoopJoin"),
       s"df equi-join and T/D scalars must ride broadcasts:\n$p")
+    // the same bound measured: over the fixture's 30 hottest tokens (the
+    // worst case, every term hits nearly every doc) the tf table
+    // (= sum of n_terms_hit) holds one row per (doc, query term) hit, so
+    // it stays within |docs x terms|, never |tokens|
+    val docs = Tables.documents(spark, sf)
+    val vocab30 = docs.select(explode(split(col("text"), " ")).as("tk"))
+      .groupBy(col("tk")).count().orderBy(col("count").desc, col("tk"))
+      .limit(30).collect().map(_.getString(0)).toSeq
+    val tfRows = graft.queries.Mining.bm25ScoresFor(spark, sf, vocab30)
+      .agg(sum(col("n_terms_hit"))).head().getLong(0)
+    val bound = docs.count() * vocab30.size
+    assert(tfRows <= bound,
+      s"tf table has $tfRows rows, past the |docs x terms| bound $bound")
+    val hits = docs.select(explode(array_distinct(split(col("text"), " ")))
+      .as("tk")).filter(col("tk").isin(vocab30: _*)).count()
+    assert(tfRows == hits,
+      s"tf table has $tfRows rows, not one per (doc, query term) hit ($hits)")
   }
 
   test("q134/q196: audit consumers read the STAGED kernel tables, never " +

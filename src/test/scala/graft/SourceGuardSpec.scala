@@ -37,6 +37,19 @@ class SourceGuardSpec extends AnyFunSuite {
       s"system-property access in main source:\n${hits.mkString("\n")}")
   }
 
+  test("the entry points under src/main/scala/graft are exactly the pinned set") {
+    // every `def main` ships in the product jar: a new measurement main
+    // must be added here on purpose, not grow the harness unnoticed
+    val pinned = Set("app/Main.scala", "Bench.scala", "Verify.scala",
+      "ExplainDump.scala", "PlanDump.scala", "etl/DialectDump.scala",
+      "HostAnchor.scala", "bench/SuiteScale.scala", "bench/StatePressure.scala")
+      .map(f => s"src/main/scala/graft/$f")
+    val found = SourceScan.hits("""\bdef main\s*\(""".r)
+      .map(_.split(":").head).toSet
+    assert(found == pinned, s"unpinned mains: ${found -- pinned}; " +
+      s"pinned but gone: ${pinned -- found}")
+  }
+
   test("a SparkSession is built under src/main/scala/graft only by Harness, " +
       "the product CLI and StatePressure") {
     // every registry harness runs the one session Harness.session builds:

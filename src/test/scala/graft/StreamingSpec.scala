@@ -297,14 +297,17 @@ class StreamingSpec extends SparkSpec {
       "RocksDBStateStoreProvider"
     def run(name: String): Seq[String] =
       SparkEntry.queries(name)(spark, sf).collect().map(_.toString).toSeq
-    val names = Seq("q149_stream_topk", "q64_stream_stream_join")
+    // q91's per-user custom state rides along: it is the state that grows
+    // with users, the case RocksDB is for
+    val names = Seq("q149_stream_topk", "q64_stream_stream_join",
+      "q91_stateful_sessions")
     val underDefault = names.map { n =>
       graft.streaming.StreamOps.drainSlot.release() // q149's shared slot: each
       graft.streaming.StreamOps.lastDrainInfo = None // arm must re-drain
       val rows = run(n)
       // the baseline really ran the provider it claims to A/B against —
-      // detected from the stream's own progress metrics, the evidence the
-      // r13 ScaleStress A/B lacked when a mis-ordered conf.set made both
+      // detected from the stream's own progress metrics, the evidence an
+      // earlier 10x A/B lacked when a mis-ordered conf.set made both
       // sides RocksDB (ADVICE r13)
       val info = graft.streaming.StreamOps.lastDrainInfo
         .getOrElse(fail(s"$n recorded no drain under the default provider"))
@@ -333,6 +336,65 @@ class StreamingSpec extends SparkSpec {
       case Some(v) => spark.conf.set(key, v)
       case None => spark.conf.unset(key)
     }
+  }
+
+  test("k shifted copies of the events fixture: q91 sessions and state " +
+    "scale by k, the q42/q149 (window x type) grid and its state do not") {
+    // k copies with event and user ids shifted per copy and ts untouched:
+    // every copy replays the same per-user event sequences over the same
+    // window timeline. Per-user session state (q91) IS the live-key working
+    // set and grows with users; window-keyed state (q42, q149) must not
+    // grow with the user multiplier, and q149's watermark must still evict.
+    // Staged as ONE file, the fixture's own layout, which the
+    // horizon-sentinel staging copies.
+    val k = 3
+    val root = Files.createTempDirectory("graft_events_kx")
+    try {
+      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      val raw = spark.read.parquet(s"$sf/events.parquet")
+      val build = root.resolve("build").toString
+      (0 until k).map(i => raw
+          .withColumn("event_id", col("event_id") + lit(i * 1000000000L))
+          .withColumn("user_id", col("user_id") + lit(i * 1000000L)))
+        .reduce(_ unionByName _)
+        .coalesce(1).write.parquet(build)
+      val part = new java.io.File(build).listFiles()
+        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+        .getOrElse(fail("k-copy events write produced no part file"))
+      val kDir = Files.createDirectories(root.resolve("kx"))
+      Files.move(part.toPath, kDir.resolve("events.parquet"))
+      def drain(q: String, d: String) = {
+        graft.streaming.StreamOps.drainSlot.release() // evidence from this run
+        graft.streaming.StreamOps.lastDrainInfo = None
+        val rows = SparkEntry.queries(q)(spark, d).count()
+        (rows, graft.streaming.StreamOps.lastDrainInfo
+          .getOrElse(fail(s"$q recorded no drain progress")))
+      }
+      for (q <- Seq("q42_stream_tumbling", "q91_stateful_sessions",
+          "q149_stream_topk")) {
+        val (bRows, b) = drain(q, sf)
+        val (kRows, kx) = drain(q, kDir.toString)
+        assert(bRows > 0 && b.maxStateRows > 0, s"$q: empty base drain")
+        if (q == "q91_stateful_sessions") {
+          assert(kRows == k * bRows,
+            s"$q: copies must replay to exactly ${k}x sessions ($bRows -> $kRows)")
+          assert(kx.maxStateRows == k * b.maxStateRows,
+            s"$q: per-user state must track users (${k}x): " +
+              s"${b.maxStateRows} -> ${kx.maxStateRows}")
+        } else {
+          assert(kRows == bRows,
+            s"$q: (window x type) grid must not depend on volume ($bRows -> $kRows)")
+          // the copies share every (window x type) key, so the peak equals
+          // the base's; state keyed by user or event would grow with k
+          assert(kx.maxStateRows == b.maxStateRows,
+            s"$q: window-keyed state grew with volume: " +
+              s"${b.maxStateRows} -> ${kx.maxStateRows}")
+        }
+        if (q == "q149_stream_topk")
+          assert(kx.mode == "append" && kx.stateRowsRemoved > 0,
+            s"$q: watermark eviction not observed on ${k}x events")
+      }
+    } finally graft.streaming.StreamOps.deleteTree(root)
   }
 
   test("stateProvider=auto: bounded complete-mode drains keep the default " +
