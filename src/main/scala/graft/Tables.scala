@@ -1,6 +1,13 @@
 package graft
 
+import java.io.FileNotFoundException
+
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 
 /** Fixture-table loaders (TESTDATA.md). All engine queries read through here so
   * path handling and any read-level options live in one place.
@@ -8,14 +15,56 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Scale design: these are plain parquet scans — Catalyst handles column
   * pruning and predicate pushdown below the scan, and on a real cluster the
   * same code picks up splittable files / partitioned layouts with no change.
+  *
+  * Schemas come from one parquet footer read on the driver ([[footerSchema]])
+  * and are handed to the reader, so resolving a table starts no Spark job.
+  * Nothing is memoized: every load re-reads the footer, so a table rewritten
+  * in place resolves to its new schema, and every load is a fresh relation
+  * (a self-join gets distinct attribute ids).
   */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    footerSchema(spark, path) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+  }
+
+  /** The schema Spark's parquet inference gives `path`, read on the driver
+    * from one footer instead of by the one-task job inference launches.
+    * `path` is a parquet file or a directory of part files; for a directory
+    * the first data file by path is read, skipping names that start with `_`
+    * or `.` as Spark's file listing does. The converter reads the session
+    * conf (nanosAsLong, NTZ inference) and the footer's Spark row-metadata
+    * key wins, exactly as in inference.
+    *
+    * None — leave inference to Spark — when the path is missing or holds no
+    * data file at its top level: Spark then raises its own error, or
+    * discovers the partitions whose files sit in subdirectories. */
+  private def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    val status = try Some(fs.getFileStatus(p)) catch { case _: FileNotFoundException => None }
+    val dataFile = status.flatMap { st =>
+      if (st.isFile) Some(st)
+      else fs.listStatus(p).filter { f =>
+        val n = f.getPath.getName
+        f.isFile && !n.startsWith("_") && !n.startsWith(".")
+      }.sortBy(_.getPath.toString).headOption
+    }
+    dataFile.map { f =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+      val meta = try reader.getFooter finally reader.close()
+      ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, meta),
+        new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+    }
+  }
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = load(s, d, "nation")
@@ -53,7 +102,7 @@ object Tables {
 
   /** The raw (pre-normalization) type `ts` resolves to for this fixture —
     * what a user-specified streaming schema must declare (streaming reads
-    * don't infer). Footer-only probe; no job. */
+    * don't infer). Footer-only probe through [[load]]; no job. */
   private[graft] def eventsRawTsType(
       s: SparkSession, d: String): org.apache.spark.sql.types.DataType = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

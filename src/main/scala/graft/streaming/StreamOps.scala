@@ -237,9 +237,10 @@ object StreamOps {
         cp.toFile
       }
     // raw-typed horizon: max ts over the fixture — one bounded 1-row agg,
-    // the drain-time stand-in for wall-clock "now"
+    // the drain-time stand-in for wall-clock "now"; the raw type comes from
+    // the footer, so the max is the only job
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = s.read.parquet(src.toString)
+    val raw = graft.Tables.load(s, dir, "events")
     val rawTs = raw.schema("ts").dataType
     val mx = raw.agg(max(col("ts"))).head()
     // max over zero rows is NULL — fail with the envelope's vocabulary, not

@@ -77,7 +77,7 @@ class CurationSpec extends SparkSpec {
       alpha.foreach { b => sb.append(a).append(b) }
       (i.toLong, sb.toString, "zh", "s0", sb.length.toLong)
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft_cjk").toString
+    val dir = tempDir("graft_cjk").toString
     // a single FILE named documents.parquet, like the driver's fixtures:
     // the streaming source reads the dir with pathGlobFilter
     // "documents.parquet", which matches leaf file names — a directory-
@@ -244,7 +244,7 @@ class CurationSpec extends SparkSpec {
       val text = (0 until n).map(j => s"w${rnd.nextInt(500)}").mkString(" ")
       (i.toLong, text, "en", src, text.length.toLong)
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft_budget").toString
+    val dir = tempDir("graft_budget").toString
     docs.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
 
@@ -286,7 +286,7 @@ class CurationSpec extends SparkSpec {
       val toks = if (i % 2 == 1) base ++ Seq.fill(10)("burstword") else base
       (i.toLong, toks.mkString(" "), "en", "srcD", 0L)
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft_drift").toString
+    val dir = tempDir("graft_drift").toString
     docs.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val rows = SparkEntry.queries("q139_token_drift")(spark, dir).collect()
@@ -313,7 +313,7 @@ class CurationSpec extends SparkSpec {
         val t = (0 until 30).map(j => s"f${i}_$j").mkString(" ")
         (i.toLong, t, "en", "fresh", 0L)
       }
-    val dir = java.nio.file.Files.createTempDirectory("graft_div").toString
+    val dir = tempDir("graft_div").toString
     docs.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val rows = SparkEntry.queries("q140_ngram_diversity")(spark, dir).collect()
@@ -345,7 +345,7 @@ class CurationSpec extends SparkSpec {
       val text = s"duplicate group $g payload " + ("x " * (g % 7 + 3)).trim
       (0 until 3).map(j => ((g * 3 + j).toLong, text))
     } ++ (90 until 130).map(i => (i.toLong, s"unique doc $i"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_fold").toString
+    val dir = tempDir("graft_fold").toString
     docs.map { case (id, t) => (id, t, "en", "srcF", 0L) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -398,7 +398,7 @@ class CurationSpec extends SparkSpec {
     // 40k docs -> ~35k member fingerprints -> per-row fill ~0.42 ->
     // expected FPR ~3%: the harness must MEASURE it, not report zero
     val docs = (0 until 40000).map(i => (i.toLong, s"doc number $i", "en", "srcB", 0L))
-    val dir = java.nio.file.Files.createTempDirectory("graft_bloom").toString
+    val dir = tempDir("graft_bloom").toString
     docs.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val r = SparkEntry.queries("q150_bloom_fpr")(spark, dir).collect()(0)
@@ -434,7 +434,7 @@ class CurationSpec extends SparkSpec {
       }
       (i.toLong, toks.mkString(" "), "en", "srcC", 0L)
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft_cms").toString
+    val dir = tempDir("graft_cms").toString
     docs.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
 
@@ -484,7 +484,7 @@ class CurationSpec extends SparkSpec {
       (20 until 60).map { i =>
         (i.toLong, (0 until 15).map(j => s"u${i}_$j").mkString(" "))
       }
-    val dir = java.nio.file.Files.createTempDirectory("graft_gate").toString
+    val dir = tempDir("graft_gate").toString
     docs.map { case (id, t) => (id, t, "en", "srcG", 0L) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -547,7 +547,7 @@ class CurationSpec extends SparkSpec {
       }
       (i.toLong, toks.mkString(" "), "en", "srcP", 0L)
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft_coll").toString
+    val dir = tempDir("graft_coll").toString
     docs.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     // driver replay
@@ -586,7 +586,7 @@ class CurationSpec extends SparkSpec {
       (0L, a), (1L, b), (2L, c),
       (10L, clique), (11L, clique), (12L, clique)) ++
       (20 until 40).map(i => (i.toLong, (0 until 30).map(j => s"z${i}_$j").mkString(" ")))
-    val dir = java.nio.file.Files.createTempDirectory("graft_dens").toString
+    val dir = tempDir("graft_dens").toString
     docs.map { case (id, t) => (id, t, "en", "srcD", 0L) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -750,7 +750,7 @@ class CurationSpec extends SparkSpec {
       (402L, "and now for something utterly unlike any existing document " +
         "in this tiny corpus of ours today", "en", "srcB", 90L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("ingest_dedup").toString
+    val dir = tempDir("ingest_dedup").toString
     docs.coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val out = SparkEntry.queries("q128_ingest_dedup")(spark, dir).collect()
       .map(r => r.getLong(0) -> (r.getString(1),

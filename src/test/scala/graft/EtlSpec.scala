@@ -12,7 +12,7 @@ class EtlSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toFile.getAbsolutePath
+    tempDir(prefix).toFile.getAbsolutePath
 
   /** The real Guia Cores detail-page fixture (GoldenPipelineSpec B3). */
   private val detailPage =

@@ -59,7 +59,7 @@ class IvfTopkSpec extends SparkSpec {
       (30 until 60).map(i => (i.toLong, noisy(ax1, 0.05f), 1)) ++
       (60 until 120).map(i => (i.toLong,
         Array.fill(dim)(rnd.nextFloat() * 2 - 1), 2 + i % 2))
-    val dir = java.nio.file.Files.createTempDirectory("graft_sep").toString
+    val dir = tempDir("graft_sep").toString
     rows.toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     val out = SparkEntry.queries("q147_label_separability")(spark, dir)
@@ -106,7 +106,7 @@ class IvfTopkSpec extends SparkSpec {
       (2L, vec(200)), (3L, vec(300)),
       (4L, vec(400)), (5L, vec(400))) ++
       (6L until 26L).map(i => (i, vec(1000 + i.toInt)))
-    val dir = java.nio.file.Files.createTempDirectory("graft_agree").toString
+    val dir = tempDir("graft_agree").toString
     docs.map { case (id, t) => (id, t, "en", "srcA", 0L) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")

@@ -76,7 +76,7 @@ class MiningSpec extends SparkSpec {
     // the quadratic pair fanout (C(n,2) from a single row) is the failure
     // mode the bar exists to catch
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_mega").toString
+    val dir = tempDir("graft_mega").toString
     (1 to 1025).map(i => (1L, i.toLong)).toDF("l_orderkey", "l_partkey")
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
     val ex = intercept[Exception] {
@@ -98,24 +98,22 @@ class MiningSpec extends SparkSpec {
     val orderShift = 100000000L
     val partShift = 10000000L
     val li = Tables.lineitem(spark, sf).select("l_orderkey", "l_partkey")
-    val dir = java.nio.file.Files.createTempDirectory("graft_graph3x")
-    try {
-      (0 until 3).map(k => li
-          .withColumn("l_orderkey", col("l_orderkey") + lit(k * orderShift))
-          .withColumn("l_partkey", col("l_partkey") + lit(k * partShift)))
-        .reduce(_ unionByName _)
-        .write.parquet(s"$dir/lineitem.parquet")
-      def top10(d: String) = SparkEntry.queries("q176_triangle_count")(spark, d)
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
-      val baseTop = top10(sf).toSet
-      val replicated = top10(dir.toString)
-      assert(baseTop.nonEmpty && replicated.length == 10)
-      replicated.foreach { case (part, n) =>
-        assert(baseTop.contains((part % partShift, n)),
-          s"3x row ($part, $n) reduces to ${(part % partShift, n)}, absent " +
-            "from the base top-10 — inter-replica contamination")
-      }
-    } finally graft.streaming.StreamOps.deleteTree(dir)
+    val dir = tempDir("graft_graph3x")
+    (0 until 3).map(k => li
+        .withColumn("l_orderkey", col("l_orderkey") + lit(k * orderShift))
+        .withColumn("l_partkey", col("l_partkey") + lit(k * partShift)))
+      .reduce(_ unionByName _)
+      .write.parquet(s"$dir/lineitem.parquet")
+    def top10(d: String) = SparkEntry.queries("q176_triangle_count")(spark, d)
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    val baseTop = top10(sf).toSet
+    val replicated = top10(dir.toString)
+    assert(baseTop.nonEmpty && replicated.length == 10)
+    replicated.foreach { case (part, n) =>
+      assert(baseTop.contains((part % partShift, n)),
+        s"3x row ($part, $n) reduces to ${(part % partShift, n)}, absent " +
+          "from the base top-10 — inter-replica contamination")
+    }
   }
 
   test("q175: every schedule prefix is weight-proportional within one item") {

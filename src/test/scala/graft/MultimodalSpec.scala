@@ -230,37 +230,35 @@ class MultimodalSpec extends SparkSpec {
     // pigeonhole join's candidate rows (sum of C(m,2) over rep buckets) stay
     // within 4 * C(k,2) for k distinct hashes; and the hot class's
     // C(m0,2) hamming-0 pairs must all reach the output.
-    val dir = java.nio.file.Files.createTempDirectory("graft_mm_flood")
-    try {
-      graft.Tables.documents(spark, sf)
-        .withColumn("text", when(pmod(col("doc_id"), lit(9L)) === 0L,
-          concat(lit("ZZ~"), col("text"))).otherwise(col("text")))
-        .write.parquet(s"$dir/documents.parquet")
-      val d = dir.toString
-      val blocks = MultimodalOps.aHashBlocks(MultimodalOps.mediaTable(spark, d))
-        .collect().map(r =>
-          r.getLong(0) -> Seq(r.getInt(1), r.getInt(2), r.getInt(3), r.getInt(4)))
-        .toMap
-      val classSizes = blocks.values.groupBy(identity).values.map(_.size.toLong)
-      val k = classSizes.size.toLong
-      val m0 = classSizes.max
-      val flooded = blocks.keys.count(_ % 9 == 0)
-      assert(m0 >= flooded && flooded >= 10, s"flood class m0=$m0 of $flooded")
-      // reps as the ENGINE's staged class table chose them
-      val reps = SparkEntry.queries("q201_image_classes")(spark, d)
-        .select("class_rep").distinct().collect().map(_.getLong(0))
-      val buckets = reps.toSeq.flatMap(r => blocks(r).zipWithIndex)
-        .groupBy(identity).values.map(_.size.toLong)
-      assert(!buckets.exists(_ > MultimodalOps.HotBucket),
-        "a rep bucket is past HotBucket — the cold-only arithmetic below " +
-          "no longer matches the join")
-      val repCandRows = buckets.map(m => m * (m - 1) / 2).sum
-      assert(repCandRows <= 2L * k * (k - 1),
-        s"rep candidate rows $repCandRows exceed 4*C($k,2) — class collapse broken")
-      val pairs = SparkEntry.queries("q122_image_ahash_neardup")(spark, d).count()
-      assert(pairs >= m0 * (m0 - 1) / 2,
-        s"$pairs pairs < C($m0,2): the flood class lost rows")
-    } finally graft.streaming.StreamOps.deleteTree(dir)
+    val dir = tempDir("graft_mm_flood")
+    graft.Tables.documents(spark, sf)
+      .withColumn("text", when(pmod(col("doc_id"), lit(9L)) === 0L,
+        concat(lit("ZZ~"), col("text"))).otherwise(col("text")))
+      .write.parquet(s"$dir/documents.parquet")
+    val d = dir.toString
+    val blocks = MultimodalOps.aHashBlocks(MultimodalOps.mediaTable(spark, d))
+      .collect().map(r =>
+        r.getLong(0) -> Seq(r.getInt(1), r.getInt(2), r.getInt(3), r.getInt(4)))
+      .toMap
+    val classSizes = blocks.values.groupBy(identity).values.map(_.size.toLong)
+    val k = classSizes.size.toLong
+    val m0 = classSizes.max
+    val flooded = blocks.keys.count(_ % 9 == 0)
+    assert(m0 >= flooded && flooded >= 10, s"flood class m0=$m0 of $flooded")
+    // reps as the ENGINE's staged class table chose them
+    val reps = SparkEntry.queries("q201_image_classes")(spark, d)
+      .select("class_rep").distinct().collect().map(_.getLong(0))
+    val buckets = reps.toSeq.flatMap(r => blocks(r).zipWithIndex)
+      .groupBy(identity).values.map(_.size.toLong)
+    assert(!buckets.exists(_ > MultimodalOps.HotBucket),
+      "a rep bucket is past HotBucket — the cold-only arithmetic below " +
+        "no longer matches the join")
+    val repCandRows = buckets.map(m => m * (m - 1) / 2).sum
+    assert(repCandRows <= 2L * k * (k - 1),
+      s"rep candidate rows $repCandRows exceed 4*C($k,2) — class collapse broken")
+    val pairs = SparkEntry.queries("q122_image_ahash_neardup")(spark, d).count()
+    assert(pairs >= m0 * (m0 - 1) / 2,
+      s"$pairs pairs < C($m0,2): the flood class lost rows")
   }
 
   test("features stay small: binary column dropped before any wide op") {

@@ -196,17 +196,9 @@ class PlanSpec extends SparkSpec {
   // assertions need a fixture where salting actually engages — one hot
   // (event_type, hour) bucket holding every user.
   private lazy val skewedEventsDir: String = {
-    // unique per test JVM (concurrent test runs must not overwrite each
-    // other's staged fixture mid-read), removed on JVM exit
-    val path = java.nio.file.Files.createTempDirectory("graft_planspec_skew")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        val kids = f.listFiles()
-        if (kids != null) kids.foreach(rm)
-        f.delete(); ()
-      }
-      rm(path.toFile)
-    }))
+    // unique per suite run (concurrent test runs must not overwrite each
+    // other's staged fixture mid-read)
+    val path = tempDir("graft_planspec_skew")
     val dir = path.toString
     import org.apache.spark.sql.functions.{col, expr, lit}
     // ts staged as epoch-NANOS int64 — the fixture convention Tables.events
@@ -294,15 +286,7 @@ class PlanSpec extends SparkSpec {
     // the < k-token edge is the one the fixture may not cover: Spark's
     // sequence(1, n) with n <= 0 is DESCENDING (not empty), so an unguarded
     // window transform would fabricate windows for short docs
-    val path = java.nio.file.Files.createTempDirectory("graft_planspec_windedup")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        val kids = f.listFiles()
-        if (kids != null) kids.foreach(rm)
-        f.delete(); ()
-      }
-      rm(path.toFile)
-    }))
+    val path = tempDir("graft_planspec_windedup")
     val dir = path.toString
     val span = "one two three four five six seven eight" // exactly 8 tokens
     import spark.implicits._

@@ -83,7 +83,7 @@ class PropertySpec extends SparkSpec {
     }
     val docs = texts0.zipWithIndex
       .map { case (t, i) => (i.toLong, t, "en", "srcT", t.length.toLong) }
-    val dir = java.nio.file.Files.createTempDirectory("graft_prop").toString
+    val dir = tempDir("graft_prop").toString
     docs.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
 
@@ -123,7 +123,7 @@ class PropertySpec extends SparkSpec {
       val toksB = toksA.take(p) ++ (0 until (m - p)).map(j => s"u${g}_$j")
       Seq((2L * g, toksA.mkString(" ")), (2L * g + 1, toksB.mkString(" ")))
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft_lsh_prop").toString
+    val dir = tempDir("graft_lsh_prop").toString
     docs.map { case (id, t) => (id, t, "en", "srcL", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -223,7 +223,7 @@ class PropertySpec extends SparkSpec {
     // key, orphan an order, delete an embedding — every planted defect
     // must surface in exactly the right check with the right count
     val src = "/root/testdata/sf0.001"
-    val dir = java.nio.file.Files.createTempDirectory("graft_audit").toString
+    val dir = tempDir("graft_audit").toString
     val tables = Seq("region", "nation", "customer", "supplier", "part",
       "orders", "lineitem", "events", "documents", "embeddings")
     tables.foreach { t =>
@@ -298,7 +298,7 @@ class PropertySpec extends SparkSpec {
       assert(TextHash.winnowKernel(toks, 4).toSet == naiveFps(toks, 4))
     }
     // end-to-end query vs the naive pair law on a written corpus
-    val dir = java.nio.file.Files.createTempDirectory("graft_winnow").toString
+    val dir = tempDir("graft_winnow").toString
     docs.map { case (id, ts) =>
       (id, ts.mkString(" "), "en", "srcW", ts.mkString(" ").length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -343,7 +343,7 @@ class PropertySpec extends SparkSpec {
         } ++
         (0 until 5).map(_ => Array.fill(dim)(rnd.nextFloat() * 2f - 1f))
     val rows = vecs.zipWithIndex.map { case (v, i) => (i.toLong, v, i % 3) }
-    val dir = java.nio.file.Files.createTempDirectory("graft_vec_prop").toString
+    val dir = tempDir("graft_vec_prop").toString
     rows.toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
 

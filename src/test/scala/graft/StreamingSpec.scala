@@ -80,9 +80,9 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("checkpointed file stream resumes without reprocessing (ST4)") {
-    val src = Files.createTempDirectory("graft_src").toFile.getAbsolutePath
-    val ckpt = Files.createTempDirectory("graft_ckpt").toFile.getAbsolutePath
-    val out = Files.createTempDirectory("graft_out").toFile.getAbsolutePath
+    val src = tempDir("graft_src").toFile.getAbsolutePath
+    val ckpt = tempDir("graft_ckpt").toFile.getAbsolutePath
+    val out = tempDir("graft_out").toFile.getAbsolutePath
 
     Seq(1L, 2L, 3L).toDF("v").coalesce(1).write.mode("append").parquet(src)
     def run(): Unit = {
@@ -245,41 +245,39 @@ class StreamingSpec extends SparkSpec {
     // nothing. A wrong file order would silently lose trailing windows —
     // this pins the law on the stateful drains (q42 windowed agg + q43
     // watermarked dedup + q64 stream-stream join).
-    val dirFixture = Files.createTempDirectory("graft_dirfix_").toFile
-    try {
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = spark.read.parquet(s"$sf/events.parquet")
-      raw.repartitionByRange(3, col("ts")).write
-        .parquet(s"${dirFixture.getPath}/events.parquet")
-      // customer table rides along for q100-style dims; only events needed
-      // by the three queries under test, but documents keeps doc streams
-      // runnable if this fixture is reused
-      val parts = new java.io.File(dirFixture, "events.parquet").listFiles()
-        .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-        .sortBy(_.getName)
-      assert(parts.length == 3, s"expected 3 range parts, got ${parts.length}")
-      val base = System.currentTimeMillis() - 3600000L
-      parts.zipWithIndex.foreach { case (f, i) =>
-        f.setLastModified(base + i * 60000L) }
-      for (q <- Seq("q42_stream_tumbling", "q43_stream_dedup",
-          "q64_stream_stream_join")) {
-        val single = SparkEntry.queries(q)(spark, sf)
-          .collect().map(_.toString).toSeq
-        val dir = SparkEntry.queries(q)(spark, dirFixture.getPath)
-          .collect().map(_.toString).toSeq
-        assert(dir == single,
-          s"$q diverges on the directory-shaped fixture " +
-            s"(${dir.size} vs ${single.size} rows)")
-        assert(single.nonEmpty)
-      }
-      // the dir-shaped drain really ran multi-batch (3 parts + sentinel
-      // for q64's shape-free check use the last drain info)
-      val info = graft.streaming.StreamOps.lastDrainInfo
-        .getOrElse(fail("no drain progress recorded"))
-      assert(info.batches >= 3,
-        s"directory fixture drained in ${info.batches} batches — " +
-          "multi-file replay not exercised")
-    } finally graft.streaming.StreamOps.deleteTree(dirFixture.toPath)
+    val dirFixture = tempDir("graft_dirfix_").toFile
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val raw = spark.read.parquet(s"$sf/events.parquet")
+    raw.repartitionByRange(3, col("ts")).write
+      .parquet(s"${dirFixture.getPath}/events.parquet")
+    // customer table rides along for q100-style dims; only events needed
+    // by the three queries under test, but documents keeps doc streams
+    // runnable if this fixture is reused
+    val parts = new java.io.File(dirFixture, "events.parquet").listFiles()
+      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+      .sortBy(_.getName)
+    assert(parts.length == 3, s"expected 3 range parts, got ${parts.length}")
+    val base = System.currentTimeMillis() - 3600000L
+    parts.zipWithIndex.foreach { case (f, i) =>
+      f.setLastModified(base + i * 60000L) }
+    for (q <- Seq("q42_stream_tumbling", "q43_stream_dedup",
+        "q64_stream_stream_join")) {
+      val single = SparkEntry.queries(q)(spark, sf)
+        .collect().map(_.toString).toSeq
+      val dir = SparkEntry.queries(q)(spark, dirFixture.getPath)
+        .collect().map(_.toString).toSeq
+      assert(dir == single,
+        s"$q diverges on the directory-shaped fixture " +
+          s"(${dir.size} vs ${single.size} rows)")
+      assert(single.nonEmpty)
+    }
+    // the dir-shaped drain really ran multi-batch (3 parts + sentinel
+    // for q64's shape-free check use the last drain info)
+    val info = graft.streaming.StreamOps.lastDrainInfo
+      .getOrElse(fail("no drain progress recorded"))
+    assert(info.batches >= 3,
+      s"directory fixture drained in ${info.batches} batches — " +
+        "multi-file replay not exercised")
   }
 
   test("RocksDB state store: q149 and q64 drain to identical results (A/B)") {
@@ -348,53 +346,51 @@ class StreamingSpec extends SparkSpec {
     // Staged as ONE file, the fixture's own layout, which the
     // horizon-sentinel staging copies.
     val k = 3
-    val root = Files.createTempDirectory("graft_events_kx")
-    try {
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = spark.read.parquet(s"$sf/events.parquet")
-      val build = root.resolve("build").toString
-      (0 until k).map(i => raw
-          .withColumn("event_id", col("event_id") + lit(i * 1000000000L))
-          .withColumn("user_id", col("user_id") + lit(i * 1000000L)))
-        .reduce(_ unionByName _)
-        .coalesce(1).write.parquet(build)
-      val part = new java.io.File(build).listFiles()
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-        .getOrElse(fail("k-copy events write produced no part file"))
-      val kDir = Files.createDirectories(root.resolve("kx"))
-      Files.move(part.toPath, kDir.resolve("events.parquet"))
-      def drain(q: String, d: String) = {
-        graft.streaming.StreamOps.drainSlot.release() // evidence from this run
-        graft.streaming.StreamOps.lastDrainInfo = None
-        val rows = SparkEntry.queries(q)(spark, d).count()
-        (rows, graft.streaming.StreamOps.lastDrainInfo
-          .getOrElse(fail(s"$q recorded no drain progress")))
+    val root = tempDir("graft_events_kx")
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val raw = spark.read.parquet(s"$sf/events.parquet")
+    val build = root.resolve("build").toString
+    (0 until k).map(i => raw
+        .withColumn("event_id", col("event_id") + lit(i * 1000000000L))
+        .withColumn("user_id", col("user_id") + lit(i * 1000000L)))
+      .reduce(_ unionByName _)
+      .coalesce(1).write.parquet(build)
+    val part = new java.io.File(build).listFiles()
+      .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+      .getOrElse(fail("k-copy events write produced no part file"))
+    val kDir = Files.createDirectories(root.resolve("kx"))
+    Files.move(part.toPath, kDir.resolve("events.parquet"))
+    def drain(q: String, d: String) = {
+      graft.streaming.StreamOps.drainSlot.release() // evidence from this run
+      graft.streaming.StreamOps.lastDrainInfo = None
+      val rows = SparkEntry.queries(q)(spark, d).count()
+      (rows, graft.streaming.StreamOps.lastDrainInfo
+        .getOrElse(fail(s"$q recorded no drain progress")))
+    }
+    for (q <- Seq("q42_stream_tumbling", "q91_stateful_sessions",
+        "q149_stream_topk")) {
+      val (bRows, b) = drain(q, sf)
+      val (kRows, kx) = drain(q, kDir.toString)
+      assert(bRows > 0 && b.maxStateRows > 0, s"$q: empty base drain")
+      if (q == "q91_stateful_sessions") {
+        assert(kRows == k * bRows,
+          s"$q: copies must replay to exactly ${k}x sessions ($bRows -> $kRows)")
+        assert(kx.maxStateRows == k * b.maxStateRows,
+          s"$q: per-user state must track users (${k}x): " +
+            s"${b.maxStateRows} -> ${kx.maxStateRows}")
+      } else {
+        assert(kRows == bRows,
+          s"$q: (window x type) grid must not depend on volume ($bRows -> $kRows)")
+        // the copies share every (window x type) key, so the peak equals
+        // the base's; state keyed by user or event would grow with k
+        assert(kx.maxStateRows == b.maxStateRows,
+          s"$q: window-keyed state grew with volume: " +
+            s"${b.maxStateRows} -> ${kx.maxStateRows}")
       }
-      for (q <- Seq("q42_stream_tumbling", "q91_stateful_sessions",
-          "q149_stream_topk")) {
-        val (bRows, b) = drain(q, sf)
-        val (kRows, kx) = drain(q, kDir.toString)
-        assert(bRows > 0 && b.maxStateRows > 0, s"$q: empty base drain")
-        if (q == "q91_stateful_sessions") {
-          assert(kRows == k * bRows,
-            s"$q: copies must replay to exactly ${k}x sessions ($bRows -> $kRows)")
-          assert(kx.maxStateRows == k * b.maxStateRows,
-            s"$q: per-user state must track users (${k}x): " +
-              s"${b.maxStateRows} -> ${kx.maxStateRows}")
-        } else {
-          assert(kRows == bRows,
-            s"$q: (window x type) grid must not depend on volume ($bRows -> $kRows)")
-          // the copies share every (window x type) key, so the peak equals
-          // the base's; state keyed by user or event would grow with k
-          assert(kx.maxStateRows == b.maxStateRows,
-            s"$q: window-keyed state grew with volume: " +
-              s"${b.maxStateRows} -> ${kx.maxStateRows}")
-        }
-        if (q == "q149_stream_topk")
-          assert(kx.mode == "append" && kx.stateRowsRemoved > 0,
-            s"$q: watermark eviction not observed on ${k}x events")
-      }
-    } finally graft.streaming.StreamOps.deleteTree(root)
+      if (q == "q149_stream_topk")
+        assert(kx.mode == "append" && kx.stateRowsRemoved > 0,
+          s"$q: watermark eviction not observed on ${k}x events")
+    }
   }
 
   test("stateProvider=auto: bounded complete-mode drains keep the default " +
@@ -452,71 +448,66 @@ class StreamingSpec extends SparkSpec {
     // continue to session #2; user 3 appears fresh at session #1
     val batchB = Seq((4L, t0 + 18000 * h, 1L), (5L, t0 + 18060 * h, 2L),
       (6L, t0 + 18120 * h, 3L))
-    val dir = Files.createTempDirectory("graft_resume_fix_").toFile
-    val ck = Files.createTempDirectory("graft_resume_ck_")
-    try {
-      val evDir = s"${dir.getPath}/events.parquet"
-      rows(batchA).coalesce(1).write.parquet(evDir)
-      def drainOnce(src: String, ckDir: String,
-          limited: Boolean): Seq[org.apache.spark.sql.Row] = {
-        // foreachBatch, not the memory sink: memory/console sinks refuse
-        // to RECOVER from an existing checkpoint (the exact path under
-        // test); foreachBatch supports checkpointed restart and hands us
-        // each committed batch's rows
-        val buf = scala.collection.mutable.ArrayBuffer
-          .empty[org.apache.spark.sql.Row]
-        val q = graft.streaming.StreamOps
-          .q91SessionStream(spark, src, rateLimited = limited)
-          .writeStream
-          .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
-            val rows = df.collect()
-            buf.synchronized { buf ++= rows }
-            ()
-          }
-          .outputMode("update").trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", ckDir).start()
-        q.awaitTermination()
-        buf.synchronized(buf.toSeq)
-      }
-      // run 1: only batch A exists; AvailableNow terminates after it —
-      // the "stop after batch 1" of the resume contract
-      val run1 = drainOnce(dir.getPath, ck.toString, false)
-      assert(run1.nonEmpty)
-      // batch B lands (a later part file in the same directory source);
-      // identified by set difference, not mod-time sort — both writes can
-      // land within one mtime granule
-      def partFiles = new java.io.File(evDir).listFiles()
-        .filter(_.getName.endsWith(".parquet")).toSet
-      val partsA = partFiles
-      rows(batchB).coalesce(1).write.mode("append").parquet(evDir)
-      val partsB = (partFiles -- partsA).toSeq
-      assert(partsA.size == 1 && partsB.size == 1,
-        s"expected 1+1 part files, got ${partsA.size}+${partsB.size}")
-      // ascending mod-times give the uninterrupted run below its A→B
-      // micro-batch order (one file per trigger, oldest first)
-      partsB.head.setLastModified(partsA.head.lastModified() + 60000L)
-      // run 2: SAME checkpoint — offsets + state restored
-      val run2 = drainOnce(dir.getPath, ck.toString, false)
-      // (b) state restored: users 1 and 2 continue at session #2, the
-      // fresh user 3 starts at #1 — a lost counter would restart all at #1
-      val r2 = run2.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      assert(r2 == Set((1L, 2L, 1L), (2L, 2L, 1L), (3L, 1L, 1L)),
-        s"resumed batch emitted $r2")
-      // (a) batch-1 files not re-read: run 2 emitted nothing for batch A's
-      // sessions beyond the continuations above (3 rows, one per user)
-      assert(run2.size == 3, s"resume re-emitted ${run2.size} rows")
-      // (c) the uninterrupted law: one query, same two batches (both part
-      // files staged, mod-time ordered, one file per micro-batch) emits
-      // exactly the same final rows as the stop+resume replay
-      val single = drainOnce(dir.getPath,
-        Files.createTempDirectory("graft_resume_ck2_").toString, true)
-      assert(single.map(_.toString).sorted ==
-        (run1 ++ run2).map(_.toString).sorted,
-        "stop+resume replay diverges from the uninterrupted two-batch run")
-    } finally {
-      graft.streaming.StreamOps.deleteTree(dir.toPath)
-      graft.streaming.StreamOps.deleteTree(ck)
+    val dir = tempDir("graft_resume_fix_").toFile
+    val ck = tempDir("graft_resume_ck_")
+    val evDir = s"${dir.getPath}/events.parquet"
+    rows(batchA).coalesce(1).write.parquet(evDir)
+    def drainOnce(src: String, ckDir: String,
+        limited: Boolean): Seq[org.apache.spark.sql.Row] = {
+      // foreachBatch, not the memory sink: memory/console sinks refuse
+      // to RECOVER from an existing checkpoint (the exact path under
+      // test); foreachBatch supports checkpointed restart and hands us
+      // each committed batch's rows
+      val buf = scala.collection.mutable.ArrayBuffer
+        .empty[org.apache.spark.sql.Row]
+      val q = graft.streaming.StreamOps
+        .q91SessionStream(spark, src, rateLimited = limited)
+        .writeStream
+        .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
+          val rows = df.collect()
+          buf.synchronized { buf ++= rows }
+          ()
+        }
+        .outputMode("update").trigger(Trigger.AvailableNow())
+        .option("checkpointLocation", ckDir).start()
+      q.awaitTermination()
+      buf.synchronized(buf.toSeq)
     }
+    // run 1: only batch A exists; AvailableNow terminates after it —
+    // the "stop after batch 1" of the resume contract
+    val run1 = drainOnce(dir.getPath, ck.toString, false)
+    assert(run1.nonEmpty)
+    // batch B lands (a later part file in the same directory source);
+    // identified by set difference, not mod-time sort — both writes can
+    // land within one mtime granule
+    def partFiles = new java.io.File(evDir).listFiles()
+      .filter(_.getName.endsWith(".parquet")).toSet
+    val partsA = partFiles
+    rows(batchB).coalesce(1).write.mode("append").parquet(evDir)
+    val partsB = (partFiles -- partsA).toSeq
+    assert(partsA.size == 1 && partsB.size == 1,
+      s"expected 1+1 part files, got ${partsA.size}+${partsB.size}")
+    // ascending mod-times give the uninterrupted run below its A→B
+    // micro-batch order (one file per trigger, oldest first)
+    partsB.head.setLastModified(partsA.head.lastModified() + 60000L)
+    // run 2: SAME checkpoint — offsets + state restored
+    val run2 = drainOnce(dir.getPath, ck.toString, false)
+    // (b) state restored: users 1 and 2 continue at session #2, the
+    // fresh user 3 starts at #1 — a lost counter would restart all at #1
+    val r2 = run2.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    assert(r2 == Set((1L, 2L, 1L), (2L, 2L, 1L), (3L, 1L, 1L)),
+      s"resumed batch emitted $r2")
+    // (a) batch-1 files not re-read: run 2 emitted nothing for batch A's
+    // sessions beyond the continuations above (3 rows, one per user)
+    assert(run2.size == 3, s"resume re-emitted ${run2.size} rows")
+    // (c) the uninterrupted law: one query, same two batches (both part
+    // files staged, mod-time ordered, one file per micro-batch) emits
+    // exactly the same final rows as the stop+resume replay
+    val single = drainOnce(dir.getPath,
+      tempDir("graft_resume_ck2_").toString, true)
+    assert(single.map(_.toString).sorted ==
+      (run1 ++ run2).map(_.toString).sorted,
+      "stop+resume replay diverges from the uninterrupted two-batch run")
   }
 
   test("output-mode sweep: complete mode only over provably bounded state") {

@@ -18,7 +18,7 @@ class SubstringRemovalSpec extends SparkSpec {
       val tail = (1 to 12).map(j => s"u${i}_$j").mkString(" ")
       (i.toLong, s"$boiler $tail", "en", s"src$i", 0L)
     } :+ ((6L, "short doc only", "en", "src6", 0L)) // < 8 tokens: untouched
-    val dir = java.nio.file.Files.createTempDirectory("q110spec").toString
+    val dir = tempDir("q110spec").toString
     docs.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
 
