@@ -58,11 +58,11 @@ object Main {
     audited(spark, out) {
       val leads = LeadPipeline.dedup(
         LeadPipeline.clean(extract(pages)), "url")
-      LeadPipeline.loadCsv(leads, out)
-      // count what the sink holds: exact regardless of plan shape (observe()
-      // through a global sort overcounts — the range-partitioner's sampling
-      // pass re-executes the metrics node; see EtlSpec E4 for the exact form)
-      val n = spark.read.option("header", "true").csv(out).count()
+      // counted inside the CSV write job: the observation sits above the
+      // global sort, so the range partitioner's sampling job (below the
+      // sort) never evaluates it and the write's result stage counts each
+      // partition once — the sink is not read back
+      val n = LeadPipeline.loadCsv(leads, out)
       RunResult(if (n > 0) "success" else "warning",
         if (n > 0) s"ETL completado: $n registros" else "sin registros", n)
     }
@@ -245,8 +245,8 @@ object Main {
   def stageExtract(spark: SparkSession, startId: Long, endId: Long, rawDir: String): RunResult =
     audited(spark, rawDir) {
       val raw = LeadPipeline.extract(syntheticPages(LeadPipeline.collect(spark, startId, endId)))
-      raw.write.mode("overwrite").json(rawDir)
-      RunResult("success", s"extracción completada", spark.read.json(rawDir).count())
+      RunResult("success", s"extracción completada",
+        LeadPipeline.countedWrite(raw)(_.write.mode("overwrite").json(rawDir)))
     }
 
   /** Cast a JSON stage file back to the canonical lead schema —
@@ -266,16 +266,14 @@ object Main {
     audited(spark, transformedDir) {
       val cleaned = LeadPipeline.dedup(
         LeadPipeline.clean(canonicalize(spark.read.json(rawDir))), "url")
-      cleaned.write.mode("overwrite").json(transformedDir)
-      RunResult("success", "transformación completada", spark.read.json(transformedDir).count())
+      RunResult("success", "transformación completada",
+        LeadPipeline.countedWrite(cleaned)(_.write.mode("overwrite").json(transformedDir)))
     }
 
   def stageLoad(spark: SparkSession, transformedDir: String, out: String): RunResult =
     audited(spark, out) {
       val transformed = canonicalize(spark.read.json(transformedDir))
-      LeadPipeline.loadCsv(transformed, out)
-      RunResult("success", "carga completada",
-        spark.read.option("header", "true").csv(out).count())
+      RunResult("success", "carga completada", LeadPipeline.loadCsv(transformed, out))
     }
 
   /** Manual mode: local HTML files of the real detail markup → pipeline

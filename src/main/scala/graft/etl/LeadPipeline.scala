@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.functions.{CleanFunctions => CF, HtmlFunctions => HF, ReferenceHtml => RH}
@@ -46,15 +46,20 @@ object LeadPipeline {
 
   /** H11 Extract: html column → typed lead fields (manual_scraper.py:80-180),
     * over the synthetic page markup that bulk, sequential and stage-extract
-    * fetch. */
+    * fetch. The address and wa.me matches are selected raw and parsed in a
+    * second projection: both parsing laws read their input in several
+    * CASE/coalesce branches, and Catalyst copies a nested regexp_extract
+    * into each branch instead of sharing it. CollapseProject does not
+    * inline a non-cheap expression referenced more than once, so each page
+    * is scanned once per pattern. */
   def extract(pages: DataFrame): DataFrame =
     withAddress(pages.select(
       col("id_negocio"), col("url"),
       current_timestamp().as("fecha_extraccion"),
       HF.htmlClassText(col("html"), "business-name").as("nombre"),
-      CF.addressParts(HF.htmlClassText(col("html"), "address")).as("addr"),
+      HF.htmlClassText(col("html"), "address").as("addr"),
       HF.htmlPhones(col("html")).as("telefonos"),
-      HF.htmlWhatsapp(col("html")).as("whatsapp"),
+      HF.htmlWhatsappHref(col("html")).as("whatsapp"),
       HF.htmlWebsite(col("html")).as("sitio_web"),
       HF.htmlEmail(col("html")).as("email"),
       HF.htmlSocial(col("html"), "facebook.com").as("facebook"),
@@ -64,7 +69,10 @@ object LeadPipeline {
       HF.htmlClassText(col("html"), "description").as("descripcion"),
       lit(null).cast("string").as("servicios"),
       HF.htmlLat(col("html")).as("latitud"),
-      HF.htmlLng(col("html")).as("longitud")))
+      HF.htmlLng(col("html")).as("longitud"))
+      .withColumns(Map(
+        "addr" -> CF.addressParts(col("addr")),
+        "whatsapp" -> CF.whatsappNumber(col("whatsapp"), lit("")))))
 
   /** [[extract]] for the real Guia Cores detail markup (manual mode's local
     * files and live pages): the same columns in the same order, read by
@@ -113,8 +121,23 @@ object LeadPipeline {
       .select(leadSchema.fieldNames.map(col).toIndexedSeq: _*)
       .as[Lead](org.apache.spark.sql.Encoders.product[Lead])
 
-  /** K1 CSV sink: header + egress sentinel restore + deterministic order. */
-  def loadCsv(leads: DataFrame, path: String): Unit = {
+  /** Runs `write` over `df` and returns the number of rows it wrote,
+    * counted by an [[Observation]] inside the write job, so the sink is
+    * never read back. Any global sort must sit inside `df`, below the
+    * observation: the range partitioner's sampling job then never
+    * evaluates the count, and the write's result stage counts each
+    * partition once. Once an Observation has run, the session no longer
+    * serializes, so no task closure may capture it. */
+  private[graft] def countedWrite(df: DataFrame)(write: DataFrame => Unit): Long = {
+    val rows = Observation()
+    write(df.observe(rows, count(lit(1)).as("rows")))
+    rows.get("rows").asInstanceOf[Long]
+  }
+
+  /** K1 CSV sink: header + egress sentinel restore + deterministic order.
+    * Returns the number of rows written, counted in the write job
+    * ([[countedWrite]]). */
+  def loadCsv(leads: DataFrame, path: String): Long = {
     val ordered = leads.orderBy(col("id_negocio"))
     val stringified = ordered.schema.fields.foldLeft(ordered) { (df, f) =>
       f.dataType match {
@@ -132,8 +155,8 @@ object LeadPipeline {
     }
     // order on the ORIGINAL (numeric) id before stringification — ordering
     // the stringified column would sort ids lexicographically (2 > 10)
-    stringified
-      .write.mode(SaveMode.Overwrite).option("header", "true").csv(path)
+    countedWrite(stringified)(
+      _.write.mode(SaveMode.Overwrite).option("header", "true").csv(path))
   }
 
   /** K7 versioned snapshot: monthly partitions, dynamic overwrite — re-running

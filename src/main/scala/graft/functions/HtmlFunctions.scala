@@ -26,12 +26,14 @@ object HtmlFunctions {
   def htmlPhones(html: Column): Column =
     regexp_extract_all(html, lit("""<a href="tel:([^"]*)""""), lit(1))
 
+  /** H3 — the raw wa.me link href, "" when the page has none. */
+  def htmlWhatsappHref(html: Column): Column =
+    regexp_extract(html, """<a href="(https://wa\.me/[^"]*)"""", 1)
+
   /** H3 — WhatsApp number from a wa.me link (bulk_scraper.py:123-141):
     * `phone` query param, else first digit run of the `text` param. */
-  def htmlWhatsapp(html: Column): Column = {
-    val href = regexp_extract(html, """<a href="(https://wa\.me/[^"]*)"""", 1)
-    CleanFunctions.whatsappNumber(href, lit(""))
-  }
+  def htmlWhatsapp(html: Column): Column =
+    CleanFunctions.whatsappNumber(htmlWhatsappHref(html), lit(""))
 
   /** H4 — website: `a[itemprop="url"]` href (bulk_scraper.py:143-147). */
   def htmlWebsite(html: Column): Column =

@@ -3810,6 +3810,9 @@ object TextOps {
       run = (s, d) => {
         import s.implicits._
         val nH = 64
+        // resolved here, not inside the aggregator: there it would capture
+        // the session, which stops serializing once an Observation has run
+        val longs = implicitly[org.apache.spark.sql.Encoder[Array[Long]]]
         val sketch = new org.apache.spark.sql.expressions.Aggregator[
             (String, Long), Array[Long], Array[Long]] {
           def zero: Array[Long] = Array.fill(nH)(Long.MaxValue)
@@ -3831,8 +3834,8 @@ object TextOps {
             a
           }
           def finish(b: Array[Long]): Array[Long] = b
-          def bufferEncoder = implicitly[org.apache.spark.sql.Encoder[Array[Long]]]
-          def outputEncoder = implicitly[org.apache.spark.sql.Encoder[Array[Long]]]
+          def bufferEncoder = longs
+          def outputEncoder = longs
         }
         val sketches = docTokens(s, d)
           .select(col("source"), explode(col("toks")).as("tok"))

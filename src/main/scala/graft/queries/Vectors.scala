@@ -694,6 +694,9 @@ object Vectors {
       run = (s, d) => {
         import s.implicits._
         val dims = 64
+        // resolved here, not inside the aggregator: there it would capture
+        // the session, which stops serializing once an Observation has run
+        val longs = implicitly[org.apache.spark.sql.Encoder[Array[Long]]]
         val centroid = new org.apache.spark.sql.expressions.Aggregator[
             (Int, Array[Float]), Array[Long], Array[Long]] {
           def zero: Array[Long] = new Array[Long](dims)
@@ -706,8 +709,8 @@ object Vectors {
             var i = 0; while (i < dims) { a(i) += b(i); i += 1 }; a
           }
           def finish(b: Array[Long]): Array[Long] = b
-          def bufferEncoder = implicitly[org.apache.spark.sql.Encoder[Array[Long]]]
-          def outputEncoder = implicitly[org.apache.spark.sql.Encoder[Array[Long]]]
+          def bufferEncoder = longs
+          def outputEncoder = longs
         }
         Tables.embeddings(s, d)
           .select(col("label"), col("embedding"))

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.sql.GraftListenerBridge
 import org.apache.spark.sql.functions._
 import graft.etl.LeadPipeline
 
@@ -482,5 +484,119 @@ class EtlSpec extends SparkSpec {
     val stats = df.queryExecution.observedMetrics("run_stats")
     assert(stats.getAs[Long]("records") > 0)
     assert(stats.getAs[Long]("suspicious") == 0)
+  }
+
+  /** Hand-built synthetic pages over every address and wa.me shape the
+    * extraction laws branch on, from an RDD so the optimizer cannot fold
+    * the plan into a local relation. */
+  private def shapePages = {
+    val addresses = Seq(
+      Some("Calle Sin Localidad 12"), Some("Calle Falsa 2 - Rosario"),
+      Some("Ruta 9 - Km 5 - Local 3 - Funes"), None)
+    val links = Seq(
+      Some("https://wa.me/?phone=5493415551234&text=Hola%20341"),
+      Some("https://wa.me/?text=Consulta%20al%20341%205550"), None)
+    val rows = for ((a, i) <- addresses.zipWithIndex; (w, j) <- links.zipWithIndex) yield {
+      val id = (i * links.size + j).toLong
+      (id, s"https://example.test/?id=$id",
+        s"""<html><body><h1 class="business-name">Biz $id</h1>""" +
+          a.map(v => s"""<span class="address">$v</span>""").getOrElse("") +
+          w.map(v => s"""<a href="$v">chat</a>""").getOrElse("") +
+          "</body></html>")
+    }
+    spark.sparkContext.parallelize(rows, 2).toDF("id_negocio", "url", "html")
+  }
+
+  test("extract equals the per-field composition for every address and wa.me shape") {
+    import graft.functions.{CleanFunctions => CF, HtmlFunctions => HF}
+    val pages = shapePages
+    val got = LeadPipeline.extract(pages)
+    // same columns, order and types as the schema it has always had
+    val (fields, addr) = LeadPipeline.leadSchema.fields.toSeq
+      .partition(f => f.name != "direccion" && f.name != "localidad")
+    assert(got.schema.map(f => f.name -> f.dataType) ==
+      (fields ++ addr).map(f => f.name -> f.dataType))
+    val composed = pages.select(col("id_negocio"),
+        CF.addressParts(HF.htmlClassText(col("html"), "address")).as("addr"),
+        HF.htmlWhatsapp(col("html")).as("whatsapp"))
+      .select(col("id_negocio"), col("addr.direccion").as("direccion"),
+        col("addr.localidad").as("localidad"), col("whatsapp"))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("id_negocio", "direccion", "localidad", "whatsapp")
+        .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getString(3)))
+        .sortBy(_._1).toSeq
+    val expected = rows(composed)
+    assert(rows(got) == expected)
+    // the composition itself covers every branch of both laws
+    assert(expected.map(r => (r._2, r._3)).distinct == Seq(
+      ("Calle Sin Localidad 12", null), ("Calle Falsa 2", "Rosario"),
+      ("Ruta 9 - Km 5 - Local 3", "Funes"), (null, null)))
+    assert(expected.map(_._4).take(3) == Seq("5493415551234", "341", null))
+  }
+
+  test("the optimized extract + clean plan holds each HTML regex once") {
+    val plan = LeadPipeline.clean(LeadPipeline.extract(shapePages))
+      .queryExecution.optimizedPlan.toString
+    def occurrences(s: String): Int = plan.split(java.util.regex.Pattern.quote(s), -1).length - 1
+    assert(occurrences("class=\"address\"") == 1, plan)
+    assert(occurrences("wa\\.me") == 1, plan)
+  }
+
+  /** Bytes that tasks read while `body` runs, summed after the listener
+    * bus has delivered every event. */
+  private def bytesReadDuring(body: => Unit): Long = {
+    val sc = spark.sparkContext
+    val bytes = new java.util.concurrent.atomic.AtomicLong(0)
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => bytes.addAndGet(m.inputMetrics.bytesRead))
+    }
+    GraftListenerBridge.flush(sc)
+    sc.addSparkListener(listener)
+    try { body; GraftListenerBridge.flush(sc) }
+    finally sc.removeSparkListener(listener)
+    bytes.get()
+  }
+
+  test("bulk and stage-extract count their rows in the write job, never reading the sink") {
+    val out = tmp("graft_count_bulk")
+    var r: graft.app.Main.RunResult = null
+    assert(bytesReadDuring { r = graft.app.Main.runBulk(spark, 1, 200, out) } == 0L)
+    assert(r.status == "success" && r.recordsProcessed == 200)
+    assert(spark.read.option("header", "true").csv(out).count() == 200)
+
+    val raw = tmp("graft_count_raw")
+    assert(bytesReadDuring { r = graft.app.Main.stageExtract(spark, 1, 30, raw) } == 0L)
+    assert(r.status == "success" && r.recordsProcessed == 30)
+    assert(spark.read.json(raw).count() == 30)
+  }
+
+  test("loadCsv returns the deduplicated row count, and 0 for an empty frame") {
+    val cleaned = LeadPipeline.clean(LeadPipeline.extract(shapePages))
+    val out = tmp("graft_count_dedup")
+    assert(LeadPipeline.loadCsv(LeadPipeline.dedup(cleaned.union(cleaned), "url"), out) == 12)
+    assert(spark.read.option("header", "true").csv(out).count() == 12)
+
+    val none = LeadPipeline.clean(LeadPipeline.extract(
+      shapePages.filter(col("id_negocio") < 0)))
+    assert(LeadPipeline.loadCsv(LeadPipeline.dedup(none, "url"), tmp("graft_count_none")) == 0)
+    val local = Seq.empty[(Long, String)].toDF("id_negocio", "nombre")
+    assert(LeadPipeline.loadCsv(local, tmp("graft_count_local")) == 0)
+    assert(graft.app.Main.runBulk(spark, 5, 4, tmp("graft_count_range")) ==
+      graft.app.Main.RunResult("warning", "sin registros", 0L))
+  }
+
+  test("a loadCsv whose write fails throws the Spark error instead of waiting on its count") {
+    import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
+    import org.scalatest.time.SpanSugar._
+    implicit val signaler: Signaler = ThreadSignaler
+    val failing = spark.range(0, 100, 1, 2).select(col("id").as("id_negocio"),
+      when(col("id") === 57, raise_error(lit("planted write failure")))
+        .otherwise(lit("x")).as("nombre"))
+    val e = TimeLimits.failAfter(60.seconds) {
+      intercept[Exception](LeadPipeline.loadCsv(failing, tmp("graft_count_fail")))
+    }
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(chain.exists(t => String.valueOf(t.getMessage).contains("planted write failure")), e)
   }
 }

@@ -2,14 +2,22 @@ package graft
 
 import java.nio.file.{Files, Path}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM, forked by sbt): the
-  * harness session at 4 threads. */
+  * harness session at 4 threads, in the state an ETL run leaves it in. An
+  * Observation has run in it, and from then on a task that captures the
+  * session fails to serialize — so every suite sees that failure, whatever
+  * order the suites run in. */
 object TestSpark {
-  lazy val spark: SparkSession = Harness.session(4)
+  lazy val spark: SparkSession = {
+    val s = Harness.session(4)
+    s.range(1).observe(Observation(), count(lit(1))).collect()
+    s
+  }
 }
 
 abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
