@@ -15,8 +15,8 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = Harness.envCpus
     val spark = Harness.session(cpus)
-    // spike attribution (GC vs spill vs host): every timed region below also
-    // records task-metric deltas, written per pass into BENCH_DETAIL
+    // spike attribution (GC vs spill vs host): every query and staged build
+    // below also gets its own task metrics, written per pass into BENCH_DETAIL
     MetricsTap.install(spark.sparkContext)
     // SPARK_GRAFT_ONLY=q24_json_extract,q71_map_explode runs an isolated
     // subset — the A/B knob for separating a real per-query regression from
@@ -26,6 +26,7 @@ object Bench {
     val names = only.getOrElse(queries.keys.toSeq).sorted
     Harness.warm(spark, names,
       if (new java.io.File(Harness.WarmDir).isDirectory) Harness.WarmDir else sfDir)
+    MetricsTap.take() // the warm-up's staged builds are not a timed pass
     // Session-storage telemetry, one sample per pass boundary: persistent
     // RDD count, storage bytes (mem + disk), and unreleased scoped
     // checkpoints. This is the eviction-pressure gauge — round 6's cross-
@@ -34,10 +35,10 @@ object Bench {
     // caches thrashed, and nothing measured it. Bounded counts across
     // passes = the leak stays fixed.
     val storageLog = scala.collection.mutable.ArrayBuffer.empty[String]
-    // name -> per-pass task-metric deltas, in pass order (parallel to the
-    // per-pass wall times min() erases)
+    // row -> its task metrics in each pass it ran, in pass order (parallel
+    // to the per-pass wall times min() erases)
     val qMetrics =
-      scala.collection.mutable.LinkedHashMap[String, List[MetricsTap.Snap]]()
+      scala.collection.mutable.Map[String, List[MetricsTap.Snap]]()
     // query -> exception class of its most recent failure (any pass)
     val failed = scala.collection.mutable.LinkedHashMap[String, String]()
     def logStorage(label: String): Unit = {
@@ -92,11 +93,9 @@ object Bench {
     // ran under, not just its endpoints.
     val inPassAnchors = Seq.fill(3)(
       scala.collection.mutable.ArrayBuffer.empty[Double])
-    def pass(samples: scala.collection.mutable.ArrayBuffer[Double]) =
-      Harness.pass(names, () => samples += HostAnchor.parallel(cpus)) { name =>
-        val m0 = MetricsTap.snapshot() // flushes the bus — off the clock
+    def pass(samples: scala.collection.mutable.ArrayBuffer[Double]) = {
+      val rows = Harness.pass(spark, names, () => samples += HostAnchor.parallel(cpus)) { name =>
         val b0 = Staged.buildStageTotals
-        val bm0 = Staged.buildMetricTotals
         val t0 = System.nanoTime()
         // a failing query must be VISIBLE, not a fast -1: its wall time is
         // fail-fast-small, so min() would otherwise make a broken suite
@@ -106,10 +105,6 @@ object Bench {
         catch { case t: Throwable => failed.synchronized {
           failed(name) = t.getClass.getSimpleName } }
         val dt = (System.nanoTime() - t0) / 1e9
-        // per-pass GC/spill attribution for THIS query's tasks (snapshot
-        // flush happens after the timer stops; see MetricsTap). Recorded
-        // per pass — min-of-passes timing must not hide a pass-2 spike.
-        val dm = MetricsTap.snapshot() - m0
         // shared-stage builds triggered by THIS query become first-class
         // rows ("stage:<name>") and are SUBTRACTED from the query's own
         // time — so a query's trend line measures its consume cost, stable
@@ -120,28 +115,6 @@ object Bench {
         val stageDelta = Staged.buildStageTotals
           .map { case (k, v) => k -> (v - b0.getOrElse(k, 0.0)) }
           .filter(_._2 > 1e-3)
-        // ...and the build's GC/spill moves with it: the query's metric
-        // delta is reduced by the triggered builds' deltas (clamped at 0 —
-        // listener updates race the snapshot by a task or two) and each
-        // stage: row carries its own Snap, so query_metrics and the timing
-        // rows attribute the same way
-        val zero = MetricsTap.Snap(0L, 0L, 0L)
-        val stageM = Staged.buildMetricTotals
-          .map { case (k, v) => k -> (v - bm0.getOrElse(k, zero)) }
-          .filter { case (k, _) => stageDelta.contains(k) }
-        val sTot = stageM.values.foldLeft(zero)((a, b) => MetricsTap.Snap(
-          a.gcMs + b.gcMs, a.spillMemBytes + b.spillMemBytes,
-          a.spillDiskBytes + b.spillDiskBytes))
-        val dmAdj = MetricsTap.Snap(
-          math.max(0L, dm.gcMs - sTot.gcMs),
-          math.max(0L, dm.spillMemBytes - sTot.spillMemBytes),
-          math.max(0L, dm.spillDiskBytes - sTot.spillDiskBytes))
-        qMetrics.synchronized {
-          qMetrics(name) = qMetrics.getOrElse(name, Nil) :+ dmAdj
-          stageM.foreach { case (k, v) =>
-            qMetrics(s"stage:$k") = qMetrics.getOrElse(s"stage:$k", Nil) :+ v
-          }
-        }
         if (failed.contains(name)) Nil // drop its stage rows too: a build
         else {                         // aborted mid-failure isn't a timing
           val qRow = name -> math.max(0.0, dt - stageDelta.values.sum)
@@ -149,6 +122,17 @@ object Bench {
             .map { case (k, v) => s"stage:$k" -> v }
         }
       }.flatten
+      // per-pass GC/spill/tasks, one Snap per row: the query's own tasks
+      // under its name, each staged build's under its stage: row (see
+      // MetricsTap) — taken once, after the pass, off every clock. Recorded
+      // per pass: min-of-passes timing must not hide a pass-2 spike.
+      val snaps = MetricsTap.take()
+      (snaps.keySet ++ rows.map(_._1)).foreach { k =>
+        qMetrics(k) = qMetrics.getOrElse(k, Nil) :+
+          snaps.getOrElse(k, MetricsTap.Snap.zero)
+      }
+      rows
+    }
     val p1 = pass(inPassAnchors(0)); boundary("pass1")
     val p2 = pass(inPassAnchors(1)); boundary("pass2")
     val p3 = pass(inPassAnchors(2)); boundary("pass3")

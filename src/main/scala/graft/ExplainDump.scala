@@ -23,7 +23,7 @@ object ExplainDump {
     val names = Harness.select(args(3))
     val spark = Harness.session(Harness.envCpus)
     new java.io.File(outDir).mkdirs()
-    Harness.pass(names) { name =>
+    Harness.pass(spark, names) { name =>
       val df = SparkEntry.registry(name).run(spark, sfDir)
       df.collect() // finalize AQE
       val s = df.queryExecution.explainString(ExplainMode.fromString("formatted"))

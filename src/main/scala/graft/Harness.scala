@@ -62,9 +62,12 @@ object Harness {
     *    (r12); with it the same build measured flat (r13). This is the
     *    between-queries twin of `spark.cleaner.periodicGC.interval`
     *    (default 30 min, never inside a pass); a long-lived production
-    *    session sets that conf instead. */
-  def pass[A](names: Seq[String], onGcTick: () => Unit = () => ())(
-      each: String => A): Seq[A] = {
+    *    session sets that conf instead.
+    *
+    * Each `each(name)` runs under the metrics key `name`, so its tasks are
+    * counted on that row (see [[MetricsTap]]). */
+  def pass[A](spark: SparkSession, names: Seq[String],
+      onGcTick: () => Unit = () => ())(each: String => A): Seq[A] = {
     Staged.releaseAll()
     Checkpoints.releaseScoped()
     System.gc()
@@ -73,7 +76,7 @@ object Harness {
       Checkpoints.releaseScoped()
       sinceGc += 1
       if (sinceGc >= 24) { sinceGc = 0; System.gc(); onGcTick() }
-      each(name)
+      MetricsTap.withKey(spark.sparkContext, name)(each(name))
     }
   }
 

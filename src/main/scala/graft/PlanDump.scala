@@ -55,7 +55,7 @@ object PlanDump {
     sb ++= "executed (adaptive-final) plan; the one-line note names the shape that\n"
     sb ++= "makes the query survive a 100 TB scale-up (asserted in PlanSpec).\n"
     val notes = headline.toMap
-    Harness.pass(headline.map(_._1)) { name =>
+    Harness.pass(spark, headline.map(_._1)) { name =>
       val df = SparkEntry.registry(name).run(spark, sfDir)
       df.collect() // finalize AQE so the printed plan is the executed one
       val plan = df.queryExecution.executedPlan.toString

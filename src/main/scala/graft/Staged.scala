@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** One staged shared intermediate: a table built once per (session, dir)
@@ -20,8 +21,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    convergence `require`) leaves the slot empty and the next call
   *    rebuilds — never a stale entry pointing at released blocks, which
   *    for a localCheckpoint table could not recompute;
-  *  - the build is timed under `name` (exclusive of nested slot builds)
-  *    and stored only if it returns.
+  *  - the build is timed under `name` and its tasks are counted under the
+  *    metrics key `stage:<name>`, both exclusive of nested slot builds,
+  *    and the value is stored only if the build returns.
   *
   * `free` matches the value's storage kind: `unpersist` for a cached
   * table, [[Checkpoints.release]] for a plain localCheckpoint (unpersist
@@ -34,7 +36,7 @@ final class Staged[A] private (val name: String, free: A => Unit) {
     Staged.synchronized {
       peek(s, d).getOrElse {
         release()
-        val v = Staged.timed(name)(build)
+        val v = Staged.timed(s.sparkContext, name)(build)
         slot = Some((s, d, v))
         v
       }
@@ -131,88 +133,35 @@ object Staged {
   private val stageTimes =
     scala.collection.mutable.LinkedHashMap[String, List[Double]]()
   def stageTimings: Map[String, List[Double]] = synchronized { stageTimes.toMap }
-  // Names recorded via timed (BUILD wall times), as opposed to the
-  // recordStat audit entries (*_gc_ms, *_spill_mb, round counts, …) that
-  // share stageTimes. Bench diffs buildStageTotals around each query to
-  // report builds as first-class rows SUBTRACTED from the triggering query
-  // — without this split, per-query trend lines swing 20× whenever suite
-  // name order moves which query triggers a shared build (r10: q35 6.15 s →
-  // 0.29 s with no code change when q135 started sorting first).
-  private val buildStageNames = scala.collection.mutable.LinkedHashSet[String]()
-  /** name → cumulative build seconds so far (builds only, no stat rows). */
+  /** name → cumulative build seconds so far. Bench diffs this around each
+    * query to report builds as first-class rows SUBTRACTED from the
+    * triggering query — otherwise per-query trend lines swing 20× whenever
+    * suite name order moves which query triggers a shared build (r10: q35
+    * 6.15 s → 0.29 s with no code change when q135 started sorting first). */
   def buildStageTotals: Map[String, Double] = synchronized {
-    buildStageNames.iterator
-      .map(n => n -> stageTimes.getOrElse(n, Nil).sum).toMap
+    stageTimes.view.mapValues(_.sum).toMap
   }
-  // Cumulative task-metric deltas per build stage — the Snap twin of
-  // buildStageTotals, so Bench can move a triggered build's GC/spill onto
-  // its stage: row the same way it moves the wall time (otherwise a
-  // 0.3 s consume-only query row carries the build's hundreds of MB of
-  // spill in query_metrics — the attribution confusion the stage rows
-  // exist to remove, reproduced in the metrics record).
-  private val stageMetricSums =
-    scala.collection.mutable.LinkedHashMap[String, MetricsTap.Snap]()
-  def buildMetricTotals: Map[String, MetricsTap.Snap] = synchronized {
-    stageMetricSums.toMap
-  }
+
   // Build timers nest (pairs → exploded → arrays, all under this lock,
   // same thread), so each stage records its EXCLUSIVE time — child build
   // time is subtracted via the frame stack — and the BENCH_DETAIL
-  // "stages" entries sum without overlap.
-  /** Auxiliary per-build stat (round counts/durations) into the same map.
-    * A `diag_` prefix marks time already inside a build's exclusive total,
-    * excluded from the stages-sum-without-overlap invariant. */
-  private[graft] def recordStat(name: String, v: Double): Unit = synchronized {
-    stageTimes(name) = stageTimes.getOrElse(name, Nil) :+ v
-  }
-
+  // "stages" entries sum without overlap. The build's jobs run under the
+  // `stage:<name>` metrics key, so its task metrics are exclusive the
+  // same way (see MetricsTap).
   private val frameChildNs = scala.collection.mutable.Stack[Long]()
-  private def timed[T](name: String)(f: => T): T = synchronized {
-    // Bench runs also attribute WHY per stage (GC vs spill — see MetricsTap
-    // scaladoc): deltas are INCLUSIVE of nested builds (no exclusive-time
-    // subtraction as for wall time — a child's spill is still this build's
-    // spill for diagnosis), and the snapshot's bus flush sits outside no
-    // timer here because stage wall time is measured around the whole build
-    // anyway — the flush cost (ms) is noise against a multi-second build.
-    val m0 = if (MetricsTap.enabled) Some(MetricsTap.snapshot()) else None
+  private def timed[T](sc: SparkContext, name: String)(f: => T): T = synchronized {
     val t0 = System.nanoTime()
     frameChildNs.push(0L)
-    var popped = false // own-frame pop happened: the catch must not pop again
-    try {
-      val r = f
-      val elapsed = System.nanoTime() - t0
-      val childNs = frameChildNs.pop()
-      popped = true
-      if (frameChildNs.nonEmpty)
-        frameChildNs.push(frameChildNs.pop() + elapsed)
-      stageTimes(name) =
-        stageTimes.getOrElse(name, Nil) :+ (elapsed - childNs) / 1e9
-      buildStageNames += name
-      m0.foreach { before =>
-        // the snapshot's bus flush (bounded 10 s) runs after THIS stage's
-        // elapsed is taken, but inside any enclosing stage's timed region —
-        // credit it to the parent's child-time so a pathological bus stall
-        // can't masquerade as parent stage time, and record it for audit
-        val f0 = System.nanoTime()
-        val d = MetricsTap.snapshot() - before
-        val flushNs = System.nanoTime() - f0
-        if (frameChildNs.nonEmpty)
-          frameChildNs.push(frameChildNs.pop() + flushNs)
-        recordStat(s"${name}_gc_ms", d.gcMs.toDouble)
-        recordStat(s"${name}_spill_mb",
-          (d.spillMemBytes + d.spillDiskBytes).toDouble / (1 << 20))
-        recordStat(s"${name}_flush_ms", flushNs / 1e6)
-        val prev = stageMetricSums.getOrElse(name, MetricsTap.Snap(0L, 0L, 0L))
-        stageMetricSums(name) = MetricsTap.Snap(
-          prev.gcMs + d.gcMs, prev.spillMemBytes + d.spillMemBytes,
-          prev.spillDiskBytes + d.spillDiskBytes)
-      }
-      r
-    } catch { // pop the frame on failure too, or the orphan entry corrupts
-      // later attributions — but ONLY our own frame: an exception thrown
-      // after the success-path pop (the metrics flush can throw on a bus
-      // stall) must not steal the parent's frame or pop an empty stack
-      case t: Throwable => if (!popped) frameChildNs.pop(); throw t
-    }
+    // pop the frame on failure too, or the orphan entry corrupts later
+    // attributions
+    val r = try MetricsTap.withKey(sc, s"stage:$name")(f)
+      catch { case t: Throwable => frameChildNs.pop(); throw t }
+    val elapsed = System.nanoTime() - t0
+    val childNs = frameChildNs.pop()
+    if (frameChildNs.nonEmpty)
+      frameChildNs.push(frameChildNs.pop() + elapsed)
+    stageTimes(name) =
+      stageTimes.getOrElse(name, Nil) :+ (elapsed - childNs) / 1e9
+    r
   }
 }

@@ -14,7 +14,7 @@ object Verify {
     val spark = Harness.session(Harness.envCpus)
     new java.io.File(outDir).mkdirs()
     val queries = SparkEntry.queries
-    Harness.pass(names) { name =>
+    Harness.pass(spark, names) { name =>
       try queries(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name.parquet")
       catch { case e: Throwable =>

@@ -284,7 +284,7 @@ object SuiteScale {
   private def pass(spark: SparkSession, dir: String,
       names: Seq[String]): Map[String, Cell] = {
     val queries = graft.SparkEntry.queries
-    graft.Harness.pass(names) { name =>
+    graft.Harness.pass(spark, names) { name =>
       val t0 = System.nanoTime()
       val rows =
         try queries(name)(spark, dir).count()

@@ -1,25 +1,21 @@
 package graft.etl
 
 /** Operability config layer (reference src/common/config.py + exampleEnv):
-  * every knob the reference reads from `.env` — DB target, collector
-  * parallelism/chunking, fetch timeout — resolved from the environment with
-  * the reference's defaults. Spark-side mapping: MAX_WORKERS sizes the fetch
-  * stage's partition count (task parallelism IS the worker pool), CHUNK_SIZE
-  * is the S2 id-chunk width, and the DB_* block renders the JDBC url the
-  * [[JdbcUpsert]] sink connects to. Pass an `env` map for tests; defaults to
-  * the process environment. */
+  * the DB target, fetch timeout and retry policy, resolved from the
+  * environment with the reference's defaults. The DB_* block renders the
+  * JDBC url the [[JdbcUpsert]] sink connects to; TIMEOUT bounds each
+  * [[HttpPageClient]] request and RETRY_* are the retry policy the CLI
+  * hands [[FetchStage.fetchPages]]. Pass an `env` map for tests; defaults
+  * to the process environment. */
 final case class GraftConfig(
     dbHost: String,
     dbPort: Int,
     dbName: String,
     dbUser: String,
     dbPassword: String,
-    maxWorkers: Int,
-    chunkSize: Int,
     timeoutSec: Int,
     retryAttempts: Int,
-    retryDelayMs: Long,
-    baseUrl: String) {
+    retryDelayMs: Long) {
 
   /** Postgres JDBC url for the K4 sink (credentials go in connection
     * properties, never in the url). */
@@ -46,11 +42,7 @@ object GraftConfig {
     dbName = env.getOrElse("DB_NAME", "etl_db"),
     dbUser = env.getOrElse("DB_USER", "postgres"),
     dbPassword = env.getOrElse("DB_PASSWORD", ""),
-    maxWorkers = env.get("MAX_WORKERS").map(_.toInt).getOrElse(4),
-    chunkSize = env.get("CHUNK_SIZE").map(_.toInt).getOrElse(100),
     timeoutSec = env.get("TIMEOUT").map(_.toInt).getOrElse(10),
     retryAttempts = env.get("RETRY_ATTEMPTS").map(_.toInt).getOrElse(3),
-    retryDelayMs = env.get("RETRY_DELAY_MS").map(_.toLong).getOrElse(5000L),
-    baseUrl = env.getOrElse("BASE_URL",
-      "https://www.guiacores.com.ar/index.php?r=search%2Fdetail&id="))
+    retryDelayMs = env.get("RETRY_DELAY_MS").map(_.toLong).getOrElse(5000L))
 }

@@ -16,7 +16,8 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * table and no output structure, participates in whole-stage codegen like
   * any binary expression (static-kernel call, no catalyst↔JVM row
   * conversion), and measurably cuts the GC pressure the full-suite bench
-  * attributes to the pair build (BENCH_DETAIL `jaccard_pairs_build_gc_ms`).
+  * attributes to the pair build (BENCH_DETAIL
+  * `query_metrics["stage:jaccard_pairs_build"]`).
   *
   * PRECONDITION (same as the `size(array_intersect)` form it replaces, see
   * the interCount call sites): inputs are per-doc-DISTINCT arrays with no

@@ -22,14 +22,8 @@ object EtlOps {
     * retention), and removed on exit. */
   private lazy val scratchRoot: java.nio.file.Path = {
     val p = java.nio.file.Files.createTempDirectory("graft_scratch")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        val kids = f.listFiles()
-        if (kids != null) kids.foreach(rm)
-        f.delete(); ()
-      }
-      rm(p.toFile)
-    }))
+    Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      graft.streaming.StreamOps.deleteTree(p)))
     p
   }
   // generation counters + live dirs per scratch name (keep-2 retention)
@@ -50,14 +44,7 @@ object EtlOps {
     val dq = scratchLive.computeIfAbsent(name,
       _ => new java.util.ArrayDeque[java.nio.file.Path]())
     dq.addLast(p)
-    while (dq.size() > 2) {
-      def rm(f: java.io.File): Unit = {
-        val kids = f.listFiles()
-        if (kids != null) kids.foreach(rm)
-        f.delete(); ()
-      }
-      rm(dq.removeFirst().toFile)
-    }
+    while (dq.size() > 2) graft.streaming.StreamOps.deleteTree(dq.removeFirst())
     p.toString
   }
 

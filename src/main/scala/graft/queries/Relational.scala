@@ -152,13 +152,7 @@ object Relational {
           // bucketed tables, then the manifest LAST
           specs.foreach { case (name, _, _, _) =>
             s.sql(s"DROP TABLE IF EXISTS $name") }
-          if (java.nio.file.Files.exists(root)) {
-            import scala.jdk.CollectionConverters._
-            val walk = java.nio.file.Files.walk(root)
-            try walk.iterator().asScala.toSeq.reverse
-              .foreach(java.nio.file.Files.deleteIfExists(_))
-            finally walk.close()
-          }
+          graft.streaming.StreamOps.deleteTree(root)
           specs.foreach { case (name, loc, key, tbl) =>
             tbl().write.mode("overwrite")
               .bucketBy(LayoutBuckets, key).sortBy(key)

@@ -190,7 +190,6 @@ object TextOps {
       // obscurely at the oracle hash compare
       while (!converged && rounds < 64) { // near-dup components are
         rounds += 1 // dup-cliques + short chains: converges in 1-2 rounds
-        val rt0 = System.nanoTime()
         val viaEdge = edges
           .join(labels.withColumnRenamed("doc", "doc_a"), Seq("doc_a"))
           .select(col("doc_b").as("doc"), col("root"))
@@ -202,13 +201,6 @@ object TextOps {
         // k-1's blocks are dead; free them NOW so the loop holds at most
         // two rounds of blocks instead of leaking one table per round
         graft.Checkpoints.release(labels)
-        // per-round wall time into the stage map — the diagnostic that
-        // localizes a slow build to one round vs uniform degradation.
-        // "diag_" prefix: this time is INSIDE cluster_labels_build's
-        // exclusive total, so diag_* entries are excluded from the
-        // stages-sum-without-overlap invariant
-        graft.Staged.recordStat("diag_cluster_labels_round_secs",
-          (System.nanoTime() - rt0) / 1e9)
         converged = s2 == prevSum
         prevSum = s2
         labels = next

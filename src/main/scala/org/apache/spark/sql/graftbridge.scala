@@ -47,9 +47,9 @@ trait GraftExpectsStringInput
   * object. The checkpointed RDD sits behind the plan's `LogicalRDD` leaf
   * (package-scoped in Spark 4), so the explicit-release path
   * (graft.Checkpoints) reaches it through this shim. */
-/** Listener-bus flush for metric snapshots. Task-metric listener events are
-  * delivered async; a reader that snapshots counters right after an action
-  * returns can miss the tail of its own tasks. `waitUntilEmpty` is
+/** Listener-bus flush before reading listener-fed metrics. Task-metric
+  * listener events are delivered async; a reader that takes counters right
+  * after an action returns can miss the tail of its own tasks. `waitUntilEmpty` is
   * `private[spark]` (Spark uses it for exactly this in its own tests), so
   * the bench's off-the-clock metric attribution reaches it through here. */
 object GraftListenerBridge {

@@ -3,7 +3,6 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.GraftListenerBridge
 import org.apache.spark.sql.functions._
 import graft.etl.LeadPipeline
 
@@ -545,16 +544,11 @@ class EtlSpec extends SparkSpec {
   /** Bytes that tasks read while `body` runs, summed after the listener
     * bus has delivered every event. */
   private def bytesReadDuring(body: => Unit): Long = {
-    val sc = spark.sparkContext
     val bytes = new java.util.concurrent.atomic.AtomicLong(0)
-    val listener = new SparkListener {
+    listenDuring(new SparkListener {
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
         Option(e.taskMetrics).foreach(m => bytes.addAndGet(m.inputMetrics.bytesRead))
-    }
-    GraftListenerBridge.flush(sc)
-    sc.addSparkListener(listener)
-    try { body; GraftListenerBridge.flush(sc) }
-    finally sc.removeSparkListener(listener)
+    })(body)
     bytes.get()
   }
 

@@ -23,7 +23,7 @@ class HarnessSpec extends SparkSpec {
     try {
       st(spark, "d")("held")
       assert(Staged.held.contains("harness_spec_slot"))
-      val seen = Harness.pass(Seq("a", "b"))(_ => Staged.held)
+      val seen = Harness.pass(spark, Seq("a", "b"))(_ => Staged.held)
       assert(seen == Seq(Nil, Nil))
     } finally st.close()
   }
@@ -38,7 +38,7 @@ class HarnessSpec extends SparkSpec {
     }
     val (first, left) = run()
     assert(left > 0, "q61 registered no scratch")
-    val counts = Harness.pass(Seq.fill(3)("q61_ntile_deciles")) { _ =>
+    val counts = Harness.pass(spark, Seq.fill(3)("q61_ntile_deciles")) { _ =>
       val before = Checkpoints.scopedCount
       val (df, after) = run()
       (before, after, df)
@@ -52,7 +52,7 @@ class HarnessSpec extends SparkSpec {
   test("onGcTick fires once per 24 queries, before the 24th, 48th, ...") {
     var ran = 0
     val ticks = collection.mutable.ArrayBuffer[Int]()
-    Harness.pass(Seq.tabulate(50)(i => s"q$i"), () => ticks += ran)(_ => ran += 1)
+    Harness.pass(spark, Seq.tabulate(50)(i => s"q$i"), () => ticks += ran)(_ => ran += 1)
     assert(ran == 50)
     assert(ticks == Seq(23, 47))
   }

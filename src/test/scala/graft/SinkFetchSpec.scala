@@ -481,11 +481,9 @@ class SinkFetchSpec extends SparkSpec {
   test("config: env layer resolves reference defaults and overrides") {
     val d = graft.etl.GraftConfig.load(Map.empty)
     assert(d.jdbcUrl == "jdbc:postgresql://localhost:5432/etl_db")
-    assert(d.maxWorkers == 4 && d.chunkSize == 100 && d.retryAttempts == 3)
-    val o = graft.etl.GraftConfig.load(Map(
-      "DB_HOST" -> "db.prod", "DB_PORT" -> "5433", "MAX_WORKERS" -> "64"))
+    assert(d.retryAttempts == 3)
+    val o = graft.etl.GraftConfig.load(Map("DB_HOST" -> "db.prod", "DB_PORT" -> "5433"))
     assert(o.jdbcUrl == "jdbc:postgresql://db.prod:5433/etl_db")
-    assert(o.maxWorkers == 64)
   }
 
   test("K4: Postgres dialect renders the reference's ON CONFLICT statement") {

@@ -2,7 +2,8 @@ package graft
 
 import java.nio.file.{Files, Path}
 
-import org.apache.spark.sql.{Observation, SparkSession}
+import org.apache.spark.scheduler.SparkListener
+import org.apache.spark.sql.{GraftListenerBridge, Observation, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -39,6 +40,17 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       r
     }
     Files.createTempDirectory(root, prefix)
+  }
+
+  /** Runs `body` with `listener` on the listener bus, flushing the bus
+    * before it is added and before it is removed, so it sees the events of
+    * exactly `body`'s jobs. */
+  protected def listenDuring[T](listener: SparkListener)(body: => T): T = {
+    val sc = spark.sparkContext
+    GraftListenerBridge.flush(sc)
+    sc.addSparkListener(listener)
+    try { val r = body; GraftListenerBridge.flush(sc); r }
+    finally sc.removeSparkListener(listener)
   }
 
   override def afterAll(): Unit =

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+
 /** The staged-slot laws (graft.Staged), checked once for the type — every
   * staged shared intermediate of the registry is an instance, so these
   * hold for all of them. */
@@ -87,6 +89,37 @@ class StagedSpec extends SparkSpec {
         assert(p >= 0.09 && p < 0.29, s"parent row includes the child: $p")
         val totals = Staged.buildStageTotals
         assert(totals.contains(parent.name) && totals.contains(child.name))
+      }
+    }
+  }
+
+  test("task metrics go to the key that launched the job: the parent " +
+    "build's row excludes the nested child's") {
+    MetricsTap.install(spark.sparkContext)
+    MetricsTap.take()
+    val log = collection.mutable.ArrayBuffer[String]()
+    withSlot("metrics_child", log) { child =>
+      withSlot("metrics_parent", log) { parent =>
+        val tasks = new java.util.concurrent.atomic.AtomicLong(0)
+        listenDuring(new SparkListener {
+          override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
+            tasks.incrementAndGet(); ()
+          }
+        }) {
+          Harness.pass(spark, Seq("q")) { _ =>
+            spark.range(0, 100, 1, 4).collect()
+            parent(spark, "d") {
+              spark.range(0, 100, 1, 3).collect()
+              child(spark, "d") { spark.range(0, 100, 1, 2).collect(); "c" }
+              "p"
+            }
+          }
+        }
+        val m = MetricsTap.take()
+        assert(m.view.mapValues(_.tasks).toMap == Map("q" -> 4L,
+          s"stage:${parent.name}" -> 3L, s"stage:${child.name}" -> 2L))
+        assert(m.values.map(_.tasks).sum == tasks.get())
+        assert(MetricsTap.held == ((0, 0)))
       }
     }
   }

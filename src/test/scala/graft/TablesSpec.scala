@@ -3,7 +3,6 @@ package graft
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.GraftListenerBridge
 import org.apache.spark.sql.functions.col
 
 /** The table resolver: [[Tables.load]] reads each schema from one parquet
@@ -16,17 +15,12 @@ class TablesSpec extends SparkSpec {
   /** Spark jobs started while `body` runs, counted after the listener bus
     * has delivered every event. */
   private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
     val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
+    listenDuring(new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
         jobs.incrementAndGet(); ()
       }
-    }
-    GraftListenerBridge.flush(sc)
-    sc.addSparkListener(listener)
-    try { body; GraftListenerBridge.flush(sc) }
-    finally sc.removeSparkListener(listener)
+    })(body)
     jobs.get()
   }
 

@@ -23,6 +23,10 @@ from the regression/improvement tables and excluded from the filtered
 total. The table header reports both the plain and the spread-filtered
 totals; identical-code A/B runs should read within ~2% on the filtered one.
 
+Task counts: records whose query_metrics carry a per-pass `tasks` count
+also get the list of rows whose counts differ. At fixed partitions a task
+count does not depend on the host, so a difference there is the plan's.
+
 --stress mode (the round-13 workflow promotion): renders the delta table as
 a markdown block — stage rows included, so a shared-build regression is
 attributed to its stage: row instead of smearing over its consumers — and
@@ -178,6 +182,24 @@ def pass_count_note(old, new):
     return None
 
 
+def task_deltas(old, new):
+    """(name, old_tasks, new_tasks) for every row whose per-pass task
+    counts in query_metrics differ between the records. At fixed partitions
+    a row's task count does not depend on the host, unlike its wall time,
+    so a difference here comes from the plan. None when either record
+    predates per-pass task counts."""
+    def tasks(rec):
+        qm = rec.get("query_metrics")
+        if not qm or any("tasks" not in s for ss in qm.values() for s in ss):
+            return None
+        return {k: [s["tasks"] for s in ss] for k, ss in qm.items()}
+    o, n = tasks(old), tasks(new)
+    if o is None or n is None:
+        return None
+    return [(k, o.get(k), n.get(k)) for k in sorted(set(o) | set(n))
+            if o.get(k) != n.get(k)]
+
+
 MARK_BEGIN = "<!-- bench-compare:begin -->"
 MARK_END = "<!-- bench-compare:end -->"
 
@@ -295,6 +317,15 @@ def main():
     print(f"\nmedian ratio (all shared rows): "
           f"{statistics.median(r for r, *_ in rows):.3f}"
           f"  (uniform shift = host-like; concentrated = code-like)")
+    td = task_deltas(old, new)
+    if td is None:
+        print("\nno task counts: a record predates per-pass tasks in "
+              "query_metrics")
+    else:
+        print(f"\nper-pass task counts (query_metrics): {len(td)} rows "
+              "differ")
+        for q, o, n in td:
+            print(f"  {q:32s} {o} -> {n}")
 
 
 if __name__ == "__main__":
