@@ -35,7 +35,7 @@ object PlanDump {
     "q144_curriculum" -> "global order via totalRank: range exchange + frozen-pid windows; no single-partition rank stage",
     "q151_bucketed_join" -> "bucketed scans (Bucketed: true, SelectedBucketsCount 8/8); at fixture scale AQE broadcasts the small side anyway — under forced SMJ the join subtree has ZERO exchanges (PlanSpec pins it), which is the layout payoff once both sides are fact-sized",
     "q152_pagerank" -> "five LAZILY-CHAINED rounds in one job (r17: loop-invariant edge-degree table checkpointed once, rounds pipeline as sequential shuffle stages — no per-round materialization); edge-keyed shuffles sized by the dup graph, TakeOrderedAndProject egress",
-    "q169_bm25_topk" -> "query-vocab filter INSIDE the array before the explode (tf table is docs-sized, never tokens-sized); df + corpus scalars broadcast; TakeOrderedAndProject egress",
+    "q169_bm25_topk" -> "serving reads the STAGED score table (TakeOrderedAndProject egress); its build scans the corpus ONCE: query-vocab filter INSIDE the array before the explode, per-doc term counts + a sentinel row over ONE doc_id exchange (tf table is docs-sized, never tokens-sized), T, D and every df from one global aggregate broadcast back, final doc_id grouping exchange-free",
     "q170_rendezvous_shard" -> "17-row shard table broadcast into the key cross join; partial_max_by below the exchange (map-side argmax)",
     "q173_basket_pairs" -> "ONE basket-keyed shuffle (map-side collect_set merge dedupes); a<b pairs explode inside the sorted array — the distinct+self-join twin shuffled lineitem twice",
     "q177_hybrid_rrf" -> "two independent TakeOrdered rankers (lexical + dense under a broadcast query vector); fusion full-outer-joins 20-row sides; corpus never shuffles",

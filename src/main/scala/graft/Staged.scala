@@ -93,10 +93,13 @@ object Staged {
 
   /** persist() and materialize now: the consumers run as concurrent AQE
     * stages, and a cold cache would be recomputed once per racing stage
-    * (at scale this is the explicit "stage the table" step). */
+    * (at scale this is the explicit "stage the table" step). A count that
+    * throws unpersists first: the slot stays empty, so nothing else would
+    * ever free the cache entry. */
   def persistNow(df: DataFrame): DataFrame = {
     val p = df.persist()
-    p.count()
+    try p.count()
+    catch { case t: Throwable => p.unpersist(); throw t }
     p
   }
 

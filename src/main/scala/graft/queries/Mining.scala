@@ -56,11 +56,10 @@ object Mining {
     * serves its top-10, q177/q196 rank its top-20 through [[lexTop20]]) —
     * in a real retrieval pipeline the per-doc score table is materialized
     * once per (corpus, query-set) and every serving/audit view reads it.
-    * r18 (guide §2.4 "remove shuffles outright"): before this slot each
-    * consumer re-ran the corpus tokenize + vocabulary explode + two aggs,
-    * so one bench pass paid the scoring scan three times. A staged slot
-    * (graft.Staged). Output is |docs with ≥1 query-term hit| narrow rows —
-    * bounded by |docs|, no text column persists. */
+    * A staged slot (graft.Staged), built by [[bm25ScoresFor]] from ONE
+    * corpus scan: one `doc_id` exchange of per-doc term counts, one
+    * global aggregate broadcast back. Output is |docs with ≥1 query-term
+    * hit| narrow rows — bounded by |docs|, no text column persists. */
   private val bm25Slot = graft.Staged.cached("bm25_scores_build")
 
   private def bm25ScoresCached(s: SparkSession, d: String): DataFrame =
@@ -69,25 +68,46 @@ object Mining {
   /** Vocabulary-parameterized form — the oracle queries pin the 3-term
     * vocabulary above; PlanSpec drives THIS with the fixture's 30 hottest
     * tokens to check that the tf table stays ≤ |docs × terms| (the
-    * filter-before-explode bound it also pins structurally). */
+    * filter-before-explode bound it also pins structurally).
+    *
+    * One pass over `documents`: each row emits one (term, n) per distinct
+    * query term it hits (the vocabulary filter runs INSIDE the array, so
+    * the explode is never tokens-sized) plus one NULL-term sentinel
+    * (null, 1). They shuffle once on `doc_id`, which also satisfies the
+    * (doc_id, dl, term) grouping, so the tf table is per-doc counts with
+    * one sentinel group per (doc_id, dl). One global aggregate over that
+    * table gives T = Σ dl·tf and D = Σ tf over the sentinels and each
+    * term's df; it is broadcast back, and the final `doc_id` grouping
+    * needs no exchange either. The aggregate reads the tf table
+    * unfiltered: a filter on `term` below it is pushed through the
+    * exchange and the corpus is scanned a second time. */
   private[graft] def bm25ScoresFor(s: SparkSession, d: String,
       qterms: Seq[String]): DataFrame = {
-    val docs = Tables.documents(s, d)
-      .select(col("doc_id"), tokens(col("text")).as("toks"))
-      .select(col("doc_id"), col("toks"),
-        size(col("toks")).cast("long").as("dl"))
     val qlit = array(qterms.map(lit): _*)
-    val tf = docs
+    val counted = transform(array_distinct(col("hits")), t =>
+      struct(t.as("term"), size(filter(col("hits"), _ === t)).as("n")))
+    val sentinel = struct(lit(null).cast("string").as("term"), lit(1).as("n"))
+    val tf = Tables.documents(s, d)
+      .select(col("doc_id"), tokens(col("text")).as("toks"))
+      .select(col("doc_id"), size(col("toks")).cast("long").as("dl"),
+        filter(col("toks"), t => array_contains(qlit, t)).as("hits"))
       .select(col("doc_id"), col("dl"),
-        explode(filter(col("toks"), t => array_contains(qlit, t)))
-          .as("term"))
-      .groupBy(col("doc_id"), col("dl"), col("term"))
-      .agg(count(lit(1)).as("tf"))
-    val df = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val scal = docs.agg(sum(col("dl")).as("t_tokens"),
-      count(lit(1)).as("d_docs"))
-    tf.join(broadcast(df), Seq("term"))
-      .crossJoin(broadcast(scal))
+        // a NULL text hits nothing but still counts toward D
+        explode(concat(array(sentinel), coalesce(counted, array())))
+          .as("h"))
+      .repartition(col("doc_id"))
+      .groupBy(col("doc_id"), col("dl"), col("h.term").as("term"))
+      .agg(sum(col("h.n")).as("tf"))
+    val isSentinel = col("term").isNull
+    val corpus = tf.agg(
+      sum(when(isSentinel, col("dl") * col("tf"))).as("t_tokens"),
+      sum(when(isSentinel, col("tf"))).as("d_docs"),
+      array(qterms.map(t => count_if(col("term") === t)): _*).as("dfs"))
+    // the lookup is gated: element_at at a NULL position is not NULL in
+    // every Spark version, and a sentinel must never score
+    tf.crossJoin(broadcast(corpus))
+      .withColumn("df", when(!isSentinel, element_at(col("dfs"),
+        array_position(qlit, col("term")).cast("int"))))
       .withColumn("s_milli", expr(
         """CAST((CAST(1000 AS DECIMAL(38,0)) * CAST(44 AS DECIMAL(38,0))
           |   * t_tokens * tf * (2 * (d_docs - df) + 1))
@@ -96,7 +116,8 @@ object Mining {
           | div (2 * df + 1) AS BIGINT)""".stripMargin))
       .groupBy(col("doc_id"))
       .agg(sum(col("s_milli")).as("score_milli"),
-        count(lit(1)).as("n_terms_hit"))
+        count(col("term")).as("n_terms_hit"))
+      .filter(col("n_terms_hit") > 0)
   }
 
   /** The BM25 oracle CTE chain (through `scored`), shared q169/q177. */
@@ -247,10 +268,13 @@ object Mining {
     //   44·T·tf·(2(D-df)+1) div ((20·T·tf + 6·T + 18·dl·D)·(2df+1))  [milli]
     // Intermediates ride DECIMAL(38,0)/HUGEINT so the products can't
     // overflow int64 at large corpus sizes.
-    // Scale shape: the corpus-side explode filters to the query vocabulary
-    // FIRST (array filter before explode — the shuffled tf table is
-    // |docs × query terms| max, not |tokens|); df and the T/D scalars are
-    // broadcast. One narrow scan, one tiny agg, TakeOrdered(10) egress.
+    // Scale shape: the serving query is a TakeOrdered(10) over the staged
+    // score table. Its build (bm25ScoresFor) scans the corpus once: the
+    // explode filters to the query vocabulary FIRST and counts per doc
+    // (array filter before explode — the one `doc_id` shuffle carries at
+    // most |docs × (query terms + 1)| rows, never |tokens|), and T, D and
+    // every df come from one global aggregate broadcast back. PlanSpec
+    // pins the single scan and the single cross-join broadcast.
     "q169_bm25_topk" -> Q(
       run = (s, d) => bm25ScoresCached(s, d)
         .orderBy(col("score_milli").desc, col("doc_id")).limit(10),

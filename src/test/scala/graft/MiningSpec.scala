@@ -71,6 +71,47 @@ class MiningSpec extends SparkSpec {
     assert(total == merged, s"total $total != merged $merged")
   }
 
+  test("q169: the BM25 build keeps the integer law on edge-case corpora") {
+    // NULL and empty text, a double space (an empty token), a repeated
+    // term, a doc with no hit, and doc_ids that appear twice: 6 with the
+    // same text, 7 and 8 with different text (8's two share a length).
+    // The law below is the one the oracle CTE states: tf per (doc_id, dl,
+    // term), df per term over those groups, T = Σ dl over non-NULL texts,
+    // D = every row.
+    import spark.implicits._
+    val rows = Seq[(Long, String)](
+      1L -> null, 2L -> "", 3L -> "join  hash",
+      4L -> "spark join spark spark", 5L -> "nothing to see here",
+      6L -> "hash join", 6L -> "hash join",
+      7L -> "spark x", 7L -> "join hash spark y", 8L -> "hash a b",
+      8L -> "join c d", 9L -> "a b c d e f")
+    val dir = tempDir("graft_bm25_edge").toString
+    rows.toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+    val qterms = Seq("join", "hash", "spark")
+
+    val toks = rows.map { case (id, t) => (id, Option(t).map(_.split(" ", -1).toSeq)) }
+    val tf = toks.collect { case (id, Some(ts)) =>
+      ts.filter(qterms.contains).map(t => (id, ts.size.toLong, t))
+    }.flatten.groupBy(identity).view.mapValues(_.size.toLong).toMap
+    val df = tf.keys.groupBy(_._3).view.mapValues(_.size.toLong).toMap
+    val t = BigInt(toks.flatMap(_._2).map(_.size.toLong).sum)
+    val n = BigInt(rows.size)
+    val expected = tf.toSeq.map { case ((id, dl, term), f) =>
+      val (tfb, dfb) = (BigInt(f), BigInt(df(term)))
+      val sMilli = 44000 * t * tfb * (2 * (n - dfb) + 1) /
+        (20 * t * tfb + 6 * t + 18 * dl * n) / (2 * dfb + 1)
+      id -> sMilli
+    }.groupBy(_._1).map { case (id, ss) =>
+      (id, ss.map(_._2).sum.toLong, ss.size.toLong)
+    }.toSet
+
+    val got = graft.queries.Mining.bm25ScoresFor(spark, dir, qterms)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    assert(expected.map(_._1) == Set(3L, 4L, 6L, 7L, 8L),
+      s"the law's own hit set changed: $expected")
+    assert(got == expected)
+  }
+
   test("q173: a mega-basket fails the loud contract, not an OOM") {
     // one 1025-item order must trip the assert_true guard in the plan —
     // the quadratic pair fanout (C(n,2) from a single row) is the failure

@@ -1,6 +1,9 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.functions._
 
 /** Physical-plan shape assertions — the properties that make these queries
@@ -15,6 +18,17 @@ class PlanSpec extends SparkSpec {
     val df = SparkEntry.registry(name).run(spark, sf)
     if (execute) df.collect() // collect() drives THIS QueryExecution, so AQE finalizes (and codegen annotates) it
     df.queryExecution.executedPlan.toString
+  }
+
+  /** Every node of an EXECUTED (AQE-final) plan. The walk descends through
+    * AQE wrappers and stages, a reused exchange is the leaf it is, and it
+    * STOPS at an InMemoryTableScan: the cached build plan it prints is not
+    * re-run by the plan that reads it. So a scan found is one the plan runs. */
+  private def executedNodes(n: SparkPlan): Seq[SparkPlan] = n match {
+    case a: AdaptiveSparkPlanExec => executedNodes(a.executedPlan)
+    case q: QueryStageExec => executedNodes(q.plan)
+    case m: InMemoryTableScanExec => Seq(m)
+    case other => other +: other.children.flatMap(executedNodes)
   }
 
   test("q02: filter and projection push into the parquet scan (S5)") {
@@ -574,24 +588,38 @@ class PlanSpec extends SparkSpec {
     assert(second == first, "reuse path changed the query result")
   }
 
-  test("q169: query-vocab filter precedes the explode; df/scalars broadcast") {
+  test("q169: one corpus scan; vocab filter before the explode; " +
+    "T, D and df broadcast") {
     // the corpus-side token explode must be fanout-bounded by the query
     // vocabulary (filter INSIDE the array, before explode) — exploding the
     // full token stream and filtering after would shuffle |tokens| rows.
-    // r18: the scored table is staged (q169/q177/q196 share one build), so
+    // The scored table is staged (q169/q177/q196 share one build), so
     // the scale-bearing shape lives in the BUILDER's plan — the registered
     // query serves a TakeOrdered over the staged table.
     spark.conf.set("spark.sql.maxMetadataStringLength", "10000")
     val df = graft.queries.Mining.bm25ScoresFor(
       spark, sf, Seq("join", "hash", "spark"))
     df.collect() // drive THIS QueryExecution so AQE finalizes it
-    val p = df.queryExecution.executedPlan.toString
+    val root = df.queryExecution.executedPlan
+    val p = root.toString
     assert("(?s)Generate explode.*filter\\(toks".r.findFirstIn(p).isDefined
       || p.contains("filter(toks"),
       s"expected the array filter under the explode:\n$p")
-    assert(p.contains("BroadcastHashJoin") &&
-      p.contains("BroadcastNestedLoopJoin"),
-      s"df equi-join and T/D scalars must ride broadcasts:\n$p")
+    // structural walk of the AQE-final tree: the one `doc_id` exchange is
+    // reused by the global aggregate, so the corpus is read once
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastNestedLoopJoinExec}
+    val all = executedNodes(root)
+    val scans = all.collect { case f: FileSourceScanExec => f }
+    assert(scans.size == 1 && scans.head.relation.location.rootPaths
+      .forall(_.getName == "documents.parquet"),
+      s"the build must scan documents exactly once (${scans.size} scans):\n$p")
+    val joins = all.collect { case j: BaseJoinExec => j }
+    assert(joins.size == 1 && (joins.head match {
+      case j: BroadcastNestedLoopJoinExec =>
+        Set("t_tokens", "d_docs", "dfs")
+          .subsetOf(j.right.output.map(_.name).toSet)
+      case _ => false
+    }), s"T, D and the df array must ride one broadcast cross join:\n$p")
     // the same bound measured: over the fixture's 30 hottest tokens (the
     // worst case, every term hits nearly every doc) the tf table
     // (= sum of n_terms_hit) holds one row per (doc, query term) hit, so
@@ -600,15 +628,31 @@ class PlanSpec extends SparkSpec {
     val vocab30 = docs.select(explode(split(col("text"), " ")).as("tk"))
       .groupBy(col("tk")).count().orderBy(col("count").desc, col("tk"))
       .limit(30).collect().map(_.getString(0)).toSeq
+    val nDocs = docs.count()
     val tfRows = graft.queries.Mining.bm25ScoresFor(spark, sf, vocab30)
       .agg(sum(col("n_terms_hit"))).head().getLong(0)
-    val bound = docs.count() * vocab30.size
+    val bound = nDocs * vocab30.size
     assert(tfRows <= bound,
       s"tf table has $tfRows rows, past the |docs x terms| bound $bound")
     val hits = docs.select(explode(array_distinct(split(col("text"), " ")))
       .as("tk")).filter(col("tk").isin(vocab30: _*)).count()
     assert(tfRows == hits,
       s"tf table has $tfRows rows, not one per (doc, query term) hit ($hits)")
+    // and what the build's shuffles write: per-doc counts plus one
+    // sentinel per doc, never one row per hit token
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+    val written = new java.util.concurrent.atomic.AtomicLong(0)
+    listenDuring(new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m =>
+          written.addAndGet(m.shuffleWriteMetrics.recordsWritten))
+    }) {
+      graft.queries.Mining.bm25ScoresFor(spark, sf, vocab30).collect()
+    }
+    val shuffleBound = nDocs * (vocab30.size + 1)
+    assert(written.get > 0 && written.get <= shuffleBound,
+      s"the build's shuffles wrote ${written.get} rows, past the " +
+        s"|docs x (terms + 1)| bound $shuffleBound")
   }
 
   test("q134/q196: audit consumers read the STAGED kernel tables, never " +
@@ -621,23 +665,12 @@ class PlanSpec extends SparkSpec {
     // structural walk of the EXECUTED tree (textual asserts are wrong here:
     // an InMemoryRelation prints its cached build plan, parquet scan
     // included, so plan-string negatives would always fail). The walk
-    // descends through AQE wrappers/stages but STOPS at an
-    // InMemoryTableScan — a file scan found is one the consumer itself
-    // re-runs, not the staged build's.
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    // stops at an InMemoryTableScan — a file scan found is one the
+    // consumer itself re-runs, not the staged build's.
     def scanCounts(root: SparkPlan): (Int, Int) = {
-      var file = 0; var mem = 0
-      def walk(n: SparkPlan): Unit = n match {
-        case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-        case q: QueryStageExec => walk(q.plan)
-        case _: InMemoryTableScanExec => mem += 1 // don't descend: build plan
-        case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-          file += 1
-        case other => other.children.foreach(walk)
-      }
-      walk(root); (file, mem)
+      val all = executedNodes(root)
+      (all.count(_.isInstanceOf[FileSourceScanExec]),
+        all.count(_.isInstanceOf[InMemoryTableScanExec]))
     }
     // the recall harness joins the two staged top-k tables: its plan must
     // consume the in-memory slots and re-run NO file scan of the corpus

@@ -124,6 +124,26 @@ class StagedSpec extends SparkSpec {
     }
   }
 
+  test("a throwing persistNow leaves the slot empty and no persisted RDD behind") {
+    import org.apache.spark.sql.functions.{col, lit, raise_error, when}
+    val st = Staged.cached("staged_spec_persist_throw")
+    try {
+      val sc = spark.sparkContext
+      val before = sc.getPersistentRDDs.keySet
+      val bad = spark.range(0, 10, 1, 2).select(when(col("id") === 7,
+        raise_error(lit("persist_boom"))).otherwise(col("id")).as("id"))
+      val ex = intercept[Exception](st(spark, "d")(Staged.persistNow(bad)))
+      def msgs(t: Throwable): Seq[String] =
+        if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
+      assert(msgs(ex).exists(_.contains("persist_boom")), msgs(ex))
+      assert(st.peek(spark, "d").isEmpty)
+      assert(sc.getPersistentRDDs.keySet == before,
+        "the failed build left a persisted RDD that nothing will free")
+      assert(bad.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
+        "the failed build left its cache entry registered")
+    } finally st.close()
+  }
+
   test("a duplicate slot name is rejected") {
     val log = collection.mutable.ArrayBuffer[String]()
     withSlot("dup", log) { st =>
