@@ -3,6 +3,7 @@ package graft
 import java.io.FileNotFoundException
 
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -59,7 +60,10 @@ object Tables {
       }.sortBy(_.getPath.toString).headOption
     }
     dataFile.map { f =>
-      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+      // read options from the conf in hand: the one-argument open builds a
+      // fresh Hadoop Configuration, re-parsing core-default.xml every load
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf),
+        HadoopReadOptions.builder(conf).build())
       val meta = try reader.getFooter finally reader.close()
       ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, meta),
         new ParquetToSparkSchemaConverter(spark.sessionState.conf))

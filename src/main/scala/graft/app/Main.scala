@@ -59,9 +59,9 @@ object Main {
       val leads = LeadPipeline.dedup(
         LeadPipeline.clean(extract(pages)), "url")
       // counted inside the CSV write job: the observation sits above the
-      // global sort, so the range partitioner's sampling job (below the
-      // sort) never evaluates it and the write's result stage counts each
-      // partition once — the sink is not read back
+      // range exchange and its per-partition sort, so the range
+      // partitioner's sampling job never evaluates it and the write's
+      // result stage counts each partition once — the sink is not read back
       val n = LeadPipeline.loadCsv(leads, out)
       RunResult(if (n > 0) "success" else "warning",
         if (n > 0) s"ETL completado: $n registros" else "sin registros", n)
@@ -256,11 +256,14 @@ object Main {
     * (`yyyy-MM-dd HH:mm:ss`) only fires on TimestampType — the staged and
     * single-run pipelines would emit format-divergent CSVs for identical
     * data (review r14). */
-  private def canonicalize(raw: DataFrame): DataFrame =
-    LeadPipeline.leadSchema.fields.foldLeft(raw) { (df, f) =>
-      if (raw.columns.contains(f.name)) df.withColumn(f.name, col(f.name).cast(f.dataType))
-      else df.withColumn(f.name, lit(null).cast(f.dataType))
-    }
+  private def canonicalize(raw: DataFrame): DataFrame = {
+    val fields = LeadPipeline.leadSchema.fields.toIndexedSeq
+    val types = fields.map(f => f.name -> f.dataType).toMap
+    raw.select(raw.columns.toIndexedSeq.map(c =>
+        types.get(c).fold(col(c))(t => col(c).cast(t).as(c))) ++
+      fields.filterNot(f => raw.columns.contains(f.name))
+        .map(f => lit(null).cast(f.dataType).as(f.name)): _*)
+  }
 
   def stageTransform(spark: SparkSession, rawDir: String, transformedDir: String): RunResult =
     audited(spark, transformedDir) {

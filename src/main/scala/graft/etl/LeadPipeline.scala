@@ -12,8 +12,12 @@ import graft.functions.{CleanFunctions => CF, HtmlFunctions => HF, ReferenceHtml
   *
   * Scale design: the whole pipeline is one narrow lazy plan (no shuffle until
   * dedup), so Catalyst fuses collect+extract+clean into a single codegen
-  * stage; dedup shuffles on the 8-byte id only; sinks are per-partition
-  * writers.
+  * stage, and each stage adds one projection to it. Dedup hash-shuffles
+  * whole rows on the id, and the CSV sink range-shuffles them, both at the
+  * stated width `spark.sql.shuffle.partitions` ([[shuffleWidth]]): AQE
+  * never coalesces an exchange whose partition count was stated, so the
+  * tail after the first shuffle runs on every core instead of in one task.
+  * Sinks are per-partition writers.
   */
 object LeadPipeline {
 
@@ -90,27 +94,39 @@ object LeadPipeline {
       f("latitud"), f("longitud")))
   }
 
-  /** F10: the `addr` struct split into `direccion` and `localidad`. */
+  /** F10: the `addr` struct split into `direccion` and `localidad`, which
+    * take its place at the end of the row. */
   private def withAddress(df: DataFrame): DataFrame =
-    df.withColumn("direccion", col("addr.direccion"))
-      .withColumn("localidad", col("addr.localidad"))
-      .drop("addr")
+    df.select(df.columns.toIndexedSeq.filter(_ != "addr").map(col) ++ Seq(
+      col("addr.direccion").as("direccion"),
+      col("addr.localidad").as("localidad")): _*)
 
-  /** Clean stage: F1-F10 over the extracted fields (BusinessTransformer). */
+  /** Clean stage: F1-F10 over the extracted fields (BusinessTransformer),
+    * as one projection: a `withColumn` chain re-analyzes the whole growing
+    * plan at every step. */
   def clean(leads: DataFrame): DataFrame =
-    leads
-      .withColumn("nombre", CF.cleanText(CF.naToNull(col("nombre"))))
-      .withColumn("telefonos", CF.cleanPhoneArray(col("telefonos")))
-      .withColumn("email", CF.validEmail(CF.naToNull(col("email"))))
-      .withColumn("sitio_web", CF.normalizeUrl(CF.naToNull(col("sitio_web"))))
-      .withColumn("facebook", CF.cleanSocial(col("facebook")))
-      .withColumn("instagram", CF.cleanSocial(col("instagram")))
-      .withColumn("horarios", CF.cleanHorarios(CF.naToNull(col("horarios"))))
+    leads.withColumns(Map(
+      "nombre" -> CF.cleanText(CF.naToNull(col("nombre"))),
+      "telefonos" -> CF.cleanPhoneArray(col("telefonos")),
+      "email" -> CF.validEmail(CF.naToNull(col("email"))),
+      "sitio_web" -> CF.normalizeUrl(CF.naToNull(col("sitio_web"))),
+      "facebook" -> CF.cleanSocial(col("facebook")),
+      "instagram" -> CF.cleanSocial(col("instagram")),
+      "horarios" -> CF.cleanHorarios(CF.naToNull(col("horarios")))))
 
-  /** A2 Dedup: first-wins per id over an explicit arrival order (§7.4.2). */
+  /** The partition count the ETL tail states on its exchanges: the session's
+    * `spark.sql.shuffle.partitions`. A stated count is one AQE keeps, where
+    * it would coalesce a small shuffle of its own choosing into one task. */
+  private def shuffleWidth(df: DataFrame): Int =
+    df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+
+  /** A2 Dedup: first-wins per id over an explicit arrival order (§7.4.2).
+    * The rows are hash-partitioned on the id at [[shuffleWidth]] first; that
+    * satisfies the window's clustering, so it adds no second exchange. */
   def dedup(leads: DataFrame, orderCol: String = "fecha_extraccion"): DataFrame =
     graft.operators.Operators.dedupFirstWins(
-      leads, Seq("id_negocio"), Seq(col(orderCol), col("url")))
+      leads.repartition(shuffleWidth(leads), col("id_negocio")),
+      Seq("id_negocio"), Seq(col(orderCol), col("url")))
 
   /** Typed view of a cleaned lead DataFrame: compile-time field access for
     * per-entity logic (`Dataset[Lead]`, SURVEY §1.1). Columns are aligned to
@@ -123,11 +139,12 @@ object LeadPipeline {
 
   /** Runs `write` over `df` and returns the number of rows it wrote,
     * counted by an [[Observation]] inside the write job, so the sink is
-    * never read back. Any global sort must sit inside `df`, below the
-    * observation: the range partitioner's sampling job then never
-    * evaluates the count, and the write's result stage counts each
-    * partition once. Once an Observation has run, the session no longer
-    * serializes, so no task closure may capture it. */
+    * never read back. Any ordering must sit inside `df`, below the
+    * observation: a range exchange followed by a per-partition sort, as in
+    * [[loadCsv]]. The range partitioner's sampling job then never evaluates
+    * the count, and the write's result stage counts each partition once.
+    * Once an Observation has run, the session no longer serializes, so no
+    * task closure may capture it. */
   private[graft] def countedWrite(df: DataFrame)(write: DataFrame => Unit): Long = {
     val rows = Observation()
     write(df.observe(rows, count(lit(1)).as("rows")))
@@ -135,26 +152,27 @@ object LeadPipeline {
   }
 
   /** K1 CSV sink: header + egress sentinel restore + deterministic order.
-    * Returns the number of rows written, counted in the write job
-    * ([[countedWrite]]). */
+    * The rows are range-partitioned on the id at [[shuffleWidth]] and sorted
+    * within each partition, so the sink holds up to that many part files,
+    * and read in name order they are ascending by id. Returns the number of
+    * rows written, counted in the write job ([[countedWrite]]). */
   def loadCsv(leads: DataFrame, path: String): Long = {
-    val ordered = leads.orderBy(col("id_negocio"))
-    val stringified = ordered.schema.fields.foldLeft(ordered) { (df, f) =>
-      f.dataType match {
-        case ArrayType(_, _) =>
-          df.withColumn(f.name,
-            when(col(f.name).isNull || size(col(f.name)) === 0, lit(CF.NA))
-              .otherwise(array_join(col(f.name), ", ")))
-        case StringType => df.withColumn(f.name, CF.nullToNa(col(f.name)))
-        case TimestampType => // reference egress format (F12, bulk_scraper.py:89)
-          df.withColumn(f.name,
-            CF.nullToNa(date_format(col(f.name), "yyyy-MM-dd HH:mm:ss")))
-        case _ => // numeric columns: stringify so 'N/A' restores for missing
-          df.withColumn(f.name, CF.nullToNa(col(f.name).cast(StringType)))
-      }
-    }
     // order on the ORIGINAL (numeric) id before stringification — ordering
     // the stringified column would sort ids lexicographically (2 > 10)
+    val ordered = leads.repartitionByRange(shuffleWidth(leads), col("id_negocio"))
+      .sortWithinPartitions(col("id_negocio"))
+    val stringified = ordered.select(ordered.schema.fields.toIndexedSeq.map { f =>
+      val c = col(f.name)
+      (f.dataType match {
+        case ArrayType(_, _) =>
+          when(c.isNull || size(c) === 0, lit(CF.NA)).otherwise(array_join(c, ", "))
+        case StringType => CF.nullToNa(c)
+        case TimestampType => // reference egress format (F12, bulk_scraper.py:89)
+          CF.nullToNa(date_format(c, "yyyy-MM-dd HH:mm:ss"))
+        case _ => // numeric columns: stringify so 'N/A' restores for missing
+          CF.nullToNa(c.cast(StringType))
+      }).as(f.name)
+    }: _*)
     countedWrite(stringified)(
       _.write.mode(SaveMode.Overwrite).option("header", "true").csv(path))
   }

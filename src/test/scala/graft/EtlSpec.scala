@@ -2,7 +2,9 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.functions._
 import graft.etl.LeadPipeline
 
@@ -539,6 +541,45 @@ class EtlSpec extends SparkSpec {
     def occurrences(s: String): Int = plan.split(java.util.regex.Pattern.quote(s), -1).length - 1
     assert(occurrences("class=\"address\"") == 1, plan)
     assert(occurrences("wa\\.me") == 1, plan)
+  }
+
+  test("clean adds exactly one projection above its input's analyzed plan") {
+    val x = LeadPipeline.extract(shapePages)
+    LeadPipeline.clean(x).queryExecution.analyzed match {
+      case Project(_, child) => assert(child == x.queryExecution.analyzed)
+      case other => fail(s"clean's analyzed plan is not one Project over its input:\n$other")
+    }
+  }
+
+  test("bulk runs its dedup, sort and CSV write at the shuffle width, and the " +
+      "part files read in name order are ascending by id") {
+    val width = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val out = tmp("graft_bulk_width")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val stageTasks = new java.util.concurrent.ConcurrentSkipListMap[Int, Int]()
+    val r = listenDuring(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        stageTasks.put(e.stageInfo.stageId, e.stageInfo.numTasks)
+    })(graft.app.Main.runBulk(spark, 1, 2000, out))
+    assert(r.status == "success" && r.recordsProcessed == 2000)
+    // fetch → dedup exchange map, range sample, range exchange map, CSV
+    // write, and the one-row audit append
+    assert(jobs.get == 5)
+    val tasks = stageTasks.values.toArray.toSeq
+    assert(tasks.size == 5 && tasks.last == 1, tasks)
+    // every stage after the fetch and before the audit runs at full width:
+    // AQE left none of them folded into one task
+    assert(tasks.slice(1, tasks.size - 1).forall(_ == width), tasks)
+
+    val parts = new java.io.File(out).listFiles()
+      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".csv"))
+      .sortBy(_.getName)
+    assert(parts.length > 1, parts.map(_.getName).mkString(","))
+    val ids = parts.toSeq.flatMap(f => spark.read.option("header", "true")
+      .csv(f.getAbsolutePath).select("id_negocio").as[String].collect().map(_.toLong))
+    assert(ids.size == 2000)
+    assert(ids.sliding(2).forall { case Seq(a, b) => a < b })
   }
 
   /** Bytes that tasks read while `body` runs, summed after the listener
